@@ -80,10 +80,14 @@ object Tables {
     * PERMISSIVE mode + corrupt-record filter reproduces the bare-`except`
     * skip; schema pruning pushes the 2-column projection into the parser.
     *
+    * The filter is a typed one on the whole parsed row, so the scan always
+    * reads a real column beside `_corrupt`: a Catalyst `_corrupt IS NULL`
+    * predicate lets column pruning leave `_corrupt` as the only column read
+    * under a bare `count()`, which Spark refuses
+    * (`UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN`).
+    *
     * With `counters`, each dropped line bumps the advisory
-    * [[PipelineCounters.malformedLines]] accumulator (a typed filter —
-    * only this observability variant leaves codegen; the default path
-    * stays a pure Catalyst predicate).
+    * [[PipelineCounters.malformedLines]] accumulator.
     */
   def reviews(spark: SparkSession, path: String,
       counters: Option[PipelineCounters] = None): DataFrame = {
@@ -97,18 +101,14 @@ object Tables {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt")
       .json(path)
-    val kept = counters match {
-      case Some(c) =>
-        val idx = schema.fieldIndex("_corrupt")
-        // capture ONLY the accumulator (serializable) in the task closure,
-        // not the counters wrapper
-        val malformed = c.malformedLines
-        parsed.filter { r: org.apache.spark.sql.Row =>
-          val ok = r.isNullAt(idx)
-          if (!ok) malformed.add(1L)
-          ok
-        }
-      case None => parsed.where(col("_corrupt").isNull)
+    val idx = schema.fieldIndex("_corrupt")
+    // capture ONLY the accumulator (serializable) in the task closure,
+    // not the counters wrapper
+    val malformed = counters.map(_.malformedLines)
+    val kept = parsed.filter { r: org.apache.spark.sql.Row =>
+      val ok = r.isNullAt(idx)
+      if (!ok) malformed.foreach(_.add(1L))
+      ok
     }
     kept.select(
       coalesce(col("category"), lit("Unknown")).as("category"),

@@ -11,9 +11,12 @@ import graft.chisq.ChiSquare
 
 /** End-to-end CLI — the engine's replacement for the reference's
   * `src/main.sh` orchestration (reference `src/main.sh:89-191`): one Spark
-  * driver program, one lazy DAG, no intermediate text materialization
-  * between "jobs" (job-1's output parquet is a product artifact that the
-  * χ² stage then reuses instead of recomputing the tokenization).
+  * driver program, no intermediate text materialization between "jobs"
+  * (job-1's output parquet is a product artifact that the χ² stage then
+  * reuses instead of recomputing the tokenization). Four actions: the
+  * category counts, the wordcount write, ONE collect of the top-k, and the
+  * chisq/ write of those collected rows (a local relation — no scan, no
+  * shuffle); chisq.txt is formatted from the same rows.
   *
   * Usage: graft.Main <reviews.json> <stopwords.txt> <outDir> [k=75]
   *
@@ -22,7 +25,9 @@ import graft.chisq.ChiSquare
   *                       `src/wordCountWrapper.py:49-50` format)
   *   wordcount/          parquet (word, category, df_count) — canonical
   *                       form of the reference's job-1 part files
-  *   chisq/              parquet (category, word, chi2) top-k rows
+  *   chisq/              parquet (word, category, chi2): the top-k rows
+  *                       of chisq.txt, one file in (category, chi2 desc,
+  *                       word) order
   *   chisq.txt           RawProtocol parity lines `Cat\t{'w': χ², ...}` +
   *                       final sorted-vocabulary line (reference
   *                       `src/chiSquaredJob.py:110-127`)
@@ -59,8 +64,7 @@ object Main {
     try {
       // counters: exact actions on the cached parse (NOT accumulators —
       // those double-count on task retry)
-      val catTotals = WordCount.categoryTotals(pruned, col("category"))
-      val catMap = catTotals.collect()
+      val catMap = WordCount.categoryTotals(pruned, col("category")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val total = catMap.values.sum
       RefFormats.writeCounters(s"$outDir/counters.txt", total, catMap)
@@ -71,22 +75,25 @@ object Main {
 
       // exact (big-int + correctly-rounded division) scoring: this CLI is
       // the reference replacement, so its chisq artifacts reproduce the
-      // reference's Python floats bit-for-bit (ChiSquare.scoreExact)
-      val scored = ChiSquare.scoreExact(
-        spark.read.parquet(s"$outDir/wordcount"), catTotals, total)
-      val topk = ChiSquare.topKPerCategory(scored, k)
-        .orderBy(col("category"), col("chi2").desc, col("word"))
-      topk.write.mode("overwrite").parquet(s"$outDir/chisq")
+      // reference's Python floats bit-for-bit (ChiSquare.scoreExact). The
+      // category totals are the collected counters, broadcast as a local
+      // relation — no second aggregation of the cached reviews.
+      import spark.implicits._
+      val catTotals = catMap.toSeq.toDF("category", "n_docs")
+      val topk = ChiSquare.topKPerCategory(ChiSquare.scoreExact(
+        spark.read.parquet(s"$outDir/wordcount"), catTotals, total), k)
+      // top-k is tiny (≤ categories × k rows): ONE action collects it and
+      // the driver orders it (category, χ² desc, word) for both artifacts
+      val rows = topk.as[(String, String, Double)].collect()
+        .sortBy { case (word, cat, chi2) => (cat, -chi2, word) }
+      rows.toSeq.toDF("word", "category", "chi2").coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/chisq")
 
-      // parity text (tiny: ≤ categories × k rows — driver-side format)
-      val rows = spark.read.parquet(s"$outDir/chisq").collect()
-        .map(r => (r.getString(r.fieldIndex("category")),
-          r.getString(r.fieldIndex("word")),
-          r.getDouble(r.fieldIndex("chi2"))))
-      val byCat = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, rs) =>
-        (c, rs.sortBy(r => (-r._3, r._2)).map(r => r._2 -> r._3).toSeq)
+      // parity text: groupBy keeps the (χ² desc, word) order per category
+      val byCat = rows.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map {
+        case (cat, rs) => cat -> rs.map { case (word, _, chi2) => word -> chi2 }
       }
-      val vocab = rows.map(_._2).distinct.sorted.toSeq
+      val vocab = rows.map(_._1).distinct.sorted.toSeq
       val lines = RefFormats.formatChiSq(byCat) :+ RefFormats.formatVocabulary(vocab)
       Files.createDirectories(Paths.get(outDir))
       Files.writeString(Paths.get(s"$outDir/chisq.txt"),

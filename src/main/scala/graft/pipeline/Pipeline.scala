@@ -83,8 +83,8 @@ object TextPipelineQueries {
   private def sqlList =
     stopwords.map(w => s"'${w.replace("'", "''")}'").mkString("(", ", ", ")")
 
-  /** The tokenizer char class as a DuckDB/RE2 literal: same as
-    * TextOps.strippedClass with the `'` doubled for SQL quoting.
+  /** The tokenizer char class as a DuckDB/RE2 literal: the characters of
+    * ReviewTokens.Stripped, with the `'` doubled for SQL quoting.
     */
   private val duckClass = """[()\[\]{}.!?,;:+=\-_"~#@&*%€$§/\\0-9\t'']"""
 

@@ -1606,8 +1606,8 @@ object Relational {
     // global-by-default with no flags argument while DuckDB's needs an
     // explicit 'g', so no single regexp spelling exists; the mask is
     // now a nested replace() chain (identical semantics, and the
-    // regexp surface stays covered by the reference-parity char-class
-    // strip in graft.text.TextOps and the PII scrubber).
+    // regexp surface stays covered by the PII scrubber and by the
+    // regex reference of the tokenizer in TextOpsSpec).
     Tables.load(spark, dir, "part").createOrReplaceTempView("part")
     spark.sql(stringFunctionsSql)
   }

@@ -1,43 +1,24 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import graft.functions.ReviewTokens
 
-/** Pure Column→Column text primitives reproducing the reference tokenizer
-  * (reference `src/wordCountJob.py:51-52,64,75-77`). Everything here is a
-  * built-in Catalyst expression — codegen'd, no UDFs — so the whole clean →
-  * tokenize → dedup path stays inside one WholeStageCodegen span.
+/** Column→Column text primitives reproducing the reference tokenizer
+  * (reference `src/wordCountJob.py:51-52,64,75-77`). Case folding is the
+  * built-in `lower`; clean → split → per-review dedup is the one-pass
+  * codegen'd [[graft.functions.ReviewTokens]] kernel, whose scaladoc gives
+  * the stripped character class. No UDFs: both stay inside whole-stage
+  * codegen.
   */
 object TextOps {
 
-  /** The exact character class the reference maps to a single space:
-    * `()[]{}.!?,;:+=-_"~#@&*%€$§/\` + digits + TAB + `'`
-    * (reference `src/wordCountJob.py:51-52`). Note `<`, `>`, `|`, `^` are
-    * deliberately NOT stripped — tokens like `">"` survive, matching the
-    * committed fixture `src/output/amazon_reviews_chiotp/wordcount/part-00000:1`.
-    *
-    * Spark's `translate` would DELETE these chars (shorter replacement
-    * string), merging `don't` into `dont`; the reference yields `don t`.
-    * Hence a regexp class with a space replacement.
+  /** Full reference mapper path: lower-case, then the distinct tokens of
+    * the cleaned text in first-occurrence order — the reference's
+    * `set(tokens)` (reference `src/wordCountJob.py:75`). Load-bearing:
+    * downstream counts are DOCUMENT frequencies, the contingency-table
+    * inputs of the χ² stage.
     */
-  val strippedClass: String = """[()\[\]{}.!?,;:+=\-_"~#@&*%€$§/\\0-9\t']"""
-
-  /** Lower-case then map every stripped char to a space. */
-  def cleanChars(c: Column): Column =
-    regexp_replace(lower(c), strippedClass, " ")
-
-  /** Whitespace tokenization with no empty tokens (Python `str.split()`
-    * semantics — Spark's `split` can emit a leading "" which we filter).
-    */
-  def tokenize(c: Column): Column =
-    filter(split(c, "\\s+"), w => length(w) > lit(0))
-
-  /** Tokens deduplicated per document — the reference's `set(tokens)`
-    * (reference `src/wordCountJob.py:75`). Load-bearing: downstream counts
-    * are DOCUMENT frequencies, the contingency-table inputs of the χ² stage.
-    */
-  def distinctTokens(c: Column): Column = array_distinct(tokenize(c))
-
-  /** Full reference mapper path: clean → tokenize → per-doc dedup. */
-  def reviewTokens(c: Column): Column = distinctTokens(cleanChars(c))
+  def reviewTokens(c: Column): Column =
+    GraftSqlBridge.column(ReviewTokens(GraftSqlBridge.expression(lower(c))))
 }

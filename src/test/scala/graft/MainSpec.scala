@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.model.{Observe, RefFormats}
+import scala.jdk.CollectionConverters._
+import graft.functions.ReviewTokens
+import graft.model.{Observe, RefFormats, Tables}
 import graft.pipeline.Main
+import graft.wordcount.WordCount
 
 /** End-to-end drive of the CLI pipeline on a synthetic review file
   * covering the FIXTURES.md §A1 semantics: malformed line dropped,
@@ -10,7 +13,9 @@ import graft.pipeline.Main
   */
 class MainSpec extends SparkSpec {
 
-  test("Main.run produces counters, wordcount, chisq, and parity text") {
+  /** Seven lines: six parse (one lacks a category, one its text), one is
+    * malformed. Returns the temp dir holding reviews.json + stopwords.txt. */
+  private def fixtureDir(): String = {
     val dir = Files.createTempDirectory("graft_main").toString
     val reviews = Seq(
       """{"category": "Book", "reviewText": "great plot, great pacing!"}""",
@@ -23,6 +28,11 @@ class MainSpec extends SparkSpec {
     ).mkString("\n")
     Files.writeString(Paths.get(s"$dir/reviews.json"), reviews)
     Files.writeString(Paths.get(s"$dir/stopwords.txt"), "was\nis\n&\n")
+    dir
+  }
+
+  test("Main.run produces counters, wordcount, chisq, and parity text") {
+    val dir = fixtureDir()
 
     val anomalies =
       Main.run(spark, s"$dir/reviews.json", s"$dir/stopwords.txt", s"$dir/out", k = 2)
@@ -57,6 +67,40 @@ class MainSpec extends SparkSpec {
     assert(parity.size == topk.select("category").distinct().count() + 1)
     assert(parity.get(parity.size - 1).startsWith("['"))
     assert(parity.get(0).matches("""\S+\t\{'.*"""))
+
+    // chisq/ keeps its (word, category, chi2) schema and holds exactly the
+    // rows chisq.txt lists, in the text's (category, chi2 desc, word) order
+    assert(topk.columns.toSeq == Seq("word", "category", "chi2"))
+    val pair = """'([^']*)': ([^,}]+)""".r
+    val listed = parity.asScala.init.toSeq.flatMap { line =>
+      val Array(cat, dict) = line.split("\t", 2)
+      pair.findAllMatchIn(dict).map(m => (m.group(1), cat, m.group(2).toDouble))
+    }
+    assert(listed.nonEmpty)
+    assert(topk.as[(String, String, Double)].collect().toSeq == listed)
+  }
+
+  test("Tables.reviews without counters: bare count() is the parsed-line count") {
+    // a count() prunes every output column; the scan must still read a
+    // real column next to _corrupt or Spark refuses the query
+    val dir = fixtureDir()
+    assert(Tables.reviews(spark, s"$dir/reviews.json").count() == 6L)
+  }
+
+  test("plan audit: documentFrequency tokenizes with one kernel, no regex chain") {
+    import org.apache.spark.sql.functions.col
+    val dir = fixtureDir()
+    val reviews = Tables.reviews(spark, s"$dir/reviews.json")
+    val plan = WordCount.documentFrequency(reviews, col("reviewText"),
+      col("category"), Set("was")).queryExecution.optimizedPlan
+    val names = plan.flatMap(_.expressions.flatMap(_.collect {
+      case e => e.getClass.getSimpleName
+    }))
+    assert(plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: ReviewTokens => e.prettyName
+    })) == Seq("graft_review_tokens"))
+    for (old <- Seq("RegExpReplace", "ArrayFilter", "ArrayDistinct"))
+      assert(!names.contains(old), s"$old still in the plan:\n$plan")
   }
 
   test("missing stopword file: pipeline continues, anomaly counter fires") {

@@ -7,7 +7,7 @@ name and rows by value.
 
 Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [query...]
 """
-import json, math, subprocess, sys
+import json, math, os, subprocess, sys
 
 import duckdb
 
@@ -16,13 +16,16 @@ OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 flags = set(a for a in sys.argv[3:] if a.startswith("--"))
 only = [a for a in sys.argv[3:] if not a.startswith("--")]
 
+# the checkout holding this script (tools/..), so a copy checks its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 if "--skip-verify" not in flags:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=REPO, capture_output=True, text=True)
     for line in r.stderr.splitlines():
         if "[verify]" in line:
             print(line)
