@@ -40,7 +40,7 @@ object Verify {
 
   /** Pre-flight SWEEP + per-run shuffle-dir selection, shared by every
     * main that moves multi-GB shuffle ([[graft.Bench]],
-    * `graft.tools.ShardedRecall`/`StreamProbe`/`SemShardProbe`): sweeps
+    * `graft.tools.ShardedRecall`; SURVEY §9.56): sweeps
     * stale `graft-shuffle*` dirs from dead runs out of /dev/shm and
     * /tmp, then picks this run's dir — SPARK_GRAFT_LOCAL_DIR when set,
     * else tmpfs when it can hold `needBytes` (the sandbox disk
@@ -147,10 +147,8 @@ object Verify {
       // 32-way tails; guide §2.2/§2.5 — stragglers from under-
       // parallelized reduce stages). Scale-neutral: production shuffle
       // partitions are 100 MB+, where the floor never binds and
-      // parallelismFirst/advisory sizing govern exactly as before; env
-      // override for cluster profiles that want the stock floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"))
+      // parallelismFirst/advisory sizing govern exactly as before.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

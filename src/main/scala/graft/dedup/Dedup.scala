@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.functions.{Hashing, Registry}
-import graft.functions.Hashing.{P, duckH48, duckH48p, duckPerm}
+import graft.functions.Hashing.{P, duckH48, duckPerm}
 
 /** Training-data deduplication suite over the `documents` table — the
   * capability delta the build target mandates beyond the reference pipeline
@@ -581,34 +581,29 @@ object Dedup {
   /** Budget (in ids) above which [[keyedPairIntersections]] withholds the
     * broadcast hint on the involved-id semi-cut and lets the join shuffle:
     * 20M longs ≈ 500 MB as a built LongHashedRelation — comfortably real
-    * on the driver, far under the 8 GB broadcast cap. Env/prop
-    * overridable (the minPartitionSize convention) so a cluster profile
-    * can move it and tests can force the shuffled shape.
+    * on the driver, far under the 8 GB broadcast cap.
     */
-  private[graft] def involvedBroadcastMaxIds: Long =
-    sys.env.get("SPARK_GRAFT_INVOLVED_BC_MAX")
-      .orElse(sys.props.get("spark.graft.involvedBcMax"))
-      .map(_.toLong).getOrElse(20000000L)
+  val InvolvedBroadcastMaxIds = 20000000L
 
   /** Shared inverted-index intersection pipeline: (doc_a, doc_b, i, sza,
     * szb) for candidate pairs sharing ≥1 retained shingle — the
     * overlap counts both [[jaccardPairsFrom]] and [[containmentPairs]]
-    * derive their measures from. With `prefixT` set, candidates come
-    * from the prefix-filtered index (see [[keyedPairIntersections]]).
+    * derive their measures from, over the prefix-filtered index for
+    * threshold `t` (see [[keyedPairIntersections]]).
     */
-  private[graft] def pairIntersections(docs: DataFrame, maxDf: Int,
-      prefixT: Option[(Int, Int)] = None): DataFrame =
+  private def pairIntersections(docs: DataFrame, maxDf: Int,
+      t: (Int, Int)): DataFrame =
     keyedPairIntersections(
-      shingles(docs).withColumnRenamed("shingle_h", "h"), maxDf, prefixT)
+      shingles(docs).withColumnRenamed("shingle_h", "h"), maxDf, t)
 
   /** The same intersection pipeline over ANY (doc_id, h) hashed-feature
     * relation — shingles ([[pairIntersections]]) and winnowed
     * fingerprints ([[winnowOverlap]]) share one plan shape, df ceiling
     * and reused-postings property.
     *
-    * `prefixT = Some((num, den))` enables PREFIX FILTERING (Bayardo,
-    * Ma & Srikant, WWW 2007; Xiao et al.'s PPJoin family) for callers
-    * that threshold the final measure at t = num/den: order every
+    * Candidates come from PREFIX FILTERING (Bayardo, Ma & Srikant, WWW
+    * 2007; Xiao et al.'s PPJoin family) for callers that threshold the
+    * final measure at t = num/den (`t = (num, den)`): order every
     * document's retained features by global rarity (ascending df, h as
     * the canonical total order) and index only the first
     * `sz − ceil(t·sz) + 1` of them. Pigeonhole guarantee, valid for
@@ -620,7 +615,8 @@ object Dedup {
     * (since the smaller side bounds i), the same argument. The
     * candidate set is therefore a SUPERSET of all qualifying pairs and
     * the final thresholded output is IDENTICAL to the unfiltered
-    * pipeline's (DedupSpec pins this on real data for all three
+    * full-index pipeline's (DedupSpec keeps that pipeline as the
+    * reference and pins the equality on real data for all three
     * callers) — which is why the DuckDB oracles keep the plain
     * full-index join. Exact intersections for surviving candidates
     * come from `array_intersect` over the per-doc retained-feature
@@ -635,106 +631,89 @@ object Dedup {
     * stop generating quadratic bucket work and only ever appear on the
     * full (probe) side of surviving candidates' verification arrays.
     * The df ceiling stays as the hard cap on any single posting list.
+    *
+    * `involvedBcMax` is the broadcast budget of the verification semi-cut
+    * ([[InvolvedBroadcastMaxIds]]); specs pass 0 to run the shuffled
+    * fallback.
     */
   private[graft] def keyedPairIntersections(keyed: DataFrame, maxDf: Int,
-      prefixT: Option[(Int, Int)] = None): DataFrame = prefixT match {
-    case None =>
-      val posts = keyed
-        .groupBy("h")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .where(size(col("ds")) <= maxDf) // stop-feature cut
-      val sizes = posts.select(explode(col("ds")).as("doc_id"))
-        .groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val buckets = posts.where(size(col("ds")) > 1)
-      val n = size(col("ds"))
-      val pairsExpr = flatten(transform(sequence(lit(1), n - 1), i =>
-        transform(sequence(i + 1, n), j =>
-          struct(
-            element_at(col("ds"), i).as("doc_a"),
-            element_at(col("ds"), j).as("doc_b")))))
-      val inter = buckets
-        .select(explode(pairsExpr).as("p"))
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("i"))
-      inter
-        .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
-    case Some((num, den)) =>
-      // DIAMOND NODES ARE MATERIALIZED (round 16). The pipeline is a DAG,
-      // not a tree: `posts` feeds both the doc-side aggregate and the
-      // candidate probe, `docs` feeds both the prefix and the verification
-      // arrays, `cand` feeds both the output and the involved-id cut.
-      // Catalyst plans a DAG by duplicating the subtree per consumer —
-      // measured on the round-15 plan: 16 parquet scans, the
-      // shingles→posts→docsAgg chain planned 4×, and runtime exchange
-      // reuse only de-duplicates the map side of each shuffle, so every
-      // reduce-side aggregate and generate re-ran per consumer (sf10
-      // ablation: candidate build 10.8 s, full query 89.6 s — the extra
-      // 79 s was recomputation). An eager checkpoint at each fan-out point
-      // (guide §3.3: materialize an intermediate consumed by several
-      // branches) computes each stage exactly once; every bench/oracle
-      // invocation still computes from the parquet inputs — this is
-      // in-query materialization, the fixpoint's convention, not caching.
-      val posts = materialize(keyed.groupBy("h")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .where(size(col("ds")) <= maxDf)) // stop-feature cut
-      // (doc_id, h, df) with df free as the posting length — no join
-      val kept = posts.select(col("h"), size(col("ds")).as("df"),
-        explode(col("ds")).as("doc_id"))
-      // ONE doc-side aggregate: rarity-sorted (df, h) feature list +
-      // retained size — sliced for the prefix, read again for the
-      // verification arrays
-      val docs = materialize(kept.groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("fh"),
-          count(lit(1)).as("sz")))
-      // prefix length sz − ceil(t·sz) + 1 in EXACT integer arithmetic:
-      // a float 0.8·sz rounding UP once would shorten the prefix below
-      // the pigeonhole bound and silently drop qualifying pairs
-      val prefLen =
-        expr(s"cast(sz - ((sz * $num + ${den - 1}) div $den) + 1 as int)")
-      val prefix = docs
-        .select(col("doc_id"), explode(slice(col("fh"), lit(1), prefLen)).as("f"))
-        .select(col("doc_id"), col("f.h").as("h"))
-      val cand = materialize(prefix.join(posts.where(size(col("ds")) > 1), "h")
-        .select(col("doc_id").as("pa"), explode(col("ds")).as("pb"))
-        .where(col("pa") =!= col("pb"))
-        .select(least(col("pa"), col("pb")).as("doc_a"),
-          greatest(col("pa"), col("pb")).as("doc_b"))
-        .distinct())
-      val sets = docs.select(col("doc_id"),
-        transform(col("fh"), f => f.getField("h")).as("hs"), col("sz"))
-      // verification arrays move ONLY for docs some candidate involves:
-      // `involved` (tiny id set) is the BUILD side of the semi-cut, so
-      // the corpus-wide `sets` arrays stream partition-wise on the data
-      // plane and never reach the driver — round 15 flipped the build side
-      // here (the planner used to broadcast the FULL corpus-array
-      // aggregate, a driver OOM by construction at scale). Guide §3.1:
-      // broadcast the side that is small — the ids, not the arrays.
-      // materialized: BOTH vsets attaches consume it (before this the
-      // reduce-side distinct ran twice), and the exact row count is the
-      // size guard below
-      val involved = materialize(cand
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct())
-      // SIZE-GUARDED broadcast (round 16): |involved| is a free count over
-      // the materialized blocks. Below the budget the hint holds (ids are
-      // the provably-small side); above it the hint is withheld so a
-      // pathologically duplicated corpus degrades to a shuffled semi-join
-      // instead of hitting the 8 GB broadcast hard cap — the
-      // dedupSurvivors BroadcastLabelMaxRows convention applied here.
-      val vsets =
-        if (involved.count() <= involvedBroadcastMaxIds)
-          sets.join(broadcast(involved), "doc_id")
-        else sets.join(involved, "doc_id")
-      cand
-        .join(vsets.select(col("doc_id").as("doc_a"),
-          col("hs").as("ha"), col("sz").as("sza")), "doc_a")
-        .join(vsets.select(col("doc_id").as("doc_b"),
-          col("hs").as("hb"), col("sz").as("szb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          size(array_intersect(col("ha"), col("hb"))).cast("long").as("i"),
-          col("sza"), col("szb"))
+      t: (Int, Int),
+      involvedBcMax: Long = InvolvedBroadcastMaxIds): DataFrame = {
+    val (num, den) = t
+    // DIAMOND NODES ARE MATERIALIZED (round 16). The pipeline is a DAG,
+    // not a tree: `posts` feeds both the doc-side aggregate and the
+    // candidate probe, `docs` feeds both the prefix and the verification
+    // arrays, `cand` feeds both the output and the involved-id cut.
+    // Catalyst plans a DAG by duplicating the subtree per consumer —
+    // measured on the round-15 plan: 16 parquet scans, the
+    // shingles→posts→docsAgg chain planned 4×, and runtime exchange
+    // reuse only de-duplicates the map side of each shuffle, so every
+    // reduce-side aggregate and generate re-ran per consumer (sf10
+    // ablation: candidate build 10.8 s, full query 89.6 s — the extra
+    // 79 s was recomputation). An eager checkpoint at each fan-out point
+    // (guide §3.3: materialize an intermediate consumed by several
+    // branches) computes each stage exactly once; every bench/oracle
+    // invocation still computes from the parquet inputs — this is
+    // in-query materialization, the fixpoint's convention, not caching.
+    val posts = materialize(keyed.groupBy("h")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .where(size(col("ds")) <= maxDf)) // stop-feature cut
+    // (doc_id, h, df) with df free as the posting length — no join
+    val kept = posts.select(col("h"), size(col("ds")).as("df"),
+      explode(col("ds")).as("doc_id"))
+    // ONE doc-side aggregate: rarity-sorted (df, h) feature list +
+    // retained size — sliced for the prefix, read again for the
+    // verification arrays
+    val docs = materialize(kept.groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("fh"),
+        count(lit(1)).as("sz")))
+    // prefix length sz − ceil(t·sz) + 1 in EXACT integer arithmetic:
+    // a float 0.8·sz rounding UP once would shorten the prefix below
+    // the pigeonhole bound and silently drop qualifying pairs
+    val prefLen =
+      expr(s"cast(sz - ((sz * $num + ${den - 1}) div $den) + 1 as int)")
+    val prefix = docs
+      .select(col("doc_id"), explode(slice(col("fh"), lit(1), prefLen)).as("f"))
+      .select(col("doc_id"), col("f.h").as("h"))
+    val cand = materialize(prefix.join(posts.where(size(col("ds")) > 1), "h")
+      .select(col("doc_id").as("pa"), explode(col("ds")).as("pb"))
+      .where(col("pa") =!= col("pb"))
+      .select(least(col("pa"), col("pb")).as("doc_a"),
+        greatest(col("pa"), col("pb")).as("doc_b"))
+      .distinct())
+    val sets = docs.select(col("doc_id"),
+      transform(col("fh"), f => f.getField("h")).as("hs"), col("sz"))
+    // verification arrays move ONLY for docs some candidate involves:
+    // `involved` (tiny id set) is the BUILD side of the semi-cut, so
+    // the corpus-wide `sets` arrays stream partition-wise on the data
+    // plane and never reach the driver — round 15 flipped the build side
+    // here (the planner used to broadcast the FULL corpus-array
+    // aggregate, a driver OOM by construction at scale). Guide §3.1:
+    // broadcast the side that is small — the ids, not the arrays.
+    // materialized: BOTH vsets attaches consume it (before this the
+    // reduce-side distinct ran twice), and the exact row count is the
+    // size guard below
+    val involved = materialize(cand
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .distinct())
+    // SIZE-GUARDED broadcast (round 16): |involved| is a free count over
+    // the materialized blocks. Below the budget the hint holds (ids are
+    // the provably-small side); above it the hint is withheld so a
+    // pathologically duplicated corpus degrades to a shuffled semi-join
+    // instead of hitting the 8 GB broadcast hard cap — the
+    // dedupSurvivors BroadcastLabelMaxRows convention applied here.
+    val vsets =
+      if (involved.count() <= involvedBcMax)
+        sets.join(broadcast(involved), "doc_id")
+      else sets.join(involved, "doc_id")
+    cand
+      .join(vsets.select(col("doc_id").as("doc_a"),
+        col("hs").as("ha"), col("sz").as("sza")), "doc_a")
+      .join(vsets.select(col("doc_id").as("doc_b"),
+        col("hs").as("hb"), col("sz").as("szb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("ha"), col("hb"))).cast("long").as("i"),
+        col("sza"), col("szb"))
   }
 
   /** [[JaccardThreshold]] as the exact rational the prefix filter's
@@ -756,7 +735,7 @@ object Dedup {
     // (measured at sf10: the two verify stages were 430 s + 234 s CPU).
     // The single-occurrence predicate halves that; the double `jaccard`
     // column is then computed for survivors only.
-    pairVerified(pairIntersections(docs, maxDf, Some(JaccardPrefixT))
+    pairVerified(pairIntersections(docs, maxDf, JaccardPrefixT)
       .where(lit(9) * col("i") >= lit(4) * (col("sza") + col("szb")))
       .select(col("doc_a"), col("doc_b"), j.as("jaccard")))
   }
@@ -793,14 +772,13 @@ object Dedup {
     containmentPairsFrom(
       Tables.loadSpread(spark, dir, "documents", "doc_id"))
 
-  private[graft] def containmentPairsFrom(docs: DataFrame,
-      maxDf: Int = MaxShingleDf): DataFrame = {
+  private[graft] def containmentPairsFrom(docs: DataFrame): DataFrame = {
     val c = col("i").cast("double") /
       least(col("sza"), col("szb")).cast("double")
     // i/min ≥ 9/10 ⟺ 10·i ≥ 9·min — the jaccardPairsFrom integer-threshold
     // + materialize-before-orderBy treatment (one array_intersect per
     // candidate, no sampling re-execution)
-    pairVerified(pairIntersections(docs, maxDf, Some(ContainmentPrefixT))
+    pairVerified(pairIntersections(docs, MaxShingleDf, ContainmentPrefixT)
       .where(lit(10) * col("i") >= lit(9) * least(col("sza"), col("szb")))
       .select(col("doc_a"), col("doc_b"), c.as("containment")))
   }
@@ -957,20 +935,18 @@ object Dedup {
   def winnowOverlap(spark: SparkSession, dir: String): DataFrame =
     winnowOverlapFrom(Tables.loadSpread(spark, dir, "documents", "doc_id"))
 
-  private[graft] def winnowOverlapFrom(docs: DataFrame,
-      maxDf: Int = MaxShingleDf): DataFrame = {
+  private[graft] def winnowOverlapFrom(docs: DataFrame): DataFrame = {
     val ov = col("i").cast("double") /
       least(col("sza"), col("szb")).cast("double")
-    // `maxDf` is the DECLARED ceiling parameter of this operator: it
-    // bounds hot postings downstream AND defines the hot-gram mask the
-    // selection pre-pass applies (round 12). At maxDf = Int.MaxValue
-    // both are inert and this is the unceilinged ground-truth form the
-    // CeilingRecall audit runs.
+    // MaxShingleDf bounds hot postings downstream AND defines the hot-gram
+    // mask the selection pre-pass applies (round 12); the unceilinged
+    // recall audit is SURVEY §9.37.
     // i/min ≥ 1/2 ⟺ 2·i ≥ min — the jaccardPairsFrom integer-threshold +
     // materialize-before-orderBy treatment
     pairVerified(
-      keyedPairIntersections(winnowFingerprints(docs, hotGrams(docs, maxDf)),
-        maxDf, Some((1, 2))) // WinnowThreshold = 1/2, spec-pinned
+      keyedPairIntersections(
+        winnowFingerprints(docs, hotGrams(docs, MaxShingleDf)),
+        MaxShingleDf, (1, 2)) // WinnowThreshold = 1/2, spec-pinned
       .where(lit(2) * col("i") >= least(col("sza"), col("szb")))
       .select(col("doc_a"), col("doc_b"), col("i").as("n_shared"),
         ov.as("overlap")))

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * O(log k) per row), and shuffle serialization is Spark's native struct
   * codec for primitive arrays, not Kryo object graphs (the previous
   * PriorityQueue buffer paid Kryo per partial merge — measured 3.3×
-  * slower end-to-end at 200k groups, see [[graft.tools.TopKBench]]).
+  * slower end-to-end at 200k groups, SURVEY §9.7).
   *
   * Ordering contract: descending by score, ascending by tag on ties — the
   * same deterministic order the engine's window top-k uses, so both

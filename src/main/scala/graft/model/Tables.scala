@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name == "events") withEventTime(df) else df

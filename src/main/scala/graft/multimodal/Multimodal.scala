@@ -10,27 +10,24 @@ import graft.model.Tables
   * place the engine deliberately drops below Catalyst, because real media
   * decoding (JPEG/PNG/audio frames) is library code, not expressions.
   *
-  * Two decoders live here. [[PpmDecoder]] is a REAL pure-JVM decoder for
-  * the netpbm P6 format — genuine header parse, genuine truncation /
-  * wrong-codec failures, features computed from actual raster bytes —
-  * and backs ALL THREE declared media queries (meta / errors / frames)
-  * over deterministically generated payloads ([[ppmPayload]]).
-  * [[StubDecoder]] remains the clearly-marked deterministic FAKE
-  * (md5-derived dimensions) standing in for compressed codecs
-  * (JPEG/video) whose libraries are not in this container — kept
-  * spec-pinned but undeclared, as the drop-in slot a real codec would
-  * fill. Around
-  * both: the binary schema, the Dataset[MediaBlob] encoder, the
-  * per-partition decoder lifecycle (init once per partition, stream the
-  * rows, never materialize the partition), and the typed output row are
-  * the production plumbing any codec drops into.
+  * The codecs are real pure-JVM decoders: netpbm P6 ([[PpmDecoder]]),
+  * PNG ([[Png]]), APNG ([[Apng]]) and GIF87a ([[Gif]]) — genuine header
+  * and chunk parses, genuine truncation / corruption / wrong-codec
+  * failures, features computed from actual raster bytes — each over
+  * deterministically generated payloads ([[ppmPayload]], [[pngPayload]],
+  * [[apngPayload]], [[gifPayload]]). Around them: the binary schema, the
+  * Dataset[MediaBlob] encoder, the per-partition decoder lifecycle (init
+  * once per partition, stream the rows, never materialize the
+  * partition), the [[DecodeStatus]] quarantine channel, and the typed
+  * output row are the production plumbing any codec drops into.
   *
   * Scale notes (100 TB of media):
   *  - the scan stays input-partitioned (`maxPartitionBytes` splits); decode
   *    is per-row CPU work with no shuffle at all;
   *  - only `doc_id` + payload are read (column pruning);
-  *  - the stub's arithmetic is reproduced exactly by the DuckDB oracle, so
-  *    this non-SQL operator still gets a full value-level correctness gate.
+  *  - every generator's arithmetic is reproduced exactly by the DuckDB
+  *    oracle, so these non-SQL operators still get a full value-level
+  *    correctness gate.
   */
 object Multimodal {
 
@@ -40,115 +37,8 @@ object Multimodal {
     */
   final case class MediaBlob(doc_id: Long, content: Array[Byte])
 
-  /** Decoded stub metadata, resize-to-224-long-side dims, and first
-    * feature components.
-    */
-  final case class MediaMeta(
-      doc_id: Long, n_bytes: Int, width: Int, height: Int,
-      resized_w: Int, resized_h: Int,
-      n_frames: Int, f0: Double, f1: Double)
-
-  /** Deterministic fake decoder: stands in for an image/audio library.
-    * Derives "dimensions" from the md5 of the payload and "features" from
-    * the same hash — byte-for-byte reproducible in SQL. A real decoder
-    * would replace `decode` only; the call sites stay identical.
-    */
-  object StubDecoder {
-    def h48(bytes: Array[Byte]): Long = graft.functions.Hashing.h48Bytes(bytes)
-
-    def decode(b: MediaBlob): MediaMeta = {
-      val n = b.content.length
-      val h = h48(b.content)
-      val w = (64 + h % 448).toInt
-      val ht = (64 + (h / 448) % 448).toInt
-      // "resize": scale the long side to 224, integer math (exact in SQL)
-      val long = math.max(w, ht)
-      MediaMeta(
-        doc_id = b.doc_id,
-        n_bytes = n,
-        width = w,
-        height = ht,
-        resized_w = w * 224 / long,
-        resized_h = ht * 224 / long,
-        n_frames = (1 + n % 30),
-        f0 = (h % 2001 - 1000) / 1000.0,
-        f1 = ((h / 2001) % 2001 - 1000) / 1000.0)
-    }
-  }
-
-  /** Fail-safe decode — a real media decoder THROWS on truncated headers
-    * and codec quirks, and at 100 TB some payloads always are corrupt;
-    * production quarantines them into an error channel instead of
-    * killing the stage. The stub fails deterministically (empty payload,
-    * or md5-hash ≡ 0 mod 17 standing in for "corrupt header", ~6% of
-    * blobs) so the quarantine path is exercised and oracle-checkable.
-    */
-  object StubDecoderSafe {
-    def decodeSafe(b: MediaBlob): Either[String, MediaMeta] =
-      if (b.content.isEmpty) Left("empty_payload")
-      else if (StubDecoder.h48(b.content) % 17 == 0) Left("corrupt_header")
-      else Right(StubDecoder.decode(b))
-  }
-
   /** Per-blob decode outcome; `reason` is null on success. */
   final case class DecodeStatus(doc_id: Long, ok: Boolean, reason: String)
-
-  def decodeStatus(blobs: Dataset[MediaBlob]): Dataset[DecodeStatus] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions { it =>
-      it.map { b =>
-        StubDecoderSafe.decodeSafe(b) match {
-          case Left(r)  => DecodeStatus(b.doc_id, ok = false, r)
-          case Right(_) => DecodeStatus(b.doc_id, ok = true, null)
-        }
-      }
-    }
-  }
-
-  /** Decode-health dashboard: per source, blob counts, failures by
-    * reason, and the failure rate — the quarantine report a media-ingest
-    * run ships next to its output. Status rows carry only (id, flag,
-    * reason); the source label joins on after decode so the decode scan
-    * itself stays two-column. Output: (source, n_blobs, n_failed,
-    * n_empty, n_corrupt, fail_ppm).
-    */
-  def decodeAudit(spark: SparkSession, dir: String): DataFrame = {
-    val src = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("source"))
-    decodeStatus(blobs(spark, dir)).toDF()
-      .join(src, "doc_id")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_blobs"),
-        sum(when(!col("ok"), 1L).otherwise(0L)).as("n_failed"),
-        sum(when(col("reason") === "empty_payload", 1L).otherwise(0L))
-          .as("n_empty"),
-        sum(when(col("reason") === "corrupt_header", 1L).otherwise(0L))
-          .as("n_corrupt"))
-      .select(col("source"), col("n_blobs"), col("n_failed"),
-        col("n_empty"), col("n_corrupt"),
-        expr("n_failed * 1000000 div n_blobs").as("fail_ppm"))
-      .orderBy("source")
-  }
-
-  val decodeAuditSql: String =
-    """WITH b AS (SELECT doc_id, source,
-              octet_length(encode(coalesce(text, ''))) AS n,
-              ('0x' || substr(md5(coalesce(text, '')), 1, 12))::BIGINT AS h
-            FROM documents),
-        s AS (SELECT source,
-              CASE WHEN n = 0 THEN 'empty_payload'
-                   WHEN h % 17 = 0 THEN 'corrupt_header' END AS reason
-            FROM b)
-        SELECT source, count(*) AS n_blobs,
-          CAST(sum(CASE WHEN reason IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_failed,
-          CAST(sum(CASE WHEN reason = 'empty_payload' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_empty,
-          CAST(sum(CASE WHEN reason = 'corrupt_header' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_corrupt,
-          CAST(sum(CASE WHEN reason IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-            // count(*) AS BIGINT) AS fail_ppm
-        FROM s GROUP BY source ORDER BY source"""
 
   /** documents → binary payload column (the multimodal schema shape:
     * id + `binary` + metadata columns).
@@ -156,65 +46,12 @@ object Multimodal {
   def blobs(spark: SparkSession, dir: String): Dataset[MediaBlob] = {
     import spark.implicits._
     Tables.loadSpread(spark, dir, "documents", "doc_id")
-      // coalesce: a NULL text must become an EMPTY payload (defined:
-      // quarantined as empty_payload), not a null that NPEs the decoder
+      // coalesce: a NULL text must become an EMPTY payload (a decoder
+      // quarantines it as malformed), not a null that NPEs the decoder
       .select(col("doc_id"),
         coalesce(col("text"), lit("")).cast("binary").as("content"))
       .as[MediaBlob]
   }
-
-  /** Decode/feature-extract pass: one decoder per partition, streaming
-    * iterator in/out (constant memory per task regardless of partition
-    * size — the property that matters when payloads are MBs each).
-    */
-  def decodeAll(blobs: Dataset[MediaBlob]): Dataset[MediaMeta] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions { it =>
-      // real decoders initialize native state here, once per partition
-      val decoder = StubDecoder
-      it.map(decoder.decode)
-    }
-  }
-
-  def mediaMeta(spark: SparkSession, dir: String): DataFrame =
-    decodeAll(blobs(spark, dir)).toDF().orderBy("doc_id")
-
-  /** One sampled "frame" row. */
-  final case class MediaFrame(doc_id: Long, frame_idx: Int, frame_hash: Long)
-
-  /** Frame sampling: every `stride`-th frame of each payload becomes its
-    * own row — the 1→N imperative flatMap shape a video pipeline needs
-    * (decode once per payload, emit per-frame records, stream both
-    * directions). The frame "content" hash is md5-derived from
-    * payload+index, so the oracle regenerates it.
-    */
-  def sampleFrames(blobs: Dataset[MediaBlob], stride: Int = 4): Dataset[MediaFrame] = {
-    import blobs.sparkSession.implicits._
-    blobs.mapPartitions { it =>
-      val decoder = StubDecoder
-      it.flatMap { b =>
-        val meta = decoder.decode(b)
-        (0 until meta.n_frames by stride).iterator.map { i =>
-          MediaFrame(b.doc_id, i,
-            graft.functions.Hashing.h48Bytes(
-              b.content ++ s"-frame-$i".getBytes("UTF-8")))
-        }
-      }
-    }
-  }
-
-  def mediaFrames(spark: SparkSession, dir: String): DataFrame =
-    sampleFrames(blobs(spark, dir)).toDF().orderBy("doc_id", "frame_idx")
-
-  val mediaFramesSql: String =
-    """WITH h AS (SELECT doc_id, text,
-              CAST(1 + octet_length(encode(coalesce(text, ''))) % 30 AS INT) AS n_frames
-              FROM documents),
-        f AS (SELECT doc_id, text, unnest(range(0, n_frames, 4)) AS i FROM h)
-        SELECT doc_id, CAST(i AS INT) AS frame_idx,
-          ('0x' || substr(md5(coalesce(text, '') || '-frame-' || i), 1, 12))::BIGINT
-            AS frame_hash
-        FROM f ORDER BY doc_id, frame_idx"""
 
   /** Content-addressable media dedup — group payloads by their content
     * digest and report every duplicate group with its canonical keeper
@@ -270,8 +107,7 @@ object Multimodal {
   /** A REAL pure-JVM decoder for binary PPM (P6) — the simplest public
     * raster format (netpbm): `P6 <ws> width <ws> height <ws> maxval
     * <single-ws> raw-RGB-raster`, `#`-to-EOL comments legal inside the
-    * header. This replaces the md5 stub for the meta/errors queries: the
-    * parse is genuine (magic check, comment skipping, bounded int reads,
+    * header. The parse is genuine (magic check, comment skipping, bounded int reads,
     * raster-length validation), the failures are genuine format failures
     * (a payload claiming w×h pixels but shipping fewer raster bytes IS
     * truncated), and the extracted features are real functions of real
@@ -288,10 +124,8 @@ object Multimodal {
       * truncated_raster (header promises 3·w·h bytes, payload has
       * fewer — the classic partial-download corruption).
       */
-    /** Validated header: (width, height, raster byte offset). Shared by
-      * [[decode]] and the frame sampler — one parser, two consumers.
-      */
-    private[graft] def header(
+    /** Validated header: (width, height, raster byte offset). */
+    private def header(
         b: MediaBlob): Either[String, (Int, Int, Int)] = {
       val a = b.content
       if (a.length < 2 || a(0) != 'P' || a(1) != '6') Left("bad_magic")
@@ -395,8 +229,8 @@ object Multimodal {
   /** Decoded-media metadata over REAL pixel data: parse every payload
     * with [[PpmDecoder]], keep the decodable ones, emit header dims,
     * 224-long-side resize targets, and per-channel raster sums. Scale
-    * shape unchanged from the stub era: input-partitioned scan, per-row
-    * CPU, no shuffle before the final order.
+    * shape: input-partitioned scan, per-row CPU, no shuffle before the
+    * final order.
     */
   def ppmMeta(spark: SparkSession, dir: String): DataFrame = {
     val b = ppmBlobs(spark, dir)
@@ -441,54 +275,10 @@ object Multimodal {
     */
   final case class PpmFrame(doc_id: Long, frame_idx: Int, row_sum: Long)
 
-  /** Frame sampling over REAL rasters — the video-pipeline 1→N shape
-    * (decode once per payload, emit per-frame records, stream both
-    * directions) with every value a function of actual bytes: every
-    * [[FrameStride]]-th raster ROW of each decodable payload becomes a
-    * frame row carrying the row's byte sum (the checksum a sampler logs
-    * per extracted frame). Undecodable payloads contribute nothing —
-    * they are the quarantine channel's rows ([[ppmAudit]]). Replaces
-    * the md5 stub for the declared frames query; the stub sampler
-    * remains as the spec-pinned stand-in for codecs with an internal
-    * frame count (video), which PPM does not model.
+  /** Frame sampling stride of [[pngFrames]]: every `FrameStride`-th
+    * decoded raster ROW becomes one [[PpmFrame]] row.
     */
   val FrameStride = 4
-
-  def ppmFrames(spark: SparkSession, dir: String): DataFrame = {
-    val b = ppmBlobs(spark, dir)
-    import b.sparkSession.implicits._
-    b.mapPartitions(it => it.flatMap { x =>
-      PpmDecoder.header(x) match {
-        case Left(_) => Iterator.empty
-        case Right((w, h, base)) =>
-          (0 until h by FrameStride).iterator.map { r =>
-            var sum = 0L
-            var k = 3 * r * w
-            val end = 3 * (r + 1) * w
-            while (k < end) { sum += (x.content(base + k) & 0xff); k += 1 }
-            PpmFrame(x.doc_id, r, sum)
-          }
-      }
-    }).toDF().orderBy("doc_id", "frame_idx")
-  }
-
-  /** Oracle replay of [[ppmFrames]]: same ok-filter and dims as
-    * [[ppmMetaSql]], row sums via an unnest over the row's byte range.
-    */
-  val ppmFramesSql: String =
-    s"""WITH d AS (SELECT doc_id,
-              CAST(4 + (doc_id*31 + 7) % 32 AS INT) AS w,
-              CAST(4 + (doc_id*17 + 3) % 32 AS INT) AS h
-            FROM documents
-            WHERE doc_id % 29 <> 11 AND doc_id % 23 <> 5),
-        f AS (SELECT doc_id, w, unnest(range(0, h, $FrameStride)) AS r
-            FROM d),
-        px AS (SELECT doc_id, r,
-              unnest(range(3*r*w, 3*(r+1)*w)) AS k
-            FROM f)
-        SELECT doc_id, CAST(r AS INT) AS frame_idx,
-          CAST(sum((doc_id*131 + k*31 + 17) % 256) AS BIGINT) AS row_sum
-        FROM px GROUP BY doc_id, r ORDER BY doc_id, frame_idx"""
 
   /** Oracle replay of [[ppmMeta]]: the same id-seeded dims/corruption
     * rules, pixel sums via an unnest over the raster index — DuckDB
@@ -533,23 +323,6 @@ object Multimodal {
           CAST(sum(CASE WHEN reason IS NOT NULL THEN 1 ELSE 0 END) * 1000000
             // count(*) AS BIGINT) AS fail_ppm
         FROM d GROUP BY source ORDER BY source"""
-
-  val mediaMetaSql: String =
-    """WITH h AS (SELECT doc_id,
-              CAST(octet_length(encode(coalesce(text, ''))) AS INT) AS n_bytes,
-              ('0x' || substr(md5(coalesce(text, '')), 1, 12))::BIGINT AS h
-              FROM documents),
-        d AS (SELECT doc_id, n_bytes,
-              CAST(64 + h % 448 AS INT) AS width,
-              CAST(64 + (h // 448) % 448 AS INT) AS height,
-              h FROM h)
-        SELECT doc_id, n_bytes, width, height,
-          CAST(width * 224 // greatest(width, height) AS INT) AS resized_w,
-          CAST(height * 224 // greatest(width, height) AS INT) AS resized_h,
-          CAST(1 + n_bytes % 30 AS INT) AS n_frames,
-          CAST(h % 2001 - 1000 AS DOUBLE) / 1000.0 AS f0,
-          CAST((h // 2001) % 2001 - 1000 AS DOUBLE) / 1000.0 AS f1
-        FROM d ORDER BY doc_id"""
 
   // ======================================================== real PNG codec
 
@@ -644,10 +417,9 @@ object Multimodal {
   /** Frame sampling over DEFLATE-decoded rasters — the upgraded
     * `q_multimodal_frames` body (round-11 verdict ask #6): every
     * [[FrameStride]]-th reconstructed raster row becomes a frame row
-    * carrying the row's byte sum. Unlike the PPM sampler there is no
-    * header-only shortcut: rows only exist after the full inflate +
-    * unfilter, which is the production cost shape for compressed
-    * codecs. Undecodable payloads route to [[pngAudit]]'s quarantine
+    * carrying the row's byte sum. There is no header-only shortcut: rows
+    * only exist after the full inflate + unfilter, which is the
+    * production cost shape for compressed codecs. Undecodable payloads route to [[pngAudit]]'s quarantine
     * rows and contribute nothing here.
     */
   def pngFrames(spark: SparkSession, dir: String): DataFrame = {
@@ -833,7 +605,7 @@ object Multimodal {
   }
 
   /** Frame walk over REAL container parses (round-12 verdict ask #8 —
-    * the query the md5 frame stub stood in for): every decodable APNG
+    * the codec with an internal frame count): every decodable APNG
     * yields one row per animation frame with its rectangle and the
     * whole-frame byte sum of the DEFLATE-reconstructed raster.
     * Undecodable payloads route to [[apngAudit]] and contribute

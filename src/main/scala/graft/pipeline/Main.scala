@@ -18,7 +18,7 @@ import graft.chisq.ChiSquare
   * chisq/ write of those collected rows (a local relation — no scan, no
   * shuffle); chisq.txt is formatted from the same rows.
   *
-  * Usage: graft.Main <reviews.json> <stopwords.txt> <outDir> [k=75]
+  * Usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]
   *
   * Outputs under <outDir>:
   *   counters.txt        single line `<total> {'cat': n, ...}` (reference
@@ -36,7 +36,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: graft.Main <reviews.json> <stopwords.txt> <outDir> [k=75]")
+      "usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]")
     val k = if (args.length > 3) args(3).toInt else 75
     val spark = Verify.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try run(spark, args(0), args(1), args(2), k)

@@ -24,9 +24,6 @@ object Pipeline {
       categoryCol: String,
       stopwords: Set[String],
       k: Int = 75): (DataFrame, DataFrame) = {
-    // cache the pruned 2-column projection: it feeds both the counters
-    // aggregation and the wordcount — one scan instead of two at 100 TB
-    // (the reference piggybacked counters on job 1 for the same reason)
     val spark = docs.sparkSession
     import spark.implicits._
     val pruned0 = docs.select(col(textCol).as("text"), col(categoryCol).as("category"))
@@ -40,21 +37,18 @@ object Pipeline {
       if (scanParts >= spark.sparkContext.defaultParallelism) pruned0
       else pruned0.repartition(spark.sessionState.conf.numShufflePartitions,
         col("category"), col("text"))
-    val pruned = spread.persist()
-    try {
-      // ONE action for all scalar state: collect the (tiny) per-category
-      // counts, sum N driver-side, and re-ship them as the broadcast join
-      // side — the reference's counters.txt round-trip without the file
-      val catRows = WordCount.categoryTotals(pruned, col("category"))
-        .as[(String, Long)].collect()
-      val total = catRows.map(_._2).sum
-      val catTotals = catRows.toSeq.toDF("category", "n_docs")
-      val df = WordCount.documentFrequency(pruned, col("text"), col("category"), stopwords)
-      val scored = ChiSquare.score(df, catTotals, total)
-      val topk = ChiSquare.topKPerCategory(scored, k)
-        .orderBy(col("category"), col("chi2").desc, col("word"))
-      (topk, ChiSquare.vocabulary(topk))
-    } finally pruned.unpersist(blocking = false)
+    // ONE action for all scalar state: collect the (tiny) per-category
+    // counts, sum N driver-side, and re-ship them as the broadcast join
+    // side — the reference's counters.txt round-trip without the file
+    val catRows = WordCount.categoryTotals(spread, col("category"))
+      .as[(String, Long)].collect()
+    val total = catRows.map(_._2).sum
+    val catTotals = catRows.toSeq.toDF("category", "n_docs")
+    val df = WordCount.documentFrequency(spread, col("text"), col("category"), stopwords)
+    val scored = ChiSquare.score(df, catTotals, total)
+    val topk = ChiSquare.topKPerCategory(scored, k)
+      .orderBy(col("category"), col("chi2").desc, col("word"))
+    (topk, ChiSquare.vocabulary(topk))
   }
 }
 

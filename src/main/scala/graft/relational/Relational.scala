@@ -28,7 +28,6 @@ import graft.streaming.StreamingOps
 object Relational {
 
   private def dec2(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)")
-  private def dec4(c: org.apache.spark.sql.Column) = c.cast("decimal(18,4)")
   // rate columns (discount/tax, 2 decimals) as small exact decimals so
   // price*(1±rate) stays in decimal arithmetic end-to-end — a double
   // product cast to decimal rounds differently in Spark (HALF_UP) vs

@@ -35,12 +35,10 @@ object Similarity {
   val LshPlanes = 4 // bits per table → 16 buckets/table
   val Dim = 64
 
-  /** Deterministic pseudo-random hyperplane component in [−1, 1]:
-    * (h48("rp-t-j-k") mod 2001 − 1000)/1000, pre-baked as a literal.
+  /** Deterministic pseudo-random hyperplane in [−1, 1]^Dim as DuckDB SQL:
+    * (h48("rp-t-j-k") mod 2001 − 1000)/1000 per component, the formula
+    * [[graft.functions.LshCodes]] evaluates on the JVM side.
     */
-  private def planeValues(t: Int, j: Int): Array[Double] =
-    Array.tabulate(Dim)(k => (Hashing.h48String(s"rp-$t-$j-$k") % 2001 - 1000) / 1000.0)
-
   private def duckPlane(t: Int, j: Int): String = {
     val comps = (0 until Dim)
       .map(k => s"CAST(${Hashing.duckH48(s"'rp-$t-$j-$k'")} % 2001 - 1000 AS DOUBLE)/1000.0")
@@ -185,7 +183,7 @@ object Similarity {
     * band the [[graft.dedup.Dedup.CosineThreshold]] emission threshold
     * also returns) are BEST-EFFORT candidates: their recall follows
     * 1 − (1 − p^planes)^tables, p = 1 − arccos(c)/π, measured per band
-    * by `graft.tools.LshRecall` and spec-pinned to that model in
+    * at sf1 (SURVEY §9.36) and spec-pinned to that model in
     * `DedupSpec` — holding 0.9 recall AT 0.4 would cost
     * tables ∝ (1/p(0.4))^planes ≈ 57 at sf1 alone (Indyk–Motwani), a
     * candidate-volume bill no production near-dup pipeline pays for a
@@ -661,7 +659,7 @@ object Similarity {
       .mkString("CASE pp.planes ", " ",
         " ELSE CAST('LSH_PLANES_OUT_OF_RANGE' AS INT) END")
     // hyperplanes generated IN SQL from the same md5 formula the JVM
-    // bakes into plan literals (planeValues): one 64-component list per
+    // evaluates in LshCodes: one 64-component list per
     // (table, plane), engine-exact because both sides compute
     // (h48("rp-t-j-k") % 2001 − 1000)/1000 in integer space first
     val planeList = "list_transform(range(0, " + Dim + "), k -> " +
@@ -2185,9 +2183,9 @@ object Similarity {
     *     [[graft.functions.NearestCentroidCol]] loop paying exactly
     *     C_{its shard} dots per row (one scan, no per-shard union of
     *     jobs, O(1) plan at any n). Pair volume Σ_s Σ_c n_c²/2 ≈
-    *     n·[[SemClusterTarget]]/2 — linear — with
-    *     `graft.tools.SemShardProbe` measuring the law past the
-    *     8.4M boundary from occupancy alone.
+    *     n·[[SemClusterTarget]]/2 — linear — measured past the
+    *     8.4M boundary from occupancy alone (SURVEY §9.54,
+    *     `BENCH_SEMSHARD_r15.json`).
     *  4. RECONCILE: pruning decisions from ALL shared memberships
     *     (primary and ghost, across shards) flow into ONE global
     *     `groupBy(b).min(a)` — the cross-shard canonical selection: a
@@ -2228,9 +2226,9 @@ object Similarity {
 
   /** Membership + fine-cluster assignment of [[semanticDedupSharded]]
     * (steps 1–3 of its doc): (vec_id, v, nrm, shard, is_primary, cid) —
-    * one row per primary membership plus one per ghost-band membership.
-    * Shared with `graft.tools.SemShardProbe`, which measures the
-    * pair-volume law from this frame's (shard, cid) occupancy alone.
+    * one row per primary membership plus one per ghost-band membership;
+    * its (shard, cid) occupancy alone gives the pair-volume law
+    * (SURVEY §9.54).
     */
   /** Broadcast ceiling for the packed fine-centroid side of
     * [[semShardedAssign]]: S ≤ this → explicit `broadcast()` (the packed
@@ -2249,8 +2247,7 @@ object Similarity {
     *   holds slots/vector flat in n; Some([[SemGhostMargin]]) = the
     *   quality-first round-13 fixed band, which keeps ~3% more
     *   boundary-band catch at 25.2M for ~29% more pair slots (both
-    *   curves measured by `graft.tools.SemShardProbe --both-eps`; the
-    *   menu lives in SURVEY §9.60). At the S = 2 floor the two settings
+    *   curves measured in SURVEY §9.64, `BENCH_SEMSHARD_r15.json`). At the S = 2 floor the two settings
     *   coincide, so every oracle-checked SF is knob-invariant.
     */
   private[graft] def semShardedAssign(e: DataFrame, s: Int,

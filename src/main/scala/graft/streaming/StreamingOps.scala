@@ -651,8 +651,8 @@ object StreamingOps {
 
   /** (files scanned, files live) of the most recent gate cross-index
     * probe in this JVM — the pruning observable `StreamingSpec` audits
-    * and `StreamProbe` prices (test/bench-only; the gate's correctness
-    * never reads it).
+    * (priced in SURVEY §9.62 and `BENCH_STREAM_r15.json`; test/bench-only,
+    * the gate's correctness never reads it).
     */
   @volatile private[graft] var lastGatePrune: (Int, Int) = (0, 0)
 

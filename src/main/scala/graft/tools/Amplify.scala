@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale amplifier — manufactures an sf1-equivalent corpus
@@ -177,8 +177,8 @@ object Amplify {
       // planted in at most one replica while k ≤ 101) as genuine
       // near-copies of their base: v' = (1−λ)·v + λ·shift32(v), λ
       // cycling 0.20..0.40 → pair cosines spread ~0.80..0.97 across
-      // the guarantee band. graft.tools.LshRecall measures the
-      // operator's recall against exactly this truth.
+      // the guarantee band; the operator's recall against exactly this
+      // truth is SURVEY §9.36.
       if (r == 0) d
       else {
         val s = r % 64; val f = r / 64

@@ -45,7 +45,6 @@ object EmbedAmplify {
     }
     val spark = graft.Verify.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    import spark.implicits._
     Files.createDirectories(Paths.get(out))
 
     val e = spark.read.parquet(s"$src/embeddings.parquet")

@@ -33,12 +33,10 @@ object WordCount {
       docs: DataFrame,
       textCol: Column,
       categoryCol: Column,
-      stopwords: Set[String] = Set.empty,
-      preTokenized: Boolean = false): DataFrame = {
-    val tokens = if (preTokenized) array_distinct(split(textCol, " "))
-                 else TextOps.reviewTokens(textCol)
+      stopwords: Set[String] = Set.empty): DataFrame = {
     val exploded = docs
-      .select(categoryCol.as("category"), explode(tokens).as("word"))
+      .select(categoryCol.as("category"),
+        explode(TextOps.reviewTokens(textCol)).as("word"))
       .where(length(col("word")) > 0)
     val filtered =
       if (stopwords.isEmpty) exploded

@@ -406,6 +406,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  /** Reference for the prefix-filtered [[Dedup.keyedPairIntersections]]:
+    * the unfiltered full inverted index (Σ df² candidate pairs), the shape
+    * the DuckDB twins keep. (doc_a, doc_b, i, sza, szb) for every pair
+    * sharing ≥1 retained feature.
+    */
+  private def fullIndexIntersections(keyed: org.apache.spark.sql.DataFrame,
+      maxDf: Int): org.apache.spark.sql.DataFrame = {
+    val posts = keyed
+      .groupBy("h")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+      .where(size(col("ds")) <= maxDf) // stop-feature cut
+    val sizes = posts.select(explode(col("ds")).as("doc_id"))
+      .groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val n = size(col("ds"))
+    val pairsExpr = flatten(transform(sequence(lit(1), n - 1), i =>
+      transform(sequence(i + 1, n), j =>
+        struct(
+          element_at(col("ds"), i).as("doc_a"),
+          element_at(col("ds"), j).as("doc_b")))))
+    posts.where(size(col("ds")) > 1)
+      .select(explode(pairsExpr).as("p"))
+      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("i"))
+      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
+      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
+  }
+
   test("prefix filtering is lossless: thresholded pairs identical to the full index, all three measures") {
     // the Bayardo/PPJoin pigeonhole guarantee, checked on real data at
     // sf0.1 for every (pipeline, threshold) the engine declares: the
@@ -434,15 +462,43 @@ class DedupSpec extends SparkSpec {
         (Dedup.shingles(d).withColumnRenamed("shingle_h", "h"), 9, 10, false, "containment"),
         (Dedup.winnowFingerprints(d), 1, 2, false, "winnow"))) {
       val full = thresholded(
-        Dedup.keyedPairIntersections(keyed, Dedup.MaxShingleDf, None),
+        fullIndexIntersections(keyed, Dedup.MaxShingleDf),
         num, den, jac)
       val pref = thresholded(
-        Dedup.keyedPairIntersections(keyed, Dedup.MaxShingleDf, Some((num, den))),
+        Dedup.keyedPairIntersections(keyed, Dedup.MaxShingleDf, (num, den)),
         num, den, jac)
       assert(full.nonEmpty, s"$name: trivial fixture, no qualifying pairs")
       assert(pref == full,
         s"$name: prefix filter changed the output — missing=${full -- pref} extra=${pref -- full}")
     }
+  }
+
+  test("involved-id budget 0: shuffled semi-join returns the broadcast path's rows") {
+    // the fallback above InvolvedBroadcastMaxIds withholds the broadcast
+    // hint; with auto-broadcast off, only that hint can plan a
+    // BroadcastExchange, so the budget alone decides the join shape
+    val keyed = Dedup.shingles(
+      graft.model.Tables.loadSpread(spark, sf, "documents", "doc_id"))
+      .withColumnRenamed("shingle_h", "h")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      def run(budget: Long) = {
+        val df = Dedup.keyedPairIntersections(keyed, Dedup.MaxShingleDf,
+          Dedup.JaccardPrefixT, budget)
+        val rows = df.as[(Long, Long, Long, Long, Long)].collect().toSet
+        (rows, df.queryExecution.executedPlan.toString)
+      }
+      val (bcRows, bcPlan) = run(Dedup.InvolvedBroadcastMaxIds)
+      val (shRows, shPlan) = run(0L)
+      assert(bcPlan.contains("BroadcastExchange"),
+        s"default budget should broadcast the involved ids:\n$bcPlan")
+      assert(!shPlan.contains("BroadcastExchange"),
+        s"budget 0 must plan the shuffled semi-join:\n$shPlan")
+      assert(bcRows.nonEmpty, "trivial fixture: no candidate pairs")
+      assert(shRows == bcRows)
+    } finally spark.conf.set(key, saved)
   }
 
   test("cluster fixpoint memo: input rewrite is a cache miss, never stale labels") {
