@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.StageLedger
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":…,"queries":{…}}. Uses the `noop` sink so
   * the FULL plan executes (a bare .count() lets Catalyst prune projections —
@@ -19,7 +23,7 @@ object Bench {
     * JVM default locale, so on a comma-decimal locale the emitted JSON
     * would carry [1,23] instead of [1.23] (round-10 ADVICE).
     */
-  private def fmt(v: Double, dec: Int): String =
+  private[graft] def fmt(v: Double, dec: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
 
   /** Byte-based regression gate (round-11 verdict ask #5): wall-clock
@@ -96,9 +100,52 @@ object Bench {
     (out, healed.toSeq)
   }
 
+  /** A diagnostic row beside the declared battery: `query` timed with its
+    * memo cleared (`clear`) before every run. */
+  private[graft] final case class ColdRow(name: String,
+      clear: SparkSession => Unit, query: (SparkSession, String) => DataFrame)
+
+  /** The cluster memo makes q_dedup_clusters' steady-state number a cache
+    * hit (it models a materialized cluster table), and the four declared
+    * graph queries amortize one persisted edge table; these rows record
+    * what ONE consumer pays cold, so the warm numbers stay honest. */
+  private[graft] val coldRows: Seq[ColdRow] = Seq(
+    ColdRow("q_dedup_clusters_cold", graft.dedup.Dedup.clearClusterMemo,
+      graft.dedup.Dedup.nearDupClusters),
+    ColdRow("q_graph_pagerank_cold", graft.graph.Graph.clearEdgeMemo,
+      graft.graph.Graph.pageRank))
+
+  private val mapper = new ObjectMapper
+
+  private def fields(n: JsonNode): Seq[(String, JsonNode)] =
+    n.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+
+  /** Per-query seconds (`queries`) and [read_mb, write_mb] shuffle
+    * (`shuffle_mb_rw`) of a committed official record. The record is a
+    * baseline for ITS scale factor: comparing a run at another sf against
+    * it would flag everything, so a record whose `sf` differs from `sfDir`
+    * yields empty maps (a record without `sf` is taken as matching). */
+  private[graft] def priorRecord(json: String, sfDir: String)
+      : (Map[String, Double], Map[String, (Double, Double)]) = {
+    val root = mapper.readTree(json)
+    if (root.has("sf") && root.get("sf").asText != sfDir) (Map.empty, Map.empty)
+    else (fields(root.path("queries")).map { case (k, v) => k -> v.asDouble }.toMap,
+      fields(root.path("shuffle_mb_rw"))
+        .map { case (k, v) => k -> ((v.get(0).asDouble, v.get(1).asDouble)) }.toMap)
+  }
+
+  /** Per-query emitted pairs (`pairs`) of a committed pair census, or an
+    * empty map unless its `sf` is `sfDir`. */
+  private[graft] def pairCensus(json: String, sfDir: String): Map[String, Long] = {
+    val root = mapper.readTree(json)
+    if (root.path("sf").asText != sfDir) Map.empty
+    else fields(root.path("pairs")).map { case (k, v) => k -> v.asLong }.toMap
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", ".")
     // shuffle dirs: pre-flight sweep of dead runs' leftovers, then this
     // run's pid-stamped dir (round-12 verdict ask #5 — see
     // Verify.localShuffleDir; the 32 GiB need is the battery's worst
@@ -106,8 +153,7 @@ object Bench {
     // of RAM, so a smaller host falls back to a stamped /tmp dir
     // rather than turning a full tmpfs into confusing OOM failures)
     def readLoadavg(): String =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).trim
+      try Files.readString(Paths.get("/proc/loadavg")).trim
       catch { case _: Throwable => "" }
     // machine load BEFORE any work: a record that starts on a loaded box
     // self-declares it (round-13 verdict ask #5 — the r13 LATEST shipped
@@ -141,36 +187,16 @@ object Bench {
       .groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
     // per-query shuffle bytes (round-10 verdict ask): stage-level
-    // read + write totals from a listener, drained synchronously around
-    // each run so bytes land on the query that moved them — the scale
-    // curve can then argue in BYTES, which machine contention cannot
-    // inflate the way wall-clock can
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    // diagnostic escape hatch: measure the measurement (A/B the stage-
-    // metrics listener's own cost; never set for official records)
-    val noShufMetrics = sys.env.contains("SPARK_GRAFT_NO_SHUFFLE_METRICS")
-    if (!noShufMetrics) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    def drain(): Unit =
-      if (!noShufMetrics)
-        try org.apache.spark.GraftCoreBridge.drainListeners(spark.sparkContext)
-        catch { case _: Throwable => () }
+    // read + write totals, diffed between two drained snapshots so bytes
+    // land on the query that moved them — the scale curve can then argue
+    // in BYTES, which machine contention cannot inflate the way
+    // wall-clock can
+    val ledger = new StageLedger(spark.sparkContext)
     // (read_mb, write_mb) of each query's LAST measured run — the
     // steady-state shuffle volume (the warm run may add one-time memo
     // derivations; bytes are otherwise deterministic across runs)
     val shuffleMb = scala.collection.mutable.Map[String, (Double, Double)]()
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def run(fn: (SparkSession, String) => DataFrame,
         name: String): Unit =
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -180,19 +206,17 @@ object Bench {
     // then three measured runs, report the min: single-shot numbers carry
     // multi-second GC spikes that land on random queries (observed run to
     // run); the min is the steady-state operator cost
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def timed(fn: (SparkSession, String) => DataFrame,
         name: String): Double = {
-      drain()
-      val r0 = shufRead.get; val w0 = shufWrite.get
+      val before = ledger.snapshot()
       val t0 = System.nanoTime()
       run(fn, name)
       val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      shuffleMb(name) =
-        ((shufRead.get - r0) / 1e6, (shufWrite.get - w0) / 1e6)
+      val d = ledger.snapshot() - before
+      shuffleMb(name) = (d.shuffleReadBytes / 1e6, d.shuffleWriteBytes / 1e6)
       sec
     }
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def measure(fn: (SparkSession, String) => DataFrame,
         name: String): Double = {
       run(fn, name) // warm, untimed
       (1 to 3).map(_ => timed(fn, name)).min
@@ -204,34 +228,15 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .map { case (name, fn) => name -> measure(fn, name) }
-    // the cluster memo makes q_dedup_clusters' steady-state number a
-    // cache hit (legitimate — it models a materialized cluster table);
-    // record the cold fixpoint cost alongside so the warm number stays
-    // an honest signal (round-5 verdict). NOTE: cold rows get NO warm
-    // run — cold IS the thing measured — so the memo is cleared before
-    // each timed run and the min is a min over true cold runs.
-    def coldTimed(clear: () => Unit,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String): Double =
-      (1 to 3).map { _ => clear(); timed(fn, name) }.min
-    val cold =
-      (if (only.nonEmpty && !only("q_dedup_clusters_cold")) Nil
-       else Seq("q_dedup_clusters_cold" -> coldTimed(
-         () => graft.dedup.Dedup.clearClusterMemo(spark),
-         graft.dedup.Dedup.nearDupClusters _, "q_dedup_clusters_cold"))) ++
-      // same honesty contract for the shared persisted edge table: the
-      // four declared graph queries amortize one materialization, so
-      // record what ONE consumer pays with a cold memo alongside
-      (if (only.nonEmpty && !only("q_graph_pagerank_cold")) Nil
-       else Seq("q_graph_pagerank_cold" -> coldTimed(
-         () => graft.graph.Graph.clearEdgeMemo(spark),
-         graft.graph.Graph.pageRank _, "q_graph_pagerank_cold")))
+    // cold rows get NO warm run — cold IS the thing measured — so the
+    // memo is cleared before each timed run and the min is a min over
+    // true cold runs
+    val cold = coldRows.filter(c => only.isEmpty || only(c.name)).map { c =>
+      c.name -> (1 to 3).map { _ => c.clear(spark); timed(c.query, c.name) }.min
+    }
     // run metadata baked into every record so contention adjudication is
     // mechanical: machine load at measurement time and wall timestamp
-    val loadavg =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).trim
-      catch { case _: Throwable => "" }
+    val loadavg = readLoadavg()
     val tsMs = System.currentTimeMillis()
     // SELF-ADJUDICATION: compare each query's min against the latest
     // committed official record (BENCH_LOCAL_r*.json, highest round) and
@@ -239,49 +244,15 @@ object Bench {
     // a 50 ms query is scheduler noise, not contention). A contention-
     // poisoned run now arrives with its own suspect list instead of
     // needing a judge re-run to spot (round-8 verdict ask).
-    val (prior: Map[String, Double],
-         priorShuf: Map[String, (Double, Double)]) = try {
-      val repoDir = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "."))
-      val rx = "BENCH_LOCAL_r(\\d+)\\.json".r
-      val st = java.nio.file.Files.list(repoDir)
-      val files =
-        try st.toArray.toSeq
-          .map(_.asInstanceOf[java.nio.file.Path])
-          .flatMap { p =>
-            p.getFileName.toString match {
-              case rx(n) => Some(n.toInt -> p)
-              case _ => None
-            }
-          }
-        finally st.close()
-      files.sortBy(_._1).lastOption.map { case (_, p) =>
-        val s = java.nio.file.Files.readString(p)
-        // the committed record is an sf0.1 baseline; comparing a run at
-        // a DIFFERENT scale factor against it flags everything and the
-        // suspect list stops meaning "contention" — so only adjudicate
-        // same-sf runs
-        val sfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s)
-          .forall(_.group(1) == sfDir)
-        if (!sfOk) (Map.empty[String, Double], Map.empty[String, (Double, Double)])
-        else {
-          val kv = "\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
-          val secs = kv.findAllMatchIn(s)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          // per-query [read_mb, write_mb] from the committed record's
-          // shuffle_mb_rw map — the host-independent observable the
-          // byte-regression gate diffs against (round-11 verdict ask #5)
-          val sh = "\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*\\[([0-9.]+),([0-9.]+)\\]".r
-          val shuf = sh.findAllMatchIn(s)
-            .map(m => m.group(1) -> ((m.group(2).toDouble, m.group(3).toDouble)))
-            .toMap
-          (secs, shuf)
-        }
-      }.getOrElse(
-        (Map.empty[String, Double], Map.empty[String, (Double, Double)]))
-    } catch { case _: Throwable =>
-      (Map.empty[String, Double], Map.empty[String, (Double, Double)])
-    }
+    // (a missing or unreadable dir throws; the callers fall back to empty)
+    def committed(rx: String): Seq[java.io.File] =
+      new java.io.File(outDir).listFiles.toSeq.filter(_.getName.matches(rx))
+    val noPrior = (Map.empty[String, Double], Map.empty[String, (Double, Double)])
+    val (prior, priorShuf) =
+      try committed("BENCH_LOCAL_r[0-9]+\\.json")
+        .maxByOption(_.getName.filter(_.isDigit).toInt)
+        .fold(noPrior)(f => priorRecord(Files.readString(f.toPath), sfDir))
+      catch { case _: Throwable => noPrior }
     def suspects(rows: Seq[(String, Double)]): Seq[String] =
       suspectRows(rows, prior)
     // SELF-HEALING pass (round-13 verdict ask #5): suspect-flagged
@@ -310,10 +281,9 @@ object Bench {
     // total stays the sum over DECLARED queries only — the cold diag
     // row would double-count q_dedup_clusters
     val total = resultsH.map(_._2).sum
-    val outDir = sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", ".")
     // the deterministic full-record path (round-10 verdict ask #4): a
     // consumer that only has the stdout line follows "full_record" here
-    val latestPath = java.nio.file.Paths.get(outDir, "BENCH_FULL_LATEST.json")
+    val latestPath = Paths.get(outDir, "BENCH_FULL_LATEST.json")
       .toAbsolutePath.normalize
     def json(rows: Seq[(String, Double)]): String = {
       val qs = rows.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
@@ -345,23 +315,10 @@ object Bench {
           None
         }
       }.toMap
-    val pairPrior: Map[String, Long] = try {
-      val repoDir = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "."))
-      val st = java.nio.file.Files.list(repoDir)
-      val files =
-        try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.matches("pairs_sf[0-9]+\\.json"))
-        finally st.close()
-      files.flatMap { p =>
-        val s = java.nio.file.Files.readString(p)
-        val sfOk = "\"sf\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(s)
-          .exists(_.group(1) == sfDir)
-        if (!sfOk) Nil
-        else "\"(q_[A-Za-z0-9_]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toLong).toSeq
-      }.toMap
-    } catch { case _: Throwable => Map.empty }
+    val pairPrior: Map[String, Long] =
+      try committed("pairs_sf[0-9]+\\.json")
+        .flatMap(f => pairCensus(Files.readString(f.toPath), sfDir)).toMap
+      catch { case _: Throwable => Map.empty }
     val pairRegs = pairRegressions(pairPrior, pairCur)
     if (pairRegs.nonEmpty)
       System.err.println(s"[bench] PAIR REGRESSIONS vs committed census: " +
@@ -395,12 +352,12 @@ object Bench {
     // masquerade as a complete record.
     if (only.isEmpty) {
       val tag = sys.env.getOrElse("SPARK_GRAFT_BENCH_TAG", "run")
-      val path = java.nio.file.Paths.get(outDir, s"BENCH_FULL_${tag}_$tsMs.json")
+      val path = Paths.get(outDir, s"BENCH_FULL_${tag}_$tsMs.json")
       for ((p, opts) <- Seq(
           path -> Seq(java.nio.file.StandardOpenOption.CREATE_NEW),
           latestPath -> Seq(java.nio.file.StandardOpenOption.CREATE,
             java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)))
-        try java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"),
+        try Files.write(p, (full + "\n").getBytes("UTF-8"),
           opts: _*)
         catch { case e: Throwable =>
           System.err.println(s"[bench] could not write $p: ${e.getMessage}")
@@ -413,8 +370,7 @@ object Bench {
     // 0 so a line-oriented JSON scan finds it). The filtered dev-run
     // variant additionally carries the shuffle map (the full record
     // normally holds it).
-    println(if (only.isEmpty || noShufMetrics) json(resultsH ++ cold)
-      else full)
+    println(if (only.isEmpty) json(resultsH ++ cold) else full)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated test tables (`/root/repo/TESTDATA.md`)
@@ -30,15 +30,20 @@ object Tables {
     * an extra exchange would only add cost).
     */
   def loadSpread(spark: SparkSession, sfDir: String, name: String,
-      byCol: String): DataFrame = {
-    // EXPLICIT partition count: AQE coalesces advisory shuffles by BYTES
-    // and would fold this tiny-but-CPU-heavy relation back to one task.
-    // Skipped when the scan already yields enough splits — at real scale
-    // maxPartitionBytes provides the parallelism and the repartition
-    // would shuffle the whole table for nothing.
-    val df = load(spark, sfDir, name)
+      byCol: String): DataFrame =
+    spread(load(spark, sfDir, name), col(byCol))
+
+  /** Hash-repartition `df` on `keys` only when its scan yields fewer
+    * splits than `defaultParallelism`: at real scale maxPartitionBytes
+    * already provides the parallelism and the repartition would shuffle
+    * the whole input for nothing. The partition count is EXPLICIT: AQE
+    * coalesces advisory shuffles by BYTES and would fold a
+    * tiny-but-CPU-heavy relation back to one task.
+    */
+  def spread(df: DataFrame, keys: Column*): DataFrame = {
+    val spark = df.sparkSession
     if (df.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism) df
-    else df.repartition(spark.sessionState.conf.numShufflePartitions, col(byCol))
+    else df.repartition(spark.sessionState.conf.numShufflePartitions, keys: _*)
   }
 
   /** Normalize `events.ts` to the engine's two-column contract — exact

@@ -26,17 +26,9 @@ object Pipeline {
       k: Int = 75): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val pruned0 = docs.select(col(textCol).as("text"), col(categoryCol).as("category"))
-    // spread ONLY when the scan under-parallelizes (a single-row-group test
-    // file pins the whole tokenize+explode pipeline to one task). At real
-    // scale the scan already splits by maxPartitionBytes and this
-    // repartition would be a full-corpus shuffle bought for nothing — the
-    // cost that would dominate the whole pipeline at 100 TB.
-    val scanParts = pruned0.rdd.getNumPartitions
-    val spread =
-      if (scanParts >= spark.sparkContext.defaultParallelism) pruned0
-      else pruned0.repartition(spark.sessionState.conf.numShufflePartitions,
-        col("category"), col("text"))
+    val spread = Tables.spread(
+      docs.select(col(textCol).as("text"), col(categoryCol).as("category")),
+      col("category"), col("text"))
     // ONE action for all scalar state: collect the (tiny) per-category
     // counts, sum N driver-side, and re-ship them as the broadcast join
     // side — the reference's counters.txt round-trip without the file

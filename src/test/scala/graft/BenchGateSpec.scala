@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The byte-regression diff logic (round-11 verdict ask #5) — pure, so
-  * it gets a plain unit spec with no Spark session.
+/** The byte-regression diff logic (round-11 verdict ask #5) and the
+  * committed-record parse it diffs against — pure, so they get a plain
+  * unit spec with no Spark session.
   */
 class BenchGateSpec extends AnyFunSuite {
 
@@ -88,6 +89,34 @@ class BenchGateSpec extends AnyFunSuite {
     // a liveness probe that throws must fail SAFE (keep the dir)
     assert(Verify.staleShuffleDirs(Seq("graft-shuffle-pid7"),
       _ => throw new RuntimeException("no /proc")).isEmpty)
+  }
+
+  private def committed(name: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(name))
+
+  /** The scale-factor dir a committed record was measured at. */
+  private def sfOf(json: String): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).get("sf").asText
+
+  test("committed record parse: seconds and shuffle come from their own maps, by field") {
+    val json = committed("BENCH_LOCAL_r15.json")
+    val (secs, shuf) = Bench.priorRecord(json, sfOf(json))
+    assert(secs.size == 204 && shuf.size == 204)
+    // pair_counts follows queries in the record and carries the same
+    // names: q_containment emitted 256 pairs but ran 1.925 s
+    assert(secs("q_containment") == 1.925)
+    assert(secs("q_winnow_overlap") == 1.847)
+    assert(shuf("q_ann_topk") == ((2.17, 1.1)))
+    assert(Bench.priorRecord(json, sfOf(json) + "-other") ==
+      ((Map.empty, Map.empty)))
+  }
+
+  test("committed pair census parse: only the record for this sf counts") {
+    val json = committed("pairs_sf01.json")
+    val pairs = Bench.pairCensus(json, sfOf(json))
+    assert(pairs.size == 11)
+    assert(pairs("q_winnow_overlap") == 980L)
+    assert(Bench.pairCensus(json, sfOf(json) + "-other").isEmpty)
   }
 
   test("pid liveness: own pid is live, an impossible pid is not") {

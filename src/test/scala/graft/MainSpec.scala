@@ -31,6 +31,12 @@ class MainSpec extends SparkSpec {
     dir
   }
 
+  test("SparkEntry.entry: the flagship query returns (word, lang, chi2) rows on sf0.001") {
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq == Seq("word", "lang", "chi2"))
+    assert(df.count() > 0)
+  }
+
   test("Main.run produces counters, wordcount, chisq, and parity text") {
     val dir = fixtureDir()
 
