@@ -15,10 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `String` twice (replace, then split), re-encodes it twice, and its
   * `filter` lambda is a `CodegenFallback`, so the chain never was one
   * whole-stage span. This expression makes one pass over the UTF-8 bytes:
-  * every character of the stripped class ([[Stripped]]) or of Java's `\s`
-  * (`[ \t\n\x0B\f\r]`) ends a token, and tokens are deduplicated with a
-  * hash set in first-occurrence order — row-for-row what the chain yields
-  * (TextOpsSpec pins the equivalence against it).
+  * every character of the stripped class ([[Stripped]]) or of Python's
+  * `str.split()` whitespace ([[Whitespace]]) ends a token, and tokens are
+  * deduplicated with a hash set in first-occurrence order — row-for-row
+  * what the chain yields (TextOpsSpec pins the equivalence against it).
   *
   * Codegen emits a static call to [[ReviewTokens.compute]], the same way as
   * [[H48]] and [[ChiSqExact]].
@@ -52,14 +52,42 @@ object ReviewTokens {
     */
   val Stripped: String = "()[]{}.!?,;:+=-_\"~#@&*%€$§/\\0123456789\t'"
 
-  /** ASCII bytes that end a token: the ASCII part of [[Stripped]] plus
-    * Java's `\s`. `€` and `§`, the two non-ASCII separators, are matched
-    * on their UTF-8 sequences in [[compute]].
+  /** The characters Python's `str.split()` splits on (those for which
+    * `str.isspace` holds; reference `src/wordCountJob.py:75`). Java's `\s`
+    * is only the first six; TAB is also in [[Stripped]].
+    */
+  val Whitespace: String = " \t\n\u000B\f\r\u001C\u001D\u001E\u001F\u0085\u00A0\u1680" +
+    (0x2000 to 0x200A).map(_.toChar).mkString + "\u2028\u2029\u202F\u205F\u3000"
+
+  /** ASCII bytes that end a token: the ASCII parts of [[Stripped]] and
+    * [[Whitespace]].
     */
   private val asciiSep: Array[Boolean] = {
     val t = new Array[Boolean](128)
-    (Stripped + " \n\u000B\f\r").filter(_ < 128).foreach(c => t(c) = true)
+    (Stripped + Whitespace).filter(_ < 128).foreach(c => t(c) = true)
     t
+  }
+
+  /** The other separators (`€`, `§` and the non-ASCII [[Whitespace]]), by
+    * code point; all are below U+10000, so two or three UTF-8 bytes long.
+    */
+  private val nonAsciiSep: java.util.BitSet = {
+    val t = new java.util.BitSet()
+    (Stripped + Whitespace).filter(_ >= 128).foreach(c => t.set(c))
+    t
+  }
+
+  /** Width of the separator whose UTF-8 sequence starts at `b(i)`, 0 if the
+    * character there is none (or `b(i)` is a continuation byte).
+    */
+  private def nonAsciiSepWidth(b: Array[Byte], i: Int, n: Int): Int = {
+    val c = b(i) & 0xFF
+    if (c >= 0xC0 && c < 0xE0 && i + 1 < n) {
+      if (nonAsciiSep.get(((c & 0x1F) << 6) | (b(i + 1) & 0x3F))) 2 else 0
+    } else if (c >= 0xE0 && c < 0xF0 && i + 2 < n) {
+      val cp = ((c & 0x0F) << 12) | ((b(i + 1) & 0x3F) << 6) | (b(i + 2) & 0x3F)
+      if (nonAsciiSep.get(cp)) 3 else 0
+    } else 0
   }
 
   /** Distinct tokens of `text` in first-occurrence order.
@@ -81,17 +109,12 @@ object ReviewTokens {
     var i = 0
     while (i < n) {
       val c = b(i)
-      // width of the separator starting at i, 0 if b(i) is token content;
-      // 0xC2 and 0xE2 are lead bytes, never continuation bytes, so a match
-      // starts at a character boundary
+      // width of the separator starting at i, 0 if b(i) is token content
       val sep =
         if (c >= 0) { if (asciiSep(c)) 1 else 0 }
         else {
           nonAscii = true
-          if (c == 0xC2.toByte && i + 1 < n && b(i + 1) == 0xA7.toByte) 2 // §
-          else if (c == 0xE2.toByte && i + 2 < n && b(i + 1) == 0x82.toByte &&
-            b(i + 2) == 0xAC.toByte) 3 // €
-          else 0
+          nonAsciiSepWidth(b, i, n)
         }
       if (sep == 0) {
         if (start < 0) start = i

@@ -114,7 +114,7 @@ object RefFormats {
     * (reference `src/wordCountWrapper.py:49-50`).
     */
   def writeCounters(path: String, total: Long, cats: Map[String, Long]): Unit = {
-    val dict = cats.toSeq.sortBy(_._1)
+    val dict = cats.toSeq.sortBy(_._1)(graft.chisq.ChiSquare.codePointOrder)
       .map { case (c, n) => s"'$c': $n" }.mkString("{", ", ", "}")
     val p = java.nio.file.Paths.get(path)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)

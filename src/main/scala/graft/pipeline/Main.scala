@@ -13,10 +13,10 @@ import graft.chisq.ChiSquare
   * `src/main.sh` orchestration (reference `src/main.sh:89-191`): one Spark
   * driver program, no intermediate text materialization between "jobs"
   * (job-1's output parquet is a product artifact that the χ² stage then
-  * reuses instead of recomputing the tokenization). Four actions: the
-  * category counts, the wordcount write, ONE collect of the top-k, and the
-  * chisq/ write of those collected rows (a local relation — no scan, no
-  * shuffle); chisq.txt is formatted from the same rows.
+  * reuses instead of recomputing the tokenization). It adds four sinks to
+  * [[graft.chisq.ChiSquare.topK]]. Four actions: the category counts, the
+  * wordcount write, the top-k's ONE collect, and the chisq/ write of those
+  * rows (a local relation — no scan, no shuffle); chisq.txt formats them.
   *
   * Usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]
   *
@@ -34,10 +34,14 @@ import graft.chisq.ChiSquare
   */
 object Main {
 
+  private val usage =
+    "usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]")
-    val k = if (args.length > 3) args(3).toInt else 75
+    require(args.length >= 3, usage)
+    val k = if (args.length <= 3) 75 else args(3).toIntOption.filter(_ >= 1)
+      .getOrElse(throw new IllegalArgumentException(
+        s"k must be a positive integer, got '${args(3)}'; $usage"))
     val spark = Verify.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try run(spark, args(0), args(1), args(2), k)
     finally spark.stop()
@@ -73,28 +77,20 @@ object Main {
         pruned, col("text"), col("category"), stopwords)
       df.write.mode("overwrite").parquet(s"$outDir/wordcount")
 
-      // exact (big-int + correctly-rounded division) scoring: this CLI is
-      // the reference replacement, so its chisq artifacts reproduce the
-      // reference's Python floats bit-for-bit (ChiSquare.scoreExact). The
-      // category totals are the collected counters, broadcast as a local
-      // relation — no second aggregation of the cached reviews.
+      // exact scoring: this CLI's chisq artifacts reproduce the reference's
+      // Python floats bit-for-bit; the category totals are the collected
+      // counters, not a second aggregation of the cached reviews
+      val rows = ChiSquare.topK(
+        spark.read.parquet(s"$outDir/wordcount"), catMap.toSeq, k, exact = true)
       import spark.implicits._
-      val catTotals = catMap.toSeq.toDF("category", "n_docs")
-      val topk = ChiSquare.topKPerCategory(ChiSquare.scoreExact(
-        spark.read.parquet(s"$outDir/wordcount"), catTotals, total), k)
-      // top-k is tiny (≤ categories × k rows): ONE action collects it and
-      // the driver orders it (category, χ² desc, word) for both artifacts
-      val rows = topk.as[(String, String, Double)].collect()
-        .sortBy { case (word, cat, chi2) => (cat, -chi2, word) }
-      rows.toSeq.toDF("word", "category", "chi2").coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/chisq")
+      rows.toDF().coalesce(1).write.mode("overwrite").parquet(s"$outDir/chisq")
 
-      // parity text: groupBy keeps the (χ² desc, word) order per category
-      val byCat = rows.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map {
-        case (cat, rs) => cat -> rs.map { case (word, _, chi2) => word -> chi2 }
+      // rows are in (category, χ² desc, word) order: group them keeping it
+      val byCat = rows.map(_.category).distinct.map { cat =>
+        cat -> rows.collect { case r if r.category == cat => r.word -> r.chi2 }
       }
-      val vocab = rows.map(_._1).distinct.sorted.toSeq
-      val lines = RefFormats.formatChiSq(byCat) :+ RefFormats.formatVocabulary(vocab)
+      val lines = RefFormats.formatChiSq(byCat) :+
+        RefFormats.formatVocabulary(ChiSquare.vocabulary(rows))
       Files.createDirectories(Paths.get(outDir))
       Files.writeString(Paths.get(s"$outDir/chisq.txt"),
         lines.mkString("", "\n", "\n"))

@@ -8,15 +8,14 @@ import graft.wordcount.WordCount
 import graft.chisq.ChiSquare
 
 /** End-to-end composition of the reference's two-job pipeline (SURVEY.md §3)
-  * as ONE lazy DataFrame DAG: reviews → document-frequency word count →
-  * χ² → top-k per category → vocabulary. The reference materializes text
-  * part files between its jobs; here the only materialization is the
-  * driver-side counters collect (a few hundred bytes at any scale).
+  * over a (text, category) relation: reviews → document-frequency word count
+  * → χ² → top-k per category → vocabulary. Two actions, each a collect of ≤
+  * categories × k rows: the category counts and [[ChiSquare.topK]]'s.
   */
 object Pipeline {
 
-  /** Full pipeline over a (text, category) relation.
-    * @return (topK scored words per category, sorted union vocabulary)
+  /** The pipeline with the double χ²; its two actions run before it returns.
+    * @return (top-k rows (word, category, chi2), sorted vocabulary) as local relations
     */
   def run(
       docs: DataFrame,
@@ -29,18 +28,12 @@ object Pipeline {
     val spread = Tables.spread(
       docs.select(col(textCol).as("text"), col(categoryCol).as("category")),
       col("category"), col("text"))
-    // ONE action for all scalar state: collect the (tiny) per-category
-    // counts, sum N driver-side, and re-ship them as the broadcast join
-    // side — the reference's counters.txt round-trip without the file
+    // the reference's counters.txt round-trip without the file
     val catRows = WordCount.categoryTotals(spread, col("category"))
       .as[(String, Long)].collect()
-    val total = catRows.map(_._2).sum
-    val catTotals = catRows.toSeq.toDF("category", "n_docs")
     val df = WordCount.documentFrequency(spread, col("text"), col("category"), stopwords)
-    val scored = ChiSquare.score(df, catTotals, total)
-    val topk = ChiSquare.topKPerCategory(scored, k)
-      .orderBy(col("category"), col("chi2").desc, col("word"))
-    (topk, ChiSquare.vocabulary(topk))
+    val rows = ChiSquare.topK(df, catRows.toSeq, k, exact = false)
+    (rows.toDF(), ChiSquare.vocabulary(rows).toDF("word"))
   }
 }
 
@@ -74,9 +67,14 @@ object TextPipelineQueries {
     */
   private val duckClass = """[()\[\]{}.!?,;:+=\-_"~#@&*%€$§/\\0-9\t'']"""
 
+  /** ReviewTokens.Whitespace, Python's `str.split()` set, as an RE2 class
+    * (RE2's `\s` is only `[\t\n\f\r ]`). */
+  private val duckSpace = """[ \t\n\x0B\f\r\x1C-\x1F\x{85}\x{A0}\x{1680}""" +
+    """\x{2000}-\x{200A}\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"""
+
   private val duckTokens =
     s"""SELECT doc_id, lang, unnest(list_distinct(string_split_regex(
-        regexp_replace(lower(text), '$duckClass', ' ', 'g'), '\\s+'))) AS word
+        regexp_replace(lower(text), '$duckClass', ' ', 'g'), '$duckSpace'))) AS word
         FROM documents"""
 
   /** Per-language document frequency of every non-stopword token. */
@@ -117,11 +115,11 @@ object TextPipelineQueries {
   /** χ² top-k words per language — the reference's flagship computation
     * re-expressed over the documents table.
     */
-  def chisqTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val (topk, _) = Pipeline.run(docs, "text", "lang", stopwords.toSet, k)
-    topk.withColumnRenamed("category", "lang")
-  }
+  def chisqTopK(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    pipeline(spark, dir, k)._1.withColumnRenamed("category", "lang")
+
+  private def pipeline(spark: SparkSession, dir: String, k: Int) =
+    Pipeline.run(Tables.load(spark, dir, "documents"), "text", "lang", stopwords.toSet, k)
 
   def chisqTopKSql(k: Int = 10): String =
     s"""WITH tok AS ($duckTokens),
@@ -158,11 +156,8 @@ object TextPipelineQueries {
   /** Sorted distinct union of the per-language top-k vocabularies — the
     * reference's final output line (SURVEY.md §2 rows 25-26).
     */
-  def vocabulary(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val (topk, vocab) = Pipeline.run(docs, "text", "lang", stopwords.toSet, k)
-    vocab
-  }
+  def vocabulary(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
+    pipeline(spark, dir, k)._2
 
   def vocabularySql(k: Int = 10): String = {
     val topk = chisqTopKSql(k)

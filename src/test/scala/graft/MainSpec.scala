@@ -86,6 +86,45 @@ class MainSpec extends SparkSpec {
     assert(topk.as[(String, String, Double)].collect().toSeq == listed)
   }
 
+  /** A file of the committed byte-parity fixture, written with its expected
+    * outputs by `tools/parity_fixture.py` (the reference's rules in Python). */
+  private def parity(name: String): String =
+    Paths.get(getClass.getResource(s"/parity/$name").toURI).toString
+
+  private def assertSameBytes(got: String, want: String): Unit = {
+    val (g, w) = (Files.readAllBytes(Paths.get(got)), Files.readAllBytes(Paths.get(want)))
+    if (!java.util.Arrays.equals(g, w)) {
+      val gl = new String(g, "UTF-8").split("\n", -1)
+      val wl = new String(w, "UTF-8").split("\n", -1)
+      val i = gl.indices.find(i => i >= wl.length || gl(i) != wl(i)).getOrElse(gl.length)
+      fail(s"$got differs from $want at line ${i + 1}:\n" +
+        s"  got:  ${gl.lift(i).getOrElse("<end>")}\n  want: ${wl.lift(i).getOrElse("<end>")}")
+    }
+  }
+
+  // k=75 cuts Books inside a tie group, k=2 cuts Digital_Music inside one
+  for ((k, expected) <- Seq(75 -> "expected_chisq.txt", 2 -> "expected_chisq_k2.txt"))
+    test(s"Main.run at k=$k: counters.txt and chisq.txt byte-equal the reference computation") {
+      val out = Files.createTempDirectory("graft_parity").toString
+      Main.run(spark, parity("reviews.json"), parity("stopwords.txt"), out, k)
+      assertSameBytes(s"$out/counters.txt", parity("expected_counters.txt"))
+      assertSameBytes(s"$out/chisq.txt", parity(expected))
+    }
+
+  test("Main.main rejects a k that is not a positive integer, naming k, before any session") {
+    for (bad <- Seq("x", "0", "-3", "7.5")) {
+      val e = intercept[IllegalArgumentException](
+        Main.main(Array("reviews.json", "stopwords.txt", "out", bad)))
+      assert(e.getMessage.contains("k must be a positive integer") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    // Main.main stops the session it gets; the shared one is untouched
+    assert(!spark.sparkContext.isStopped)
+    val e = intercept[IllegalArgumentException](
+      graft.chisq.ChiSquare.topK(spark.emptyDataFrame, Seq("c" -> 1L), 0, exact = false))
+    assert(e.getMessage.contains("k must be a positive integer"), e.getMessage)
+  }
+
   test("Tables.reviews without counters: bare count() is the parsed-line count") {
     // a count() prunes every output column; the scan must still read a
     // real column next to _corrupt or Spark refuses the query

@@ -53,6 +53,42 @@ class PlanAuditSpec extends SparkSpec {
       s"no exchange between the two WindowGroupLimits: $plan")
   }
 
+  test("ChiSquare.topKPerCategory: WindowGroupLimit Partial below the category exchange, Final above") {
+    // the χ² top-k's per-category window is bounded the same way as
+    // q_sql_window: the map side keeps each task's top-k per category
+    // before the hashpartitioning(category) exchange, so the exchange
+    // carries ≤ k·|categories| rows per task instead of every scored word
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+    import graft.chisq.ChiSquare
+    import spark.implicits._
+    val df = (for (w <- 0 until 300; c <- 0 until 4)
+      yield (s"w$w", s"c$c", 1L + (w * 7 + c) % 13)).toDF("word", "category", "df_count")
+    val cats = (0 until 4).map(c => (s"c$c", 500L)).toDF("category", "n_docs")
+    val topk = ChiSquare.topKPerCategory(ChiSquare.score(df, cats, 2000L), 5)
+    assert(topk.collect().length == 20)
+    object Walk extends AdaptiveSparkPlanHelper
+    def find(p: SparkPlan)(pf: PartialFunction[SparkPlan, SparkPlan]): Seq[SparkPlan] =
+      Walk.collect(p)(pf)
+    val plan = topk.queryExecution.executedPlan
+    val finals = find(plan) { case w: WindowGroupLimitExec if w.mode == Final => w }
+    assert(finals.size == 1, s"expected one Final WindowGroupLimit:\n$plan")
+    val exchanges = find(finals.head) {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("category")
+        case _ => false
+      }) => e
+    }
+    assert(exchanges.size == 1, s"no hashpartitioning(category) exchange below Final:\n$plan")
+    val partials = find(exchanges.head) {
+      case w: WindowGroupLimitExec if w.mode == Partial => w
+    }
+    assert(partials.size == 1, s"no Partial WindowGroupLimit below the exchange:\n$plan")
+  }
+
   // BNLJ is acceptable ONLY against a broadcast single-row side (a
   // scalar riding along every row) — the list below names each such
   // query with its rationale, and the companion structural test proves
@@ -245,12 +281,6 @@ class PlanAuditSpec extends SparkSpec {
       // group size doesn't
       "l_partkey", "ps_partkey")
     val windowAllow: Map[String, String] = Map(
-      "q_chisq_topk" ->
-        ("reference-parity contract: top-75 per category over the 22 " +
-          "fixed review categories (chiSquaredJob.py:96-127); the scale " +
-          "twin is the bounded-buffer TopK aggregator (q_topk_agg)"),
-      "q_vocabulary" ->
-        "same category window, composed from the chisq top-k stage",
       "q_window_topk" ->
         ("the window FORM of per-group top-k, kept deliberately beside " +
           "its fixed-memory aggregator twin q_topk_agg"),

@@ -18,10 +18,13 @@ class TextOpsSpec extends SparkSpec {
   /** Reference: the stripped class as a Java regex, each match replaced by
     * a space, then Python `str.split()` semantics and per-review dedup. */
   private val strippedClass = """[()\[\]{}.!?,;:+=\-_"~#@&*%€$§/\\0-9\t']"""
+  /** Python's `str.isspace` set: Java's `\s` lacks all but the first six. */
+  private val pythonSpace = """[ \t\n\x{0B}\f\r\x{1C}-\x{1F}\x{85}\x{A0}\x{1680}""" +
+    """\x{2000}-\x{200A}\x{2028}\x{2029}\x{202F}\x{205F}\x{3000}]+"""
   private def cleanChars(c: Column): Column =
     regexp_replace(lower(c), strippedClass, " ")
   private def distinctTokens(c: Column): Column =
-    array_distinct(filter(split(c, "\\s+"), w => length(w) > lit(0)))
+    array_distinct(filter(split(c, pythonSpace), w => length(w) > lit(0)))
   /** The chain without case folding: the reference for the bare kernel. */
   private def chainNoLower(c: Column): Column =
     distinctTokens(regexp_replace(c, strippedClass, " "))
@@ -121,7 +124,9 @@ class TextOpsSpec extends SparkSpec {
       ReviewTokens.Stripped.map(_.toString) ++              // incl. € and §
         Seq("<", ">", "|", "^") ++                          // kept
         Seq(" ", "\t", "\n", "\u000B", "\f", "\r") ++       // Java \s
-        Seq("\u0085", "\u00A0", "\u3000") ++                // NOT split
+        Seq("\u001C", "\u001F", "\u0085", "\u00A0", "\u1680", "\u2000",
+          "\u200A", "\u2028", "\u2029", "\u202F", "\u205F", "\u3000") ++ // Python's too
+        Seq("\u200B", "\u180E", "\u2060", "\uFEFF", "\u2030") ++ // NOT split
         Seq("\uD83D\uDE00", "\uD835\uDD38") ++              // non-BMP
         Seq("\u0130", "\u03A3", "\u212A", "\u00DF") ++      // İ Σ K ß
         Seq("a", "b", "z", "A", "Q", "é", "ü", "日", "本", "\u0000")
