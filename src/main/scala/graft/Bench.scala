@@ -3,6 +3,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.Materialize
 import graft.tools.StageLedger
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":…,"queries":{…}}. Uses the `noop` sink so
@@ -100,19 +101,19 @@ object Bench {
     (out, healed.toSeq)
   }
 
-  /** A diagnostic row beside the declared battery: `query` timed with its
-    * memo cleared (`clear`) before every run. */
-  private[graft] final case class ColdRow(name: String,
-      clear: SparkSession => Unit, query: (SparkSession, String) => DataFrame)
+  /** A diagnostic row beside the declared battery: `query` timed with the
+    * session's [[Materialize.memo]] entries of `memoKind` cleared first. */
+  private[graft] final case class ColdRow(name: String, memoKind: String,
+      query: (SparkSession, String) => DataFrame)
 
   /** The cluster memo makes q_dedup_clusters' steady-state number a cache
     * hit (it models a materialized cluster table), and the four declared
     * graph queries amortize one persisted edge table; these rows record
     * what ONE consumer pays cold, so the warm numbers stay honest. */
   private[graft] val coldRows: Seq[ColdRow] = Seq(
-    ColdRow("q_dedup_clusters_cold", graft.dedup.Dedup.clearClusterMemo,
+    ColdRow("q_dedup_clusters_cold", graft.dedup.Dedup.ClusterMemo,
       graft.dedup.Dedup.nearDupClusters),
-    ColdRow("q_graph_pagerank_cold", graft.graph.Graph.clearEdgeMemo,
+    ColdRow("q_graph_pagerank_cold", graft.graph.Graph.EdgeMemo,
       graft.graph.Graph.pageRank))
 
   private val mapper = new ObjectMapper
@@ -232,7 +233,8 @@ object Bench {
     // memo is cleared before each timed run and the min is a min over
     // true cold runs
     val cold = coldRows.filter(c => only.isEmpty || only(c.name)).map { c =>
-      c.name -> (1 to 3).map { _ => c.clear(spark); timed(c.query, c.name) }.min
+      c.name -> (1 to 3).map { _ =>
+        Materialize.clear(spark, c.memoKind); timed(c.query, c.name) }.min
     }
     // run metadata baked into every record so contention adjudication is
     // mechanical: machine load at measurement time and wall timestamp

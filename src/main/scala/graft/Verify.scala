@@ -150,6 +150,10 @@ object Verify {
       // parallelismFirst/advisory sizing govern exactly as before.
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
+      // under a checkpoint dir, delete a reliable checkpoint's files once
+      // nothing references its RDD (an evicted memo entry, a dropped
+      // barrier frame); without one this changes nothing
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Registry.ensure(spark)

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.model.{Materialize, Tables}
 import graft.functions.{Hashing, Registry}
 import graft.functions.Hashing.{P, duckH48, duckPerm}
 
@@ -566,18 +566,6 @@ object Dedup {
   def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
     jaccardPairsFrom(Tables.loadSpread(spark, dir, "documents", "doc_id"))
 
-  /** Eagerly materialize an intermediate that several downstream branches
-    * consume (guide §3.3): reliable checkpoint when the session has a
-    * checkpoint dir (the cluster setting — survives executor loss),
-    * localCheckpoint otherwise — the same convention as the cluster
-    * fixpoint and the streaming gate. Construction-time work, timed by
-    * the bench; recomputed from the parquet inputs on every invocation.
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
   /** Budget (in ids) above which [[keyedPairIntersections]] withholds the
     * broadcast hint on the involved-id semi-cut and lets the join shuffle:
     * 20M longs ≈ 500 MB as a built LongHashedRelation — comfortably real
@@ -655,7 +643,7 @@ object Dedup {
     // branches) computes each stage exactly once; every bench/oracle
     // invocation still computes from the parquet inputs — this is
     // in-query materialization, the fixpoint's convention, not caching.
-    val posts = materialize(keyed.groupBy("h")
+    val posts = Materialize.eager(keyed.groupBy("h")
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .where(size(col("ds")) <= maxDf)) // stop-feature cut
     // (doc_id, h, df) with df free as the posting length — no join
@@ -664,7 +652,7 @@ object Dedup {
     // ONE doc-side aggregate: rarity-sorted (df, h) feature list +
     // retained size — sliced for the prefix, read again for the
     // verification arrays
-    val docs = materialize(kept.groupBy("doc_id")
+    val docs = Materialize.eager(kept.groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("fh"),
         count(lit(1)).as("sz")))
     // prefix length sz − ceil(t·sz) + 1 in EXACT integer arithmetic:
@@ -675,7 +663,7 @@ object Dedup {
     val prefix = docs
       .select(col("doc_id"), explode(slice(col("fh"), lit(1), prefLen)).as("f"))
       .select(col("doc_id"), col("f.h").as("h"))
-    val cand = materialize(prefix.join(posts.where(size(col("ds")) > 1), "h")
+    val cand = Materialize.eager(prefix.join(posts.where(size(col("ds")) > 1), "h")
       .select(col("doc_id").as("pa"), explode(col("ds")).as("pb"))
       .where(col("pa") =!= col("pb"))
       .select(least(col("pa"), col("pb")).as("doc_a"),
@@ -693,7 +681,7 @@ object Dedup {
     // materialized: BOTH vsets attaches consume it (before this the
     // reduce-side distinct ran twice), and the exact row count is the
     // size guard below
-    val involved = materialize(cand
+    val involved = Materialize.eager(cand
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct())
     // SIZE-GUARDED broadcast (round 16): |involved| is a free count over
@@ -749,7 +737,7 @@ object Dedup {
     * both the sample and the shuffle read cached blocks.
     */
   private def pairVerified(pairs: DataFrame): DataFrame =
-    materialize(pairs).orderBy("doc_a", "doc_b")
+    Materialize.eager(pairs).orderBy("doc_a", "doc_b")
 
   /** CONTAINMENT near-dups — the asymmetric overlap Jaccard misses: the
     * fraction of the SMALLER document's retained shingles that the other
@@ -1181,97 +1169,24 @@ object Dedup {
     * transitive closure (A≈B, B≈C ⇒ drop two of {A,B,C} even when A,C
     * were never compared). Output: (doc_id, canonical_id), one row per
     * clustered doc; unclustered docs are implicitly their own canonical.
-    */
-  /** The cluster fixpoint is EAGER (the iteration runs actions) and its
+    *
+    * The cluster fixpoint is EAGER (the iteration runs actions) and its
     * result is already checkpoint-materialized, so same-session
     * consumers (clusters / survivors / leakage-proof split — a curation
     * pipeline touches all three) share one computation instead of each
     * re-running the identical jaccard-pair + label-propagation plan:
-    * the labels are a deterministic pure function of the input FILES,
-    * and the cached frame is just a handle to the final checkpointed
-    * RDD (tiny — near-dup members only).
-    *
-    * Keyed per (session, dir, file fingerprint): the fingerprint (name,
-    * length, mtime of every part file — one driver-side listing) makes
-    * a rewrite or append under the same path a cache MISS, so stale
-    * labels are never served; superseded fingerprints and entries of
-    * stopped sessions are evicted on the next access. The fixpoint runs
-    * OUTSIDE any map lock (a concurrent duplicate compute is harmless —
-    * both produce identical labels; `putIfAbsent` keeps the first).
-    * Note the fault-tolerance window: without a configured checkpoint
-    * dir the labels live in `localCheckpoint` executor blocks, which an
-    * executor loss invalidates — a long session in that mode recomputes
-    * on the resulting failure, same as any localCheckpoint consumer.
+    * the labels are a deterministic pure function of the documents
+    * files, and the shared frame is just a handle to the final
+    * checkpointed RDD (tiny — near-dup members only). Shared through
+    * [[graft.model.Materialize.memo]] under [[ClusterMemo]].
     */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-
-  /** Hard ceiling on memo entries PER SESSION: a long-lived session
-    * sweeping many distinct dirs must not accumulate one pinned
-    * checkpoint per dir forever. Past the cap the session's other
-    * entries are dropped wholesale (the ContextCleaner reclaims their
-    * blocks once callers release the frames) — a rare full recompute
-    * beats an unbounded block leak.
-    */
-  private val ClusterCachePerSession = 8
-
-  /** Fingerprint of the dir's documents table (driver-side listing).
-    * Order-sensitive 64-bit fold over the NAME-SORTED file list (31·acc
-    * + attr per attribute), prefixed with file count and total bytes: a
-    * commutative sum of 32-bit hashes would let permuted or mutually
-    * cancelling (name, len, mtime) edits collide and serve stale labels.
-    * mtime granularity is still the filesystem's — an in-place same-length
-    * rewrite inside one tick is indistinguishable, which is the usual
-    * contract of mtime-based caches (make/rsync share it).
-    */
-  private[graft] def docsFingerprint(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val files = fs.listStatus(p).sortBy(_.getPath.getName)
-      var acc = 1125899906842597L // large prime seed
-      def mix(h: Long): Unit = acc = 31L * acc + h
-      mix(files.length.toLong)
-      mix(files.map(_.getLen).sum)
-      files.foreach { st =>
-        mix(st.getPath.getName.hashCode.toLong)
-        mix(st.getLen)
-        mix(st.getModificationTime)
-      }
-      acc
-    }
-  }
-
-  /** Drop this session's memo entries — lets the bench record the COLD
-    * fixpoint cost next to the warm memo hit (the warm number alone
-    * stops being a signal, round-5 verdict).
-    */
-  private[graft] def clearClusterMemo(spark: SparkSession): Unit =
-    clusterCache.keySet.removeIf {
-      case (s, _, _) => (s eq spark) || s.sparkContext.isStopped
+  def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
+    Materialize.memo(spark, ClusterMemo, dir, "documents") {
+      clustersFromPairs(jaccardPairs(spark, dir).select("doc_a", "doc_b"))
     }
 
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame = {
-    clusterCache.keySet.removeIf { case (s, _, _) => s.sparkContext.isStopped }
-    val fp = docsFingerprint(spark, dir)
-    val key = (spark, dir, fp)
-    val hit = clusterCache.get(key)
-    if (hit != null) hit
-    else {
-      val labels =
-        clustersFromPairs(jaccardPairs(spark, dir).select("doc_a", "doc_b"))
-      clusterCache.keySet.removeIf { case (s, d, f) =>
-        (s eq spark) && d == dir && f != fp // superseded input version
-      }
-      val sessionEntries =
-        clusterCache.keySet.stream.filter(_._1 eq spark).count()
-      if (sessionEntries >= ClusterCachePerSession)
-        clusterCache.keySet.removeIf { case (s, _, _) => s eq spark }
-      val prev = clusterCache.putIfAbsent(key, labels)
-      if (prev != null) prev else labels
-    }
-  }
+  /** Memo kind of [[nearDupClusters]]' labels. */
+  val ClusterMemo = "dedup.clusters"
 
   /** Iterative min-label propagation with ADAPTIVE pointer jumping until
     * fixpoint. Each round every vertex takes the min root over itself and
@@ -1291,10 +1206,10 @@ object Dedup {
     * Each round's labels are CHECKPOINTED, not merely persisted: the jump
     * join reads the round's plan twice, so without lineage truncation the
     * Catalyst tree doubles per round — exponential plan growth that OOMs
-    * the driver long before the data does. Reliable checkpoint when the
-    * session has a checkpoint dir (the cluster setting, survives executor
-    * loss); localCheckpoint otherwise. The previous round unpersists after
-    * the convergence check, so at most two rounds of labels are resident.
+    * the driver long before the data does ([[graft.model.Materialize.eager]]:
+    * reliable with a checkpoint dir, local otherwise). The previous round
+    * unpersists after the convergence check, so at most two rounds of
+    * labels are resident.
     */
   def clustersFromPairs(pairs: DataFrame): DataFrame =
     clustersFromPairsCounted(pairs)._1
@@ -1336,12 +1251,8 @@ object Dedup {
       // metrics (listener semantics are version-sensitive), the explicit
       // aggregate is still the source of truth.
       val obs = new org.apache.spark.sql.Observation()
-      val observed = stepped.observe(obs,
-        sum(col("root").cast("decimal(38,0)")).as("s"))
-      val next =
-        if (stepped.sparkSession.sparkContext.getCheckpointDir.isDefined)
-          observed.checkpoint(eager = true)
-        else observed.localCheckpoint(eager = true)
+      val next = Materialize.eager(stepped.observe(obs,
+        sum(col("root").cast("decimal(38,0)")).as("s")))
       val curSum = {
         // the listener reporting observed metrics fires asynchronously
         // just after the eager checkpoint returns — poll briefly, then

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.model.{Materialize, Tables}
 
 /** Link-graph analytics over the corpus — the crawl-frontier /
   * source-ranking stage of a web-scale curation pipeline (a crawler
@@ -52,94 +52,32 @@ object Graph {
     * PERSIST-ONCE: the edge list is consumed by three declared operators
     * (PageRank × [[Iters]] rounds, HITS × 2·[[Iters]] aggregates,
     * triangles twice for canon + orientation) — lesson 25's N-consumers
-    * rule, applied via the same (session, dir, file-fingerprint) memo as
-    * [[graft.dedup.Dedup.nearDupClusters]]: the first caller
-    * materializes the ~16-byte-row frame with an eager localCheckpoint,
-    * later callers (and later rounds of the same plan) scan the stored
-    * blocks instead of re-deriving the distinct. localCheckpoint rather
-    * than `.persist`: measured head-to-head at sf0.1, the columnar
-    * cache's per-scan overhead (InMemoryTableScan + nested-AQE
-    * bookkeeping at every one of the plan's many edge reads) made every
-    * graph query 2-3× SLOWER than recomputing, while the checkpoint's
-    * row-block scans beat both — and it also truncates lineage, the
-    * cluster-memo discipline. Fingerprint keying means an input rewrite
-    * is a miss, never stale edges; dropping a map entry releases the
-    * last RDD reference so the ContextCleaner reclaims the blocks. Same
-    * fault-tolerance window as every localCheckpoint consumer: an
-    * executor loss invalidates blocks and the job recomputes on failure.
+    * rule, applied via [[graft.model.Materialize.memo]] under [[EdgeMemo]]:
+    * the first caller materializes the ~16-byte-row frame with
+    * [[graft.model.Materialize.eager]], later callers (and later rounds of
+    * the same plan) scan the stored blocks instead of re-deriving the
+    * distinct. A checkpoint rather than `.persist`: measured head-to-head
+    * at sf0.1, the columnar cache's per-scan overhead (InMemoryTableScan +
+    * nested-AQE bookkeeping at every one of the plan's many edge reads)
+    * made every graph query 2-3× SLOWER than recomputing, while the
+    * checkpoint's row-block scans beat both — and it also truncates
+    * lineage.
     */
-  def linkEdges(spark: SparkSession, dir: String): DataFrame = {
-    evictEdges { case (s, _, _) => s.sparkContext.isStopped }
-    val fp = graft.dedup.Dedup.docsFingerprint(spark, dir)
-    val key = (spark, dir, fp)
-    val hit = edgeCache.get(key)
-    if (hit != null) hit
-    else {
-      // eager eviction on session shutdown (round-10, ADVICE r9): a
-      // long-lived multi-session process must not retain a stopped
-      // session's SparkSession object and checkpoint block references
-      // until some LATER linkEdges call happens to sweep them — an
-      // application-end listener drops them the moment the session dies
-      if (listenerInstalled.add(spark.sparkContext))
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                : Unit = {
-              evictEdges { case (s, _, _) => s.sparkContext.isStopped }
-              listenerInstalled.removeIf(_.isStopped)
-            }
-          })
+  def linkEdges(spark: SparkSession, dir: String): DataFrame =
+    Materialize.memo(spark, EdgeMemo, dir, "documents") {
       val ids = Tables.load(spark, dir, "documents").select(col("doc_id"))
       val n = ids.agg(count(lit(1)).as("n"))
-      val edges = ids.crossJoin(broadcast(n))
+      Materialize.eager(ids.crossJoin(broadcast(n))
         .select(col("doc_id").as("src"), col("n"),
           explode(sequence(lit(0), lit(Fanout - 1))).as("j"))
         .select(col("src"),
           expr("(src * 31 + j * 1009 + 7) % n").as("dst"))
         .where(col("src") =!= col("dst"))
-        .distinct()
-        .localCheckpoint()
-      evictEdges { case (s, d, f) => (s eq spark) && d == dir && f != fp }
-      val sessionEntries =
-        edgeCache.keySet.stream.filter(_._1 eq spark).count()
-      if (sessionEntries >= EdgeCachePerSession)
-        evictEdges { case (s, _, _) => s eq spark }
-      val prev = edgeCache.putIfAbsent(key, edges)
-      if (prev != null) prev else edges
+        .distinct())
     }
-  }
 
-  /** Memoized persisted edge tables, keyed like the Dedup cluster memo:
-    * (session, dir, documents-file fingerprint). Same per-session cap
-    * rationale — a dir-sweeping session must not pin blocks forever.
-    */
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-
-  // contexts that already carry the application-end eviction listener
-  // (one listener per context; entries self-clean when the listener
-  // fires and sweeps stopped contexts)
-  private val listenerInstalled = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[org.apache.spark.SparkContext]()
-
-  private val EdgeCachePerSession = 8
-
-  /** Eviction = dropping the map entry: the checkpointed blocks are
-    * pinned only by the RDD reference the entry holds, so the
-    * ContextCleaner reclaims them once callers release the frame — the
-    * cluster-memo contract exactly.
-    */
-  private def evictEdges(
-      pred: ((SparkSession, String, Long)) => Boolean): Unit =
-    edgeCache.keySet.removeIf(k => pred(k))
-
-  /** Drop this session's edge memo — the bench uses it to record the
-    * cold derivation cost next to the warm shared-table number (the same
-    * honesty contract as [[graft.dedup.Dedup.clearClusterMemo]]).
-    */
-  private[graft] def clearEdgeMemo(spark: SparkSession): Unit =
-    evictEdges { case (s, _, _) => (s eq spark) || s.sparkContext.isStopped }
+  /** Memo kind of [[linkEdges]]' edge table. */
+  val EdgeMemo = "graph.edges"
 
   /** Host/page authority by PageRank, [[Iters]] unrolled rounds, damping
     * 0.85, all-integer micro-unit arithmetic (see object doc). Per round:

@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Tables
+import graft.model.{Materialize, Tables}
 import graft.dedup.Dedup
 import graft.functions.{Hashing, Registry}
 
@@ -540,60 +540,17 @@ object Similarity {
   def lshNearDupPairs(spark: SparkSession, dir: String): DataFrame =
     lshNearDupPairsWith(spark, dir, lshPlanesFor(embedCount(spark, dir)))
 
-  /** Corpus row count for the adaptive-width contract, memoized on the
-    * (session, dir, file-fingerprint) key the cluster/edge memos use: n
-    * is a pure function of the stored table, so the count job runs once
-    * per table STATE — a deployment reads n from its index metadata and
-    * never re-counts; the fingerprint (names, lengths, mtimes — the
-    * make/rsync contract) turns any rewrite into a miss, never a stale
-    * width. The count itself is parquet-metadata-only (row-group
-    * counts), but even that is a per-query job the steady state
+  /** Corpus row count for the adaptive-width contract, shared through
+    * [[graft.model.Materialize.memo]]: n is a pure function of the stored
+    * table, so the count job runs once per table STATE, as a deployment
+    * reads n from its index metadata. The count is parquet-metadata-only
+    * (row-group counts), but even that is a per-query job the steady state
     * shouldn't pay (measured ~0.3 s/query at sf0.1).
     */
-  private def embedCount(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var acc = 1125899906842597L
-    def mix(h: Long): Unit = acc = 31L * acc + h
-    // RECURSIVE fingerprint (round-10 ADVICE): a nested/partitioned
-    // embeddings layout would otherwise fingerprint only the top level
-    // and a partition-file rewrite could serve a stale width
-    def walk(path: org.apache.hadoop.fs.Path): Unit = {
-      val files = fs.listStatus(path).sortBy(_.getPath.getName)
-      mix(files.length.toLong)
-      files.foreach { st =>
-        mix(st.getPath.getName.hashCode.toLong)
-        if (st.isDirectory) walk(st.getPath)
-        else { mix(st.getLen); mix(st.getModificationTime) }
-      }
+  private[graft] def embedCount(spark: SparkSession, dir: String): Long =
+    Materialize.memo(spark, "similarity.embed_count", dir, "embeddings") {
+      Tables.load(spark, dir, "embeddings").count()
     }
-    if (fs.exists(p)) walk(p)
-    countMemo.keySet.removeIf(k =>
-      k._1.sparkContext.isStopped ||
-        ((k._1 eq spark) && k._2 == dir && k._3 != acc))
-    // eager eviction on session shutdown (round-10 ADVICE, the
-    // Graph.linkEdges pattern): entries of a stopped session must not
-    // wait for some LATER call on another session to be swept
-    if (countListenerInstalled.add(spark.sparkContext))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = {
-            countMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-            countListenerInstalled.removeIf(_.isStopped)
-          }
-        })
-    countMemo.computeIfAbsent((spark, dir, acc),
-      _ => java.lang.Long.valueOf(
-        Tables.load(spark, dir, "embeddings").count())).longValue()
-  }
-
-  private val countMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), java.lang.Long]()
-
-  private val countListenerInstalled = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[org.apache.spark.SparkContext]()
 
   /** [[lshNearDupPairs]] at an explicit signature width — the scale
     * path ([[lshPlanesFor]]) and the floor-width form share this one

@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{Bench, SparkEntry, Verify}
+import graft.model.Materialize
 
 /** Work counters, cumulative or of one stage (jobs 0, stages 1); the
   * difference of two snapshots is the work done between them. Fields
@@ -187,7 +188,7 @@ object Profile {
       System.err.flush()
       try {
         val p = cold.get(name) match {
-          case Some(c) => measure(spark, c.query, sfDir, c.clear)
+          case Some(c) => measure(spark, c.query, sfDir, Materialize.clear(_, c.memoKind))
           case None => measure(spark, declared(name), sfDir)
         }
         println(report(name, p))

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.graph.Graph
+import graft.model.Materialize
+import graft.similarity.Similarity
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -516,6 +519,97 @@ class DedupSpec extends SparkSpec {
     val second = Dedup.nearDupClusters(spark, dir)
       .as[(Long, Long)].collect().toSet
     assert(second == Set((3L, 3L), (4L, 3L)), s"stale cache served: $second")
+    // the same memo serves the link graph: a rewrite with a different N
+    // must re-derive the edges (every dst is mod N)
+    def edges(n: Long) = (for {
+      src <- 0L until n; j <- 0 until Graph.Fanout
+      dst = (src * 31 + j * 1009 + 7) % n if dst != src
+    } yield (src, dst)).toSet
+    writeDocs((0L until 5L).map(i => i -> s"doc $i"), into = dir)
+    assert(Graph.linkEdges(spark, dir).as[(Long, Long)].collect().toSet == edges(5))
+    writeDocs((0L until 7L).map(i => i -> s"doc $i"), into = dir)
+    assert(Graph.linkEdges(spark, dir).as[(Long, Long)].collect().toSet == edges(7))
+    // ... and the embedding row count
+    def writeEmbeddings(n: Int): Unit =
+      (1 to n).map(i => (i.toLong, Array(i.toFloat), 0)).toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    writeEmbeddings(3)
+    assert(Similarity.embedCount(spark, dir) == 3L)
+    writeEmbeddings(5)
+    assert(Similarity.embedCount(spark, dir) == 5L)
+    // clearing one kind leaves the others' entries: a hit returns the very
+    // frame the memo holds, a recompute a new one
+    val edgesHeld = Graph.linkEdges(spark, dir)
+    val labelsHeld = Dedup.nearDupClusters(spark, dir)
+    assert(Graph.linkEdges(spark, dir) eq edgesHeld)
+    Materialize.clear(spark, Dedup.ClusterMemo)
+    assert(!(Dedup.nearDupClusters(spark, dir) eq labelsHeld))
+    assert(Graph.linkEdges(spark, dir) eq edgesHeld)
+    // the ninth distinct dir of one kind drops that session's older
+    // entries of the kind, and only of that kind
+    var computed = 0
+    def probe(d: String): String =
+      Materialize.memo(spark, "spec.probe", d, "documents") { computed += 1; d }
+    val dirs = (0 to Materialize.PerSessionKind).map(i => s"$dir/absent$i")
+    dirs.foreach(probe)
+    probe(dirs.last)
+    assert(computed == dirs.size, "the newest entry must still be held")
+    probe(dirs.head)
+    assert(computed == dirs.size + 1, "the oldest entry must be evicted")
+    assert(Graph.linkEdges(spark, dir) eq edgesHeld)
+  }
+
+  test("cluster memo: a part file rewritten in place in a partition dir is a miss") {
+    import org.apache.hadoop.fs.Path
+    val text = (1 to 30).map(i => s"w$i").mkString(" ")
+    def docs(rows: (Long, String, Int)*) = rows.toDF("doc_id", "text", "part")
+      .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
+      .withColumn("n_chars", length(col("text")))
+    val dir = java.nio.file.Files.createTempDirectory("nestedfix").toString
+    docs((1L, text, 0), (2L, text, 0), (3L, "x y z totally other words here", 1))
+      .repartition(1).write.partitionBy("part").parquet(s"$dir/documents.parquet")
+    val first = Dedup.nearDupClusters(spark, dir).as[(Long, Long)].collect().toSet
+    assert(first == Set((1L, 1L), (2L, 1L)), s"unexpected clusters: $first")
+    // part=1's one file, truncated and rewritten through the checksummed
+    // FileSystem (its .crc follows) so that doc 3 copies docs 1 and 2:
+    // no directory entry changes, so no directory's mtime does
+    val staged = java.nio.file.Files.createTempDirectory("nestedpart").toString
+    docs((3L, text, 1)).drop("part").coalesce(1)
+      .write.mode("overwrite").parquet(staged)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def partFile(d: String): Path = fs.listStatus(new Path(d)).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head
+    val dirs = Seq(s"$dir/documents.parquet", s"$dir/documents.parquet/part=1")
+      .map(new Path(_))
+    def dirMtimes = dirs.map(fs.getFileStatus(_).getModificationTime)
+    val mtimesBefore = dirMtimes
+    val bytes = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(partFile(staged).toUri))
+    val out = fs.create(partFile(s"$dir/documents.parquet/part=1"), true)
+    try out.write(bytes) finally out.close()
+    assert(dirMtimes == mtimesBefore, "fixture must leave directory mtimes alone")
+    val second = Dedup.nearDupClusters(spark, dir).as[(Long, Long)].collect().toSet
+    assert(second == Set((1L, 1L), (2L, 1L), (3L, 1L)), s"stale cache served: $second")
+  }
+
+  test("reliable checkpoint branch: same clusters as localCheckpoint, files in the dir") {
+    // a chain: each doc shifts the last one's words by 4 (jaccard 0.81),
+    // docs two apart fall below 0.8, so the labels need several rounds
+    val dir = writeDocs((0 until 4).map(k =>
+      (k + 1).toLong -> (1 + 4 * k to 40 + 4 * k).map(i => s"w$i").mkString(" ")) :+
+      (9L -> "p q r unrelated solitary words"))
+    def run() = Dedup.clustersFromPairs(Dedup.jaccardPairsFrom(
+      graft.model.Tables.load(spark, dir, "documents")).select("doc_a", "doc_b"))
+      .as[(Long, Long)].collect().toSet
+    val local = run()
+    assert(local == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L)), s"fixture drifted: $local")
+    val ckpt = java.nio.file.Files.createTempDirectory("ckptdir")
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    try {
+      assert(run() == local)
+      assert(java.nio.file.Files.walk(ckpt)
+        .anyMatch(java.nio.file.Files.isRegularFile(_)), "no reliable checkpoint written")
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("containment catches doc-in-doc inclusion that jaccard misses") {
