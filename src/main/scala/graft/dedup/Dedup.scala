@@ -1170,14 +1170,15 @@ object Dedup {
     * were never compared). Output: (doc_id, canonical_id), one row per
     * clustered doc; unclustered docs are implicitly their own canonical.
     *
-    * The cluster fixpoint is EAGER (the iteration runs actions) and its
-    * result is already checkpoint-materialized, so same-session
-    * consumers (clusters / survivors / leakage-proof split — a curation
-    * pipeline touches all three) share one computation instead of each
-    * re-running the identical jaccard-pair + label-propagation plan:
+    * Cluster resolution is EAGER (it runs actions) and its result is
+    * already materialized — a driver-local relation under
+    * [[DriverComponentsMaxEdges]], a checkpointed RDD above it — so
+    * same-session consumers (clusters / survivors / leakage-proof split —
+    * a curation pipeline touches all three) share one computation instead
+    * of each re-running the identical jaccard-pair + components plan:
     * the labels are a deterministic pure function of the documents
-    * files, and the shared frame is just a handle to the final
-    * checkpointed RDD (tiny — near-dup members only). Shared through
+    * files, and the shared frame is just a handle to the materialized
+    * labels (tiny — near-dup members only). Shared through
     * [[graft.model.Materialize.memo]] under [[ClusterMemo]].
     */
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
@@ -1188,10 +1189,32 @@ object Dedup {
   /** Memo kind of [[nearDupClusters]]' labels. */
   val ClusterMemo = "dedup.clusters"
 
-  /** Iterative min-label propagation with ADAPTIVE pointer jumping until
-    * fixpoint. Each round every vertex takes the min root over itself and
-    * its neighbors (one shuffle). Clique-like near-dup graphs settle in
-    * 2–3 such rounds (measured: 2 at sf0.1), so the first
+  /** Connected components of the pair graph `(doc_a, doc_b)`: one row
+    * `(doc_id, canonical_id)` per endpoint, labeled with the minimum doc
+    * id of its component, in doc_id order. Two methods, chosen by one
+    * bounded collect of at most [[DriverComponentsMaxEdges]] + 1 edges:
+    *
+    *  - if that collect came back within the budget (the near-dup graphs
+    *    at sf0.1 and sf1: 256 and 2,560 Jaccard pairs): union-find on the
+    *    driver over the collected edges (path halving, min-id roots),
+    *    returned as a local relation. The distributed form pays ~19 Spark
+    *    jobs of scheduling for a graph of a few hundred edges; this pays
+    *    one for a sorted input like [[jaccardPairsFrom]]' output (the
+    *    limit over its sort plans a per-task top-k of at most budget + 1
+    *    rows, no range exchange), a few for an unsorted one (a
+    *    `CollectLimit` scans 1, 4, 16… partitions until it has the rows).
+    *  - above it: iterative min-label propagation with ADAPTIVE pointer
+    *    jumping until fixpoint (below), O(log n) rounds of one 8-byte-key
+    *    shuffle each, with checkpoint-truncated lineage.
+    *
+    * The labels are the minimum doc id either way, so the DuckDB twin,
+    * the memo and every consumer see the same rows. Above the budget the
+    * collect is spent work: one more pass over the edges (all of them
+    * for a sorted input), each task returning at most budget + 1 rows.
+    *
+    * The distributed fixpoint: each round every vertex takes the min root
+    * over itself and its neighbors (one shuffle). Clique-like near-dup
+    * graphs settle in 2–3 such rounds (measured: 2 at sf0.1), so the first
     * [[JumpAfterRounds]] rounds run propagation alone; if convergence is
     * still outstanding — path-shaped components, where plain propagation
     * needs diameter rounds — every later round also compresses labels one
@@ -1216,7 +1239,70 @@ object Dedup {
 
   val JumpAfterRounds = 4
 
-  private[graft] def clustersFromPairsCounted(pairs: DataFrame): (DataFrame, Int) = {
+  /** Edge budget of [[clustersFromPairs]]' driver union-find. Measured
+    * at `local[2]` with a 2 GB driver heap on synthetic graphs of 2.5k to
+    * 250k edges, both as disjoint edges (two label rows per edge, the
+    * worst case) and as [[graft.graph.Graph.componentEdges]]' chain
+    * blocks: the driver method allocates under 1 KB per edge on the
+    * driver thread (13–25 MB at 25k edges) and its label relation travels
+    * inside its consumers' tasks at ≈33 bytes per row. Up to 25k edges
+    * (≤ 50k label rows) those tasks stay under Spark's recommended
+    * 1000 KiB; at 25k the call took 0.10–0.21 s against the fixpoint's
+    * 1.16–2.49 s, and one consumer of the labels (a group-by) 0.20–0.48 s
+    * against 0.11–0.47 s. With the budget raised, the driver call stayed
+    * faster up to 250k edges, but the tasks passed 1 MB (8 MB at 500k
+    * label rows) and each consumer slowed (1.6–1.9 s against 0.3–0.5 s
+    * there), so a memo entry read by several consumers can lose. Above
+    * the budget the bounded collect added at most ≈0.4 s to a 1.5–4.5 s
+    * fixpoint call (50k–250k edges). Same driver-fast-path shape as the
+    * admission gate's [[graft.streaming.StreamingOps.AdmissionDriverEdgeCap]].
+    */
+  val DriverComponentsMaxEdges = 25_000
+
+  /** [[clustersFromPairs]] plus its distributed round count (0 on the
+    * driver path); `driverMaxEdges` lets tests force either method. */
+  private[graft] def clustersFromPairsCounted(pairs: DataFrame,
+      driverMaxEdges: Int = DriverComponentsMaxEdges): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val edges = pairs.select(col("doc_a"), col("doc_b"))
+    val head = edges.limit(driverMaxEdges + 1).as[(Long, Long)].collect()
+    if (head.length <= driverMaxEdges) (driverComponents(spark, head), 0)
+    else distributedComponents(edges)
+  }
+
+  /** Union-find over the collected edges. The distinct endpoints sorted
+    * ascending ARE the vertex index, so index order is id order and
+    * linking the larger root under the smaller keeps every root its
+    * component's minimum id.
+    */
+  private def driverComponents(spark: SparkSession,
+      pairs: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    val ends = new Array[Long](2 * pairs.length)
+    pairs.indices.foreach { i =>
+      ends(2 * i) = pairs(i)._1; ends(2 * i + 1) = pairs(i)._2
+    }
+    java.util.Arrays.sort(ends)
+    var n = 0
+    ends.indices.foreach { i =>
+      if (i == 0 || ends(i) != ends(i - 1)) { ends(n) = ends(i); n += 1 }
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ends, 0, n, id)
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(index(a)), find(index(b)))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (0 until n).map(i => (ends(i), ends(find(i)))).toDF("doc_id", "canonical_id")
+  }
+
+  private def distributedComponents(pairs: DataFrame): (DataFrame, Int) = {
     val e = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist()
@@ -1316,12 +1402,13 @@ object Dedup {
 
   def dedupSurvivors(spark: SparkSession, dir: String): DataFrame = {
     // plain load (the spine is a pure id projection — nothing to spread)
-    // + GUARDED broadcast: the labels come out of the checkpointed
-    // cluster iteration as an ExistingRDD with no stats, so without a
-    // hint the planner falls back to a sort-merge join that shuffles the
-    // whole doc spine even when the labels are tiny. The count is one
-    // cheap job over the already-materialized checkpoint, and keeps the
-    // hint honest when the label table is genuinely large.
+    // + GUARDED broadcast: above DriverComponentsMaxEdges the labels
+    // come out of the checkpointed cluster iteration as an ExistingRDD
+    // with no stats, so without a hint the planner falls back to a
+    // sort-merge join that shuffles the whole doc spine even when the
+    // labels are tiny. The count is one cheap job over the
+    // already-materialized labels, and keeps the hint honest when the
+    // label table is genuinely large.
     val d = graft.model.Tables.load(spark, dir, "documents")
       .select("doc_id")
     val labels = nearDupClusters(spark, dir)

@@ -232,12 +232,14 @@ object Graph {
 
   /** Connected components over the sparse link graph — THE grouping
     * primitive of every dedup/community stage, declared here as a
-    * first-class graph operator: labels from the engine's adaptive
-    * pointer-jumping fixpoint ([[graft.dedup.Dedup.clustersFromPairs]] —
-    * O(log n) rounds, checkpoint-truncated lineage, min-label roots),
-    * rolled up to one row per component (root id, size, exact member-id
-    * checksum). Same 100 TB shape as the near-dup clusters: per-round
-    * one 8-byte-key shuffle, at most two rounds of labels resident.
+    * first-class graph operator: min-label roots from the engine's
+    * components ([[graft.dedup.Dedup.clustersFromPairs]]: a driver
+    * union-find up to [[graft.dedup.Dedup.DriverComponentsMaxEdges]]
+    * edges, above it the adaptive pointer-jumping fixpoint — O(log n)
+    * rounds, checkpoint-truncated lineage), rolled up to one row per
+    * component (root id, size, exact member-id checksum). Same 100 TB
+    * shape as the near-dup clusters: above the budget, per-round one
+    * 8-byte-key shuffle, at most two rounds of labels resident.
     * Output: (component, size, id_sum) ordered by component.
     */
   def components(spark: SparkSession, dir: String): DataFrame = {

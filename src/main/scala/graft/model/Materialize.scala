@@ -58,8 +58,12 @@ object Materialize {
     * Evicting drops the entry's RDD reference, so the ContextCleaner
     * reclaims a memoized frame's blocks once callers release it. Without
     * a checkpoint dir those blocks are `localCheckpoint` executor blocks,
-    * which an executor loss invalidates: a long session in that mode
-    * recomputes on the resulting failure.
+    * which an executor loss invalidates: the entry then fails every later
+    * action on it (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`) until the table
+    * changes or [[clear]] drops it. A driver-local result holds no
+    * such blocks — the cluster labels of a graph under
+    * [[graft.dedup.Dedup.DriverComponentsMaxEdges]] are a local relation —
+    * so the caveat applies to the cluster memo only above that budget.
     */
   def memo[T](spark: SparkSession, kind: String, dir: String, table: String)
       (compute: => T): T = {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.graph.Graph
@@ -13,6 +16,25 @@ class DedupSpec extends SparkSpec {
 
   private def docsDF(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
+
+  /** Labels of `pairs` from both component methods (the driver union-find
+    * under the default edge budget, the distributed fixpoint at budget 0),
+    * which must agree. */
+  private def bothMethods(pairs: DataFrame): Set[(Long, Long)] = {
+    def labels(budget: Int) = Dedup.clustersFromPairsCounted(pairs, budget)._1
+      .as[(Long, Long)].collect().toSet
+    val driver = labels(Dedup.DriverComponentsMaxEdges)
+    assert(labels(0) == driver, "driver union-find and distributed fixpoint disagree")
+    driver
+  }
+
+  /** (holds a LocalRelation, holds a LogicalRDD) in `df`'s analyzed plan:
+    * driver-local rows vs checkpointed executor blocks. */
+  private def leaves(df: DataFrame): (Boolean, Boolean) = {
+    val p = df.queryExecution.analyzed
+    (p.collectFirst { case _: LocalRelation => }.nonEmpty,
+      p.collectFirst { case _: LogicalRDD => }.nonEmpty)
+  }
 
   test("shingles: distinct word 3-grams, order-sensitive, short docs drop") {
     val d = docsDF(
@@ -178,8 +200,7 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (10L, 11L),
       (7L, 8L), (6L, 7L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clustersFromPairs(pairs)
-      .as[(Long, Long)].collect().toSet
+    val got = bothMethods(pairs)
     assert(got === Set(
       1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L,
@@ -208,7 +229,7 @@ class DedupSpec extends SparkSpec {
     // the JumpAfterRounds adaptive delay, path halving must land well
     // under that
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labeled, rounds) = Dedup.clustersFromPairsCounted(chain)
+    val (labeled, rounds) = Dedup.clustersFromPairsCounted(chain, 0)
     val got = labeled.as[(Long, Long)].collect()
     assert(got.length == 64 && got.forall(_._2 == 1L),
       s"all chain members must resolve to min id 1: ${got.filter(_._2 != 1L).toSeq}")
@@ -226,7 +247,7 @@ class DedupSpec extends SparkSpec {
     // missing observed value would either stop early (wrong labels,
     // caught above) or run extra rounds (caught here).
     val clique = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("doc_a", "doc_b")
-    val (labeled, rounds) = Dedup.clustersFromPairsCounted(clique)
+    val (labeled, rounds) = Dedup.clustersFromPairsCounted(clique, 0)
     assert(labeled.as[(Long, Long)].collect().toSet ===
       Set(1L -> 1L, 2L -> 1L, 3L -> 1L))
     assert(rounds == 2,
@@ -236,9 +257,7 @@ class DedupSpec extends SparkSpec {
   test("clusters on real data: every pair endpoint labeled, canonical in cluster") {
     val pairs = Dedup.jaccardPairs(spark, sf).select("doc_a", "doc_b")
       .as[(Long, Long)].collect()
-    val clusters = Dedup.clustersFromPairs(
-        pairs.toSeq.toDF("doc_a", "doc_b"))
-      .as[(Long, Long)].collect().toMap
+    val clusters = bothMethods(pairs.toSeq.toDF("doc_a", "doc_b")).toMap
     assert(pairs.nonEmpty)
     for ((a, b) <- pairs) {
       assert(clusters.contains(a) && clusters.contains(b))
@@ -598,9 +617,8 @@ class DedupSpec extends SparkSpec {
     val dir = writeDocs((0 until 4).map(k =>
       (k + 1).toLong -> (1 + 4 * k to 40 + 4 * k).map(i => s"w$i").mkString(" ")) :+
       (9L -> "p q r unrelated solitary words"))
-    def run() = Dedup.clustersFromPairs(Dedup.jaccardPairsFrom(
+    def run() = bothMethods(Dedup.jaccardPairsFrom(
       graft.model.Tables.load(spark, dir, "documents")).select("doc_a", "doc_b"))
-      .as[(Long, Long)].collect().toSet
     val local = run()
     assert(local == Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L)), s"fixture drifted: $local")
     val ckpt = java.nio.file.Files.createTempDirectory("ckptdir")
@@ -610,6 +628,45 @@ class DedupSpec extends SparkSpec {
       assert(java.nio.file.Files.walk(ckpt)
         .anyMatch(java.nio.file.Files.isRegularFile(_)), "no reliable checkpoint written")
     } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("component methods: budget n takes the driver path, n-1 the distributed one") {
+    val pairs = Seq((1L, 2L), (3L, 2L), (10L, 11L), (4L, 3L)).toDF("doc_a", "doc_b")
+    val (driver, driverRounds) = Dedup.clustersFromPairsCounted(pairs, 4)
+    val (fixpoint, fixpointRounds) = Dedup.clustersFromPairsCounted(pairs, 3)
+    assert(leaves(driver) == (true, false), driver.queryExecution.analyzed.treeString)
+    assert(leaves(fixpoint) == (false, true), fixpoint.queryExecution.analyzed.treeString)
+    assert(driverRounds == 0 && fixpointRounds > 0)
+    // same rows in the same doc_id order
+    val want = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (10L, 10L), (11L, 10L))
+    assert(driver.as[(Long, Long)].collect().toSeq == want)
+    assert(fixpoint.as[(Long, Long)].collect().toSeq == want)
+  }
+
+  test("component methods: empty pairs give zero rows of one schema on both") {
+    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val (driver, _) = Dedup.clustersFromPairsCounted(empty, 0)
+    val (fixpoint, _) = Dedup.clustersFromPairsCounted(empty, -1)
+    // no checkpoint here (nothing to iterate), so tell the paths apart by
+    // the driver's bare local rows vs the fixpoint's two-direction edge union
+    def nodes(df: DataFrame) = df.queryExecution.analyzed.collect { case p => p.nodeName }.toSet
+    assert(nodes(driver) == Set("Project", "LocalRelation"), nodes(driver))
+    assert(nodes(fixpoint).contains("Union"), nodes(fixpoint))
+    assert(driver.collect().isEmpty && fixpoint.collect().isEmpty)
+    assert(driver.dtypes.toSeq == fixpoint.dtypes.toSeq)
+    assert(driver.columns.toSeq == Seq("doc_id", "canonical_id"))
+  }
+
+  test("cluster memo under the edge budget holds a LocalRelation, no LogicalRDD") {
+    // driver-local labels hold no executor blocks, so losing an executor
+    // cannot leave the memo serving a dead checkpoint
+    val text = (1 to 30).map(i => s"w$i").mkString(" ")
+    val dir = writeDocs(Seq(
+      1L -> text, 2L -> text, 3L -> "x y z totally other words here"))
+    val held = Dedup.nearDupClusters(spark, dir)
+    assert(Dedup.nearDupClusters(spark, dir) eq held, "memo miss on an unchanged dir")
+    assert(leaves(held) == (true, false), held.queryExecution.analyzed.treeString)
+    assert(held.as[(Long, Long)].collect().toSet == Set((1L, 1L), (2L, 1L)))
   }
 
   test("containment catches doc-in-doc inclusion that jaccard misses") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{count, lit, sum}
 import graft.graph.Graph
 
 /** PageRank over the synthetic link graph: the declared integer
@@ -101,6 +102,12 @@ class GraphSpec extends SparkSpec {
     val got = Graph.components(spark, dir)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == expected)
+    // the same edges through the distributed fixpoint (budget 0)
+    val fixpoint = graft.dedup.Dedup.clustersFromPairsCounted(
+        Graph.componentEdges(spark, dir), 0)._1
+      .groupBy($"canonical_id").agg(count(lit(1)), sum($"doc_id"))
+      .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
+    assert(fixpoint == expected)
     // block structure: every component root is a block head
     assert(got.forall(_._1 % Graph.CcBlock == 0))
   }
