@@ -31,9 +31,11 @@ object Sessions {
     *  - Kryo: the TopK Aggregator's heap buffer and the multimodal
     *    Dataset[MediaBlob] path serialize through it.
     *  - sql.extensions GraftExtensions: injects the RewriteDotProduct
-    *    optimizer rule (declarative folds → codegen'd DotProduct) at
-    *    session build — the injection path that works when the platform,
-    *    not the application, constructs the session.
+    *    optimizer rule (declarative folds → codegen'd DotProduct) and the
+    *    PartitionAggregateByConsumerKeys stage rule (one exchange for a
+    *    grouped aggregate consumed by one of its keys) at session build —
+    *    the rules [[Verify.session]] passes to `withExtensions`, named here
+    *    because the platform, not the application, constructs the session.
     */
   def production(appName: String): SparkSession.Builder =
     SparkSession.builder()

@@ -116,6 +116,7 @@ object Verify {
     */
   def session(cpus: String, localDir: String): SparkSession = {
     val b0 = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
     val spark = (if (localDir == null) b0
@@ -157,10 +158,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.Registry.ensure(spark)
-    // session-scoped optimizer rule: declaratively-written dot-product
-    // folds become the codegen'd DotProduct expression (clusters built by
-    // the platform use spark.sql.extensions=graft.plans.GraftExtensions)
-    spark.experimental.extraOptimizations = Seq(graft.plans.RewriteDotProduct)
     spark
   }
 

@@ -27,9 +27,11 @@ object ChiSquare {
   final case class TopRow(word: String, category: String, chi2: Double)
 
   /** The χ² top-k of the CLI, the library and the declared queries, in ONE
-    * action. df: (word, category, df_count); categoryCounts sum to N;
-    * `exact` picks [[scoreExact]] over [[score]]. Returns ≤ k rows per
-    * category in the order of Spark's `orderBy(category, chi2 desc, word)`.
+    * action. df: (word, category, df_count), or [[withWordTotal]]'s output
+    * when the caller keeps it (`Main.run` scores from its cache); the
+    * categoryCounts sum to N; `exact` picks [[scoreExact]] over [[score]].
+    * Returns ≤ k rows per category in the order of Spark's
+    * `orderBy(category, chi2 desc, word)`.
     */
   def topK(df: DataFrame, categoryCounts: Seq[(String, Long)], k: Int,
       exact: Boolean): Seq[TopRow] = {
@@ -54,13 +56,23 @@ object ChiSquare {
     if (byCat != 0) byCat else if (byChi2 != 0) byChi2 else codePointOrder.compare(x.word, y.word)
   }
 
-  /** df: (word, category, df_count); catTotals: (category, n_docs); total: N.
-    * → (word, category, chi2) in double precision.
+  /** (word, category, df_count) → the same rows with `word_total`, the
+    * word's document count over all categories (cells B and D). One
+    * exchange by word; straight above `WordCount.documentFrequency` the
+    * [[graft.plans.PartitionAggregateByConsumerKeys]] rule makes it the DF
+    * aggregate's only exchange.
+    */
+  def withWordTotal(df: DataFrame): DataFrame =
+    df.withColumn("word_total", sum(col("df_count")).over(Window.partitionBy("word")))
+
+  /** df: (word, category, df_count[, word_total]); catTotals: (category,
+    * n_docs); total: N. → (word, category, chi2) in double precision.
     *
-    * Shuffle plan: one exchange by `word` (window sum for B's wordTotal),
-    * then a BROADCAST hash join for the per-category totals (22 rows in the
-    * reference, ≤ a few thousand anywhere sane) — the category-totals side
-    * never shuffles the big relation.
+    * Shuffle plan: one exchange by word (for [[withWordTotal]], none when df
+    * already has `word_total`), then a BROADCAST hash join for the
+    * per-category totals (22 rows in the reference, ≤ a few thousand
+    * anywhere sane) — the category-totals side never shuffles the big
+    * relation.
     */
   def score(df: DataFrame, catTotals: DataFrame, total: Long): DataFrame =
     scoreWith(df, catTotals, total) { cells =>
@@ -82,13 +94,14 @@ object ChiSquare {
       col("n_docs").cast("long"), lit(total)))
   }
 
-  /** The rows with no zero marginal, scored by `chi2` of the cells A–D. */
+  /** The rows with no zero marginal, scored by `chi2` of the cells A–D;
+    * `word_total` is computed unless df carries it. */
   private def scoreWith(df: DataFrame, catTotals: DataFrame, total: Long)(
       chi2: Seq[Column] => Column): DataFrame = {
     val cells @ Seq(a, b, c, d) = Seq(col("df_count"), col("word_total") - col("df_count"),
       col("n_docs") - col("df_count"),
       lit(total) - col("word_total") - col("n_docs") + col("df_count"))
-    df.withColumn("word_total", sum(col("df_count")).over(Window.partitionBy("word")))
+    (if (df.columns.contains("word_total")) df else withWordTotal(df))
       .join(broadcast(catTotals), "category")
       .where((a + b) =!= 0 && (a + c) =!= 0 && (b + d) =!= 0 && (c + d) =!= 0)
       .select(col("word"), col("category"), chi2(cells).as("chi2"))

@@ -11,12 +11,16 @@ import graft.chisq.ChiSquare
 
 /** End-to-end CLI — the engine's replacement for the reference's
   * `src/main.sh` orchestration (reference `src/main.sh:89-191`): one Spark
-  * driver program, no intermediate text materialization between "jobs"
-  * (job-1's output parquet is a product artifact that the χ² stage then
-  * reuses instead of recomputing the tokenization). It adds four sinks to
-  * [[graft.chisq.ChiSquare.topK]]. Four actions: the category counts, the
-  * wordcount write, the top-k's ONE collect, and the chisq/ write of those
-  * rows (a local relation — no scan, no shuffle); chisq.txt formats them.
+  * driver program, no intermediate text materialization between "jobs".
+  * Job 1's relation `(word, category, df_count, word_total)` is cached:
+  * `wordcount/` is written from it and [[graft.chisq.ChiSquare.topK]]
+  * scores from it, so the χ² stage neither re-reads the parquet nor
+  * shuffles it again. Its one exchange hashes the DF aggregate by word
+  * ([[graft.plans.PartitionAggregateByConsumerKeys]]), as the reference's
+  * job 1 keys its output by word. Four actions, each named by its job
+  * description: the category counts, the wordcount write (which fills the
+  * cache), the top-k's ONE collect, and the chisq/ write of those rows (a
+  * local relation — no scan, no shuffle); chisq.txt formats them.
   *
   * Usage: graft.pipeline.Main <reviews.json> <stopwords.txt> <outDir> [k=75]
   *
@@ -62,28 +66,41 @@ object Main {
         Set.empty
       }
 
+    val sc = spark.sparkContext
+    val callerPhase = sc.getLocalProperty("spark.job.description")
+    def phase[T](name: String)(action: => T): T = {
+      sc.setJobDescription(s"Main.run: $name")
+      action
+    }
+
     val reviews = Tables.reviews(spark, input, Some(counters))
     val pruned = reviews
       .select(col("reviewText").as("text"), col("category")).persist()
+    val counted = ChiSquare.withWordTotal(WordCount.documentFrequency(
+      pruned, col("text"), col("category"), stopwords)).persist()
     try {
       // counters: exact actions on the cached parse (NOT accumulators —
       // those double-count on task retry)
-      val catMap = WordCount.categoryTotals(pruned, col("category")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val catMap = phase("category counts") {
+        WordCount.categoryTotals(pruned, col("category")).collect()
+      }.map(r => r.getString(0) -> r.getLong(1)).toMap
       val total = catMap.values.sum
       RefFormats.writeCounters(s"$outDir/counters.txt", total, catMap)
 
-      val df = WordCount.documentFrequency(
-        pruned, col("text"), col("category"), stopwords)
-      df.write.mode("overwrite").parquet(s"$outDir/wordcount")
+      phase("wordcount write") {
+        counted.drop("word_total").write.mode("overwrite").parquet(s"$outDir/wordcount")
+      }
 
       // exact scoring: this CLI's chisq artifacts reproduce the reference's
       // Python floats bit-for-bit; the category totals are the collected
       // counters, not a second aggregation of the cached reviews
-      val rows = ChiSquare.topK(
-        spark.read.parquet(s"$outDir/wordcount"), catMap.toSeq, k, exact = true)
+      val rows = phase("chi2 top-k") {
+        ChiSquare.topK(counted, catMap.toSeq, k, exact = true)
+      }
       import spark.implicits._
-      rows.toDF().coalesce(1).write.mode("overwrite").parquet(s"$outDir/chisq")
+      phase("chisq write") {
+        rows.toDF().coalesce(1).write.mode("overwrite").parquet(s"$outDir/chisq")
+      }
 
       // rows are in (category, χ² desc, word) order: group them keeping it
       val byCat = rows.map(_.category).distinct.map { cat =>
@@ -98,6 +115,10 @@ object Main {
         s"${rows.length} scored terms → $outDir")
       println(s"[graft] anomalies: ${counters.summary}")
       counters
-    } finally pruned.unpersist(blocking = false)
+    } finally {
+      counted.unpersist(blocking = false)
+      pruned.unpersist(blocking = false)
+      sc.setJobDescription(callerPhase)
+    }
   }
 }

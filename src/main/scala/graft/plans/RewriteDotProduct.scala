@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -30,11 +29,9 @@ import graft.functions.DotProduct
   *    inputs) and the merge is exactly `acc + v` (either order);
   *  - the finish lambda is the identity.
   *
-  * Injection: session-scoped via `spark.experimental.extraOptimizations`
-  * (works on a live session — `graft.Verify.session` wires it), or
-  * cluster-wide via `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (the `SparkSessionExtensions` path for spark-submit/connect deployments
-  * where the session is built by the platform).
+  * Injection: [[GraftExtensions]], at session build (`graft.Verify.session`
+  * passes it to `withExtensions`; a platform-built session names it in
+  * `spark.sql.extensions`).
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
 
@@ -95,15 +92,4 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
           isIdentity(finish) =>
         DotProduct(a, b)
     }
-}
-
-/** `spark.sql.extensions` entry point: injects [[RewriteDotProduct]] and
-  * registers the engine's custom expressions at session build — the
-  * deployment path for clusters where the platform constructs the session
-  * (spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteDotProduct)
-  }
 }

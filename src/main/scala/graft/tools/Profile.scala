@@ -4,7 +4,7 @@ import java.util.concurrent.TimeoutException
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 import org.apache.spark.{GraftCoreBridge, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{LeafExecNode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -34,19 +34,30 @@ final case class Counts(jobs: Long, stages: Long, tasks: Long, cpuNs: Long,
     shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes)
 }
 
-/** One completed stage attempt, from its aggregated task metrics. */
-final case class StageRow(id: Int, name: String, wallMs: Long, counts: Counts)
+/** One completed stage attempt, from its aggregated task metrics. `phase`
+  * is the description its job ran under (`SparkContext.setJobDescription`),
+  * empty when the caller set none. */
+final case class StageRow(id: Int, name: String, phase: String, wallMs: Long,
+    counts: Counts)
 
 /** The engine's stage-metrics listener: counts jobs and records every
   * completed stage from its installation on `sc`, keeping running totals.
+  * A stage is named by `StageInfo.name` and by the job description it was
+  * submitted under, which AQE's stage jobs inherit from the action's
+  * thread: their own name is only `withThreadLocalCaptured`'s call site.
   */
 final class StageLedger(sc: SparkContext) extends SparkListener {
   private var totals = Counts(0, 0, 0, 0, 0, 0, 0, 0)
   private val rows = ArrayBuffer[StageRow]()
+  private val phases = collection.mutable.Map[Int, String]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     totals = totals.copy(jobs = totals.jobs + 1)
   }
+
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .foreach(d => synchronized(phases(e.stageInfo.stageId) = d))
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val i = e.stageInfo
@@ -54,7 +65,8 @@ final class StageLedger(sc: SparkContext) extends SparkListener {
     if (m != null) {
       val wall = (for (a <- i.completionTime; b <- i.submissionTime)
         yield a - b).getOrElse(-1L)
-      val row = StageRow(i.stageId, i.name, wall, Counts(0, 1, i.numTasks,
+      val phase = synchronized(phases.remove(i.stageId)).getOrElse("")
+      val row = StageRow(i.stageId, i.name, phase, wall, Counts(0, 1, i.numTasks,
         m.executorCpuTime + m.executorDeserializeCpuTime, m.executorRunTime,
         m.shuffleReadMetrics.totalBytesRead,
         m.shuffleWriteMetrics.bytesWritten,
@@ -82,13 +94,16 @@ final class StageLedger(sc: SparkContext) extends SparkListener {
   def close(): Unit = sc.removeSparkListener(this)
 }
 
-/** Keeps the physical plan of the last action that succeeded. A noop
-  * write runs its own QueryExecution, so the AQE-final plan of a query
-  * comes from here, not from the source DataFrame. */
+/** Keeps the physical plans of the actions that succeeded, in order. A
+  * noop write runs its own QueryExecution, so the AQE-final plan of a query
+  * comes from here, not from the source DataFrame. Events arrive on the
+  * listener bus after the action returns; drain it before reading. */
 final class PlanCapture extends QueryExecutionListener {
-  @volatile var last: Option[SparkPlan] = None
+  private val seen = ArrayBuffer[SparkPlan]()
+  def plans: Seq[SparkPlan] = synchronized(seen.toVector)
+  def last: Option[SparkPlan] = plans.lastOption
   override def onSuccess(funcName: String, qe: QueryExecution,
-      durationNs: Long): Unit = last = Some(qe.executedPlan)
+      durationNs: Long): Unit = synchronized(seen += qe.executedPlan)
   override def onFailure(funcName: String, qe: QueryExecution,
       exception: Exception): Unit = ()
 }
@@ -168,7 +183,8 @@ object Profile {
     (Seq(s"[profile] $name construct_s=${f(p.constructS)} " +
         s"execute_s=${f(p.executeS)}") ++
       p.stages.map(s =>
-        s"[stage] ${s.id} wall_s=${f(s.wallMs / 1e3)} ${counts(s.counts)} ${s.name}") ++
+        s"[stage] ${s.id} wall_s=${f(s.wallMs / 1e3)} ${counts(s.counts)} ${s.name}" +
+          (if (s.phase.isEmpty) "" else s" phase=${s.phase}")) ++
       Seq(s"[total] $name jobs=${t.jobs} stages=${t.stages} ${counts(t)}") ++
       plan).mkString("\n")
   }

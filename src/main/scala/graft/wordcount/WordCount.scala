@@ -13,7 +13,11 @@ import graft.text.TextOps
   *   Exchange(word, category) → HashAggregate(final)
   *
   * all but the exchange and the final aggregate in one whole-stage codegen
-  * span. Spark's partial aggregation IS the reference's hand-written
+  * span. Under a consumer keyed by word alone (χ²'s word total) the
+  * exchange hashes by word instead and is the relation's only one
+  * ([[graft.plans.PartitionAggregateByConsumerKeys]]): the reference's
+  * job 1, too, keys its output `word → {category: count}`.
+  * Spark's partial aggregation IS the reference's hand-written
   * combiner (reference `src/wordCountJob.py:81-89`); the per-review `set()`
   * dedup happens inside the tokenizer kernel BEFORE the explode, so shuffle
   * volume stays proportional to distinct (word, category) pairs — the

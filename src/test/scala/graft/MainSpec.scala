@@ -111,6 +111,20 @@ class MainSpec extends SparkSpec {
       assertSameBytes(s"$out/chisq.txt", parity(expected))
     }
 
+  test("Main.run at k=75 stays byte-equal under 1, 3 and 8 shuffle partitions") {
+    // the word-keyed exchange must not make the output depend on how many
+    // partitions the DF aggregate lands in
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try for (n <- Seq(1, 3, 8)) {
+      spark.conf.set(key, n.toString)
+      val out = Files.createTempDirectory("graft_parity").toString
+      Main.run(spark, parity("reviews.json"), parity("stopwords.txt"), out, 75)
+      assertSameBytes(s"$out/counters.txt", parity("expected_counters.txt"))
+      assertSameBytes(s"$out/chisq.txt", parity("expected_chisq.txt"))
+    } finally spark.conf.set(key, saved)
+  }
+
   test("Main.main rejects a k that is not a positive integer, naming k, before any session") {
     for (bad <- Seq("x", "0", "-3", "7.5")) {
       val e = intercept[IllegalArgumentException](

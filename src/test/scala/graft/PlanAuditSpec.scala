@@ -89,6 +89,46 @@ class PlanAuditSpec extends SparkSpec {
     assert(partials.size == 1, s"no Partial WindowGroupLimit below the exchange:\n$plan")
   }
 
+  test("Main.run: one exchange over the (word, category) relation, keyed by word; wordcount/ is written, never scanned") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.GraftCoreBridge
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.pipeline.Main
+    import graft.tools.PlanCapture
+    def res(name: String): String =
+      Paths.get(getClass.getResource(s"/parity/$name").toURI).toString
+    val out = Files.createTempDirectory("graft_plan").toString
+    val capture = new PlanCapture
+    spark.listenerManager.register(capture)
+    try Main.run(spark, res("reviews.json"), res("stopwords.txt"), out, 75)
+    finally {
+      GraftCoreBridge.drainListeners(spark.sparkContext)
+      spark.listenerManager.unregister(capture)
+    }
+    object Walk extends AdaptiveSparkPlanHelper
+    // the AQE-final plans of every action, and the cached plans they scan
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      Walk.collectWithSubqueries(p) { case n => n }.flatMap {
+        case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+        case n => Seq(n)
+      }
+    val all = capture.plans.flatMap(nodes)
+    val keys = all.collect { case e: ShuffleExchangeExec => e }.distinct.map(_.outputPartitioning)
+      .collect { case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) }
+    val text = capture.plans.mkString("\n")
+    assert(capture.plans.size == 4, text)
+    assert(keys.filter(_.contains("word")) == Seq(Seq("word")), s"$keys\n$text")
+    val rescans = all.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.getName == "wordcount") => f
+    }
+    assert(rescans.isEmpty, text)
+    assert(Files.isDirectory(Paths.get(s"$out/wordcount")))
+  }
+
   // BNLJ is acceptable ONLY against a broadcast single-row side (a
   // scalar riding along every row) — the list below names each such
   // query with its rationale, and the companion structural test proves

@@ -33,7 +33,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    // the engine's physical rule only: PlansSpec measures RewriteDotProduct
+    // against a session without it
     val s = SparkSession.builder()
+      .withExtensions(_.injectQueryStagePrepRule(
+        _ => graft.plans.PartitionAggregateByConsumerKeys))
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
