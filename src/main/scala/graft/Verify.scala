@@ -39,9 +39,8 @@ object Verify {
   }
 
   /** Pre-flight SWEEP + per-run shuffle-dir selection, shared by every
-    * main that moves multi-GB shuffle ([[graft.Bench]],
-    * `graft.tools.ShardedRecall`; SURVEY §9.56): sweeps
-    * stale `graft-shuffle*` dirs from dead runs out of /dev/shm and
+    * main that moves multi-GB shuffle ([[graft.Bench]]; SURVEY §9.56):
+    * sweeps stale `graft-shuffle*` dirs from dead runs out of /dev/shm and
     * /tmp, then picks this run's dir — SPARK_GRAFT_LOCAL_DIR when set,
     * else tmpfs when it can hold `needBytes` (the sandbox disk
     * write-throttles multi-GB shuffle files; RAM-backed local dirs

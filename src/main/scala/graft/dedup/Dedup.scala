@@ -76,11 +76,6 @@ object Dedup {
         element_at(col("t"), i + 1),
         element_at(col("t"), i + 2)))))
 
-  def shingleArrays(docs: DataFrame): DataFrame =
-    tokens(docs)
-      .where(size(col("t")) >= 3)
-      .select(col("doc_id"), shsExpr.as("shs"), size(shsExpr).as("sz"))
-
   /** Exploded row form: (doc_id, shingle_h), one row per distinct shingle
     * hash. The generator consumes [[shsExpr]] INLINE in a single select —
     * routing it through a named intermediate column plans a pathological
@@ -149,9 +144,7 @@ object Dedup {
     * Output: (doc_id, para_idx, para_hash, kept), one row per block.
     */
   /** Paragraph-block (para_idx, md5-digest) structs over a token-array
-    * column named "t" — the single source of the block/digest convention,
-    * shared by the batch pass and the streaming twin
-    * ([[graft.streaming.StreamingOps.paragraphDedupStream]]).
+    * column named "t" — the single source of the block/digest convention.
     */
   private[graft] def paraStructs: Column = {
     val t = col("t")
@@ -1108,32 +1101,9 @@ object Dedup {
       .orderBy("new_id", "stored_id")
   }
 
-  /** Persist the MinHash signature INDEX for the stored split (doc_id
-    * mod 10 < 8 — the [[incrementalNew]] convention): 16 longs + the id
-    * per doc, ~136 bytes/row, the artifact an incremental pipeline keeps
-    * between batches so shingling the historical corpus happens ONCE.
-    * Probes ([[incrementalNearFromIndex]]) scan this file and nothing
-    * else on the stored side — DedupSpec pins plan-level parity with the
-    * in-plan twin on a real write/read round trip.
-    */
-  def minhashIndexWrite(spark: SparkSession, dir: String, out: String): Unit =
-    minhashSignatures(Tables.loadSpread(spark, dir, "documents", "doc_id")
-        .where(pmod(col("doc_id"), lit(10)) < 8))
-      .write.mode("overwrite").parquet(out)
-
-  /** Incremental near-dup of `newDocs` against a PERSISTED signature
-    * index: the stored side is read back from parquet — never re-shingled,
-    * never rebuilt — and probed via [[incrementalNearJoin]].
-    */
-  def incrementalNearFromIndex(spark: SparkSession, indexPath: String,
-      newDocs: DataFrame): DataFrame =
-    incrementalNearJoin(minhashSignatures(newDocs), spark.read.parquet(indexPath))
-
   /** Declared-query form of the incremental near-dup: stored/new split by
     * doc_id mod 10 (8:2, the [[incrementalNew]] convention), signatures
-    * computed in-plan so the DuckDB twin can mirror them; the index
-    * persistence path is [[minhashIndexWrite]] + [[incrementalNearFromIndex]]
-    * (identical probe plan, spec-pinned equal output).
+    * computed in-plan so the DuckDB twin can mirror them.
     */
   def incrementalNear(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashSignatures(Tables.loadSpread(spark, dir, "documents", "doc_id"))
@@ -1254,8 +1224,7 @@ object Dedup {
     * label rows) and each consumer slowed (1.6–1.9 s against 0.3–0.5 s
     * there), so a memo entry read by several consumers can lose. Above
     * the budget the bounded collect added at most ≈0.4 s to a 1.5–4.5 s
-    * fixpoint call (50k–250k edges). Same driver-fast-path shape as the
-    * admission gate's [[graft.streaming.StreamingOps.AdmissionDriverEdgeCap]].
+    * fixpoint call (50k–250k edges).
     */
   val DriverComponentsMaxEdges = 25_000
 

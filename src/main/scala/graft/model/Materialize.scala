@@ -20,9 +20,8 @@ object Materialize {
     * files are deleted once unreferenced under [[graft.Verify.session]]'s
     * `cleanCheckpoints`), `localCheckpoint` otherwise. Both truncate
     * lineage, and an `Observation` attached to `df` reports on this action.
-    * The exception is the streaming gate's fixed point
-    * ([[graft.streaming.StreamingOps]]), which always checkpoints locally:
-    * under a checkpoint dir it would write every round reliably.
+    * This is the engine's only materialization: no other code calls
+    * `checkpoint` or `localCheckpoint`.
     */
   def eager(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)

@@ -685,9 +685,7 @@ object Relational {
     * OOM) past ~2³¹ elements — ~245k YEARS of hours, so any span that
     * trips it is corrupt input by definition. Gate timestamps upstream
     * (the quality-filter stage) rather than silently clamping here: a
-    * truncated grid would misreport real gaps. The streaming twin
-    * ([[graft.streaming.StreamingOps.gapAwareHourly]]) emits its gap
-    * range lazily for the same reason.
+    * truncated grid would misreport real gaps.
     */
   def eventsGapfill(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(spark, dir, "events")
@@ -1022,9 +1020,8 @@ object Relational {
     * arrive behind the running event-time high-water mark (arrival order
     * = event_id, the ingest sequence in this table). disorder(i) =
     * runningMax(ts) − ts(i); its p99 is the watermark delay that loses
-    * <1% of events to lateness, and max is the loss-free bound. The
-    * streaming surface ([[graft.streaming.StreamingOps]]) consumes the
-    * number; this batch audit produces it, re-runnable per source/day.
+    * <1% of events to lateness, and max is the loss-free bound; this
+    * batch audit produces it, re-runnable per source/day.
     *
     * The running max decomposes as a TWO-PASS BLOCK PREFIX-MAX (the
     * round-7 fix — a window partitioned by event_type alone caps

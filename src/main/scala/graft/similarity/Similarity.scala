@@ -702,8 +702,8 @@ object Similarity {
     * ≤ 28 tables — buildable, storable and queryable standalone;
     * within-shard pairs clear 0.9 recall from ONE replica), and no
     * single join key space ever needs more than [[MaxLshTables]]
-    * tables. `graft.tools.ShardedRecall` measures the model on a
-    * ≥10⁶-vector planted corpus; the DuckDB oracle reproduces the
+    * tables. SURVEY §9 records the model measured on a ≥10⁶-vector
+    * planted corpus; the DuckDB oracle reproduces the
     * whole construction from count(*) at SQL-eval time.
     */
   val ShardedLshParams: Vector[ShardParams] = {
@@ -870,172 +870,6 @@ object Similarity {
         WHERE cosine >= ${graft.dedup.Dedup.CosineThreshold}
         ORDER BY vec_a, vec_b"""
 
-  /** Persist the SHARDED near-dup index for the stored split (vec_id
-    * mod 10 < 8 — the minhash incremental convention): two artifacts,
-    * the BUCKET table (vec_id, rep, shard, tbl, bucket — four ints + the
-    * id per row, hive-partitioned by rep so a probe prunes replicas it
-    * re-derives) and the VECTOR table (vec_id, v, nrm). Splitting them
-    * matters at scale: bucket rows replicate R·T× per vector and must
-    * stay 20-byte-narrow; the 512-byte vectors are stored ONCE and only
-    * candidate-matched rows ever read them back (candidate-driven, not
-    * corpus-driven). The width is fixed by the stored corpus at build
-    * time — an incremental probe reuses the index's own params.
-    */
-  def shardedIndexWrite(spark: SparkSession, dir: String, out: String): Unit = {
-    val stored = embeddings(spark, dir)
-      .where(pmod(col("vec_id"), lit(10)) < 8)
-    shardedIndexBuild(spark, stored, out)
-  }
-
-  /** Build the sharded index artifacts for an explicit vector frame:
-    * `buckets` + `vectors` (see [[shardedIndexWrite]]) plus a 1-row
-    * `meta` parquet persisting the frozen composite width `w` and the
-    * indexed count. The width is DERIVED here and STORED — a probe that
-    * re-derived it from its own count (or took it as a parameter, the
-    * round-12 form) could code the batch at the wrong params and
-    * silently return a near-empty result; persisting it makes the
-    * index self-describing (round-12 ADVICE) and gives the drift check
-    * ([[shardedIndexDrift]]) its ground truth. Returns the frozen w.
-    */
-  def shardedIndexBuild(spark: SparkSession, stored: DataFrame,
-      out: String): Int = {
-    val n = stored.count()
-    val w = lshPlanesFor(n)
-    val ps = shardedParamsFor(w)
-    shardedLshBuckets(stored, ps)
-      .select("vec_id", "rep", "shard", "tbl", "bucket")
-      .write.mode("overwrite").partitionBy("rep")
-      .parquet(s"$out/buckets")
-    stored.select("vec_id", "v", "nrm")
-      .write.mode("overwrite").parquet(s"$out/vectors")
-    import spark.implicits._
-    Seq((w, n)).toDF("w", "indexed_count")
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
-    w
-  }
-
-  /** (frozen width, count at build time) read back from a persisted
-    * sharded index's `meta` artifact. */
-  def shardedIndexMeta(spark: SparkSession, indexPath: String): (Int, Long) = {
-    val r = spark.read.parquet(s"$indexPath/meta").head()
-    (r.getInt(0), r.getLong(1))
-  }
-
-  /** WIDTH-DRIFT check for a persisted sharded index (round-12 verdict
-    * ask #3): the index freezes w at build time, but sustained ingest
-    * (e.g. through the streaming admission gate) grows the stored
-    * corpus past the frozen width's design point — the occupancy model
-    * sizes every derived parameter from n at build, so a corpus that
-    * has outgrown it holds more than ~128 expected vectors per fine
-    * bucket and the per-shard sub-problems fatten past their bound.
-    * Output: one row (frozen_w, indexed_count, current_count, fresh_w,
-    * drifted) where fresh_w = the width a rebuild TODAY would pick from
-    * the CURRENT stored row count and drifted = fresh_w > frozen_w.
-    * (Shrink below the frozen width is not drift: a smaller corpus
-    * under a wider index only LOWERS occupancy, so recall and cost both
-    * stay inside the design envelope.)
-    */
-  def shardedIndexDrift(spark: SparkSession, indexPath: String): DataFrame = {
-    val (w, n0) = shardedIndexMeta(spark, indexPath)
-    val cur = spark.read.parquet(s"$indexPath/vectors").count()
-    val fresh = lshPlanesFor(cur)
-    import spark.implicits._
-    Seq((w, n0, cur, fresh, fresh > w))
-      .toDF("frozen_w", "indexed_count", "current_count", "fresh_w",
-        "drifted")
-  }
-
-  /** WIDTH MIGRATION: rebuild a persisted sharded index at the width
-    * the CURRENT stored corpus calls for (round-12 verdict ask #3 — the
-    * drift check's repair arm; the IVF family's
-    * [[ivfRetrain]] analog). The stored vectors are read back ONCE and
-    * re-coded at the new [[ShardParams]]; the vector artifact is
-    * rewritten alongside so the new index is self-contained and the old
-    * one can be dropped atomically by the caller (build-new-then-swap —
-    * the index stays queryable at the old width for the whole rebuild,
-    * exactly how a deployment migrates). Returns (old w, new w).
-    * `graft.tools.ShardedRecall` measures recall across a migration on
-    * the planted ≥10⁶-vector corpus (SURVEY §9.42's fixture).
-    */
-  def shardedIndexMigrate(spark: SparkSession, indexPath: String,
-      out: String): (Int, Int) = {
-    val (oldW, _) = shardedIndexMeta(spark, indexPath)
-    val stored = spark.read.parquet(s"$indexPath/vectors")
-    val newW = shardedIndexBuild(spark, stored, out)
-    (oldW, newW)
-  }
-
-  /** INGEST into a persisted sharded index: code a new vector batch at
-    * the index's OWN frozen width (params are facts about the index —
-    * the same meta contract as the probe) and append its bucket and
-    * vector rows. This is what sustained ingest through the admission
-    * gate does to the stored corpus, and exactly the operation that
-    * creates WIDTH DRIFT: the appended vectors are findable (coded at
-    * the frozen params), but every fine bucket's expected occupancy
-    * rises past the ~128 design point, fattening the candidate bill —
-    * [[shardedIndexDrift]] detects the state, [[shardedIndexMigrate]]
-    * repairs it, and `graft.tools.ShardedRecall --migrate` measures
-    * recall and candidate-slot cost across the full
-    * build → ingest → drift → migrate cycle on the planted 10⁶-vector
-    * corpus. The meta artifact is left untouched: it describes the
-    * BUILD, and the drift check's ground truth is precisely
-    * "current vectors vs frozen width".
-    */
-  def shardedIndexAppend(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame): Unit = {
-    val (w, _) = shardedIndexMeta(spark, indexPath)
-    val ps = shardedParamsFor(w)
-    shardedLshBuckets(newVecs, ps)
-      .select("vec_id", "rep", "shard", "tbl", "bucket")
-      .write.mode("append").partitionBy("rep")
-      .parquet(s"$indexPath/buckets")
-    newVecs.select("vec_id", "v", "nrm")
-      .write.mode("append").parquet(s"$indexPath/vectors")
-  }
-
-  /** Probe a NEW vector batch against a PERSISTED sharded index: the
-    * stored side is read back from parquet — its embeddings are never
-    * re-coded, its bucket rows never rebuilt. The new batch's bucket
-    * rows (computed at the index's own width `w`) broadcast into the
-    * stored bucket scan, candidates dedup to bare id pairs, and ONLY
-    * candidate-matched stored vectors are read back for the exact
-    * cosine. Same probe plan as the declared in-plan twin
-    * ([[shardedIncrementalNear]]) — spec-pinned equal output on a real
-    * write/read round trip. The composite width comes from the index's
-    * OWN `meta` artifact, never from the caller: the round-12 form took
-    * w as a parameter, and a mismatched value coded the probe batch at
-    * the wrong params and silently returned a near-empty result
-    * (round-12 ADVICE — an index's params are facts about the index,
-    * so the index carries them).
-    */
-  def shardedIncrementalFromIndex(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame): DataFrame = {
-    val (w, _) = shardedIndexMeta(spark, indexPath)
-    val ps = shardedParamsFor(w)
-    // no forced broadcast — see shardedIncrementalNear's doc: AQE
-    // broadcasts a true increment from runtime sizes; a backfill falls
-    // back to the cell-key shuffle join
-    val nb = shardedLshBuckets(newVecs, ps)
-      .select(col("vec_id").as("new_id"), col("v").as("nv"),
-        col("nrm").as("nnrm"), col("rep"), col("shard"),
-        col("tbl"), col("bucket"))
-    // vectors re-attach to the narrow stored bucket rows BEFORE the cell
-    // join (both index artifacts, one keyed join — colocating the two by
-    // vec_id makes it shuffle-free in a deployment), so the cosine can
-    // compute INSIDE the cell join and only survivors reach the distinct
-    // (the in-plan twin's doc records the two measured failure modes this
-    // shape avoids at sf10)
-    val sb = spark.read.parquet(s"$indexPath/buckets")
-      .join(spark.read.parquet(s"$indexPath/vectors"), "vec_id")
-    sb.join(nb, Seq("rep", "shard", "tbl", "bucket"))
-      .select(col("new_id"), col("vec_id").as("stored_id"),
-        (graft.dedup.Dedup.dot(col("nv"), col("v"))
-          / (col("nnrm") * col("nrm"))).as("cosine"))
-      .where(col("cosine") >= graft.dedup.Dedup.CosineThreshold)
-      .distinct()
-      .orderBy("new_id", "stored_id")
-  }
-
   /** Declared-query form of the INCREMENTAL sharded near-dup — the
     * steady-state ingestion twin of [[shardedNearDupPairs]] (what
     * `q_dedup_incremental_near` is to the minhash index): stored/new
@@ -1043,27 +877,15 @@ object Similarity {
     * stored side's sharded buckets at the width the STORED corpus fixes
     * (an index's params freeze at build time; the oracle recomputes w
     * from the same filtered count). Bucket rows computed in-plan so the
-    * DuckDB twin can mirror them; the persistence path is
-    * [[shardedIndexWrite]] + [[shardedIncrementalFromIndex]] (identical
-    * probe shape, spec-pinned equal output). A true increment is
+    * DuckDB twin can mirror them. A true increment is
     * bounded by construction, so AQE broadcasts its coded rows from
     * runtime sizes and the stored corpus never shuffles for
     * candidates; a corpus-fraction backfill falls back to the
     * cell-key shuffle join (the batch operator's economics).
     * Output: (new_id, stored_id, cosine ≥ threshold).
     */
-  def shardedIncrementalNear(spark: SparkSession, dir: String): DataFrame =
-    shardedIncrementalNearBy(spark, dir, pmod(col("vec_id"), lit(10)) >= 8)
-
-  /** [[shardedIncrementalNear]] with the stored/new split as a
-    * parameter — `graft.tools.ShardedRecall` measures the probe's
-    * recall on the planted 10⁶-vector corpus through a HASH split
-    * (the amplifier's replica offsets are ≡ 0 mod 10, so the declared
-    * id-residue split never crosses a planted pair there; a hash of
-    * the id crosses ~2 in 10 — the same probe, a measurable carve).
-    */
-  private[graft] def shardedIncrementalNearBy(spark: SparkSession,
-      dir: String, isNew: org.apache.spark.sql.Column): DataFrame = {
+  def shardedIncrementalNear(spark: SparkSession, dir: String): DataFrame = {
+    val isNew = pmod(col("vec_id"), lit(10)) >= 8
     val e = embeddings(spark, dir)
     val stored = e.where(!isNew)
     val fresh = e.where(isNew)
@@ -1379,9 +1201,9 @@ object Similarity {
     * lookup-table scoring of [[pqAdcTopK]] ranks only the survivors.
     * Centroids, probe sets, and LUTs are all driver-computed bounded
     * state riding the plan as literals; the corpus-side work is ONE
-    * projection computing (cid, codes) per vector — against the
-    * persisted index ([[ivfIndexWrite]], hive-partitioned by cid) the
-    * probe filter becomes partition pruning and the scan touches
+    * projection computing (cid, codes) per vector — against an index
+    * stored hive-partitioned by cid the probe filter becomes partition
+    * pruning and the scan touches
     * nprobe/C of the files at 2 bytes of code per vector: the full
     * billion-scale ANN serving shape (Jégou et al. 2011), stated as one
     * declarative plan. Output: (q_id, vec_id, adc_dist, rn).
@@ -1533,13 +1355,11 @@ object Similarity {
     assignTo(e, ivfCentroids(e))
   }
 
-  /** The assignment PROJECTION alone, factored for reuse by the
-    * streaming ingest ([[graft.streaming.StreamingOps.ivfIngestStream]]):
-    * label each (vec_id, v, nrm) row with its nearest centroid among
+  /** The assignment PROJECTION alone: label each (vec_id, v, nrm) row with its nearest centroid among
     * `cents` — same argmax-struct expression, quantizer as plan
     * literals, no join, no shuffle.
     */
-  private[graft] def assignTo(df: DataFrame,
+  private def assignTo(df: DataFrame,
       cents: Array[(Int, Array[Double], Double)]): DataFrame = {
     val entries = cents.map { case (i, cv, cn) =>
       struct((Dedup.dot(col("v"), lit(cv)) / (col("nrm") * lit(cn))).as("c"),
@@ -1547,23 +1367,6 @@ object Similarity {
     }
     df.withColumn("cid", -array_max(array(entries: _*)).getField("ni"))
   }
-
-  /** Raw (vec_id, embedding) rows → the (vec_id, v, nrm) working shape
-    * (double-cast + precomputed norm) — the [[embeddings]] projection
-    * without the table read, for streaming micro-batches.
-    */
-  private[graft] def withNorm(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(Dedup.dot(col("v"), col("v"))))
-
-  /** The frozen coarse quantizer of the corpus at `dir` — what a
-    * deployment reads from its persisted index before assigning new
-    * arrivals ([[ivfUpdate]] semantics, exposed for the streaming
-    * ingest).
-    */
-  private[graft] def quantizer(
-      spark: SparkSession, dir: String): Array[(Int, Array[Double], Double)] =
-    ivfCentroids(embeddings(spark, dir))
 
   /** Shared oracle CTEs: cents (rank-derived coarse quantizer) and asgn
     * (argmax-cosine assignment via window, ties to the lowest cid).
@@ -1598,19 +1401,14 @@ object Similarity {
   /** Micro-batches the ingest ledger twin carves the corpus into. */
   val IngestBatches = 4
 
-  /** BATCH TWIN of the streaming ANN index ingest
-    * ([[graft.streaming.StreamingOps.ivfIngestStream]]): the stream
-    * carves arrivals into micro-batches (modeled deterministically as
-    * vec_id mod [[IngestBatches]]), assigns each against the FROZEN
-    * quantizer, and appends per batch; since the quantizer never moves
-    * mid-stream, the final index content is the one-shot assignment of
-    * every vector — so the declared artifact is the per-(batch, cluster)
+  /** ANN index ingest ledger: arrivals are carved into micro-batches
+    * (modeled deterministically as vec_id mod [[IngestBatches]]), each
+    * assigned against the FROZEN quantizer; since the quantizer never
+    * moves between batches, the final index content is the one-shot
+    * assignment of every vector — so the declared artifact is the per-(batch, cluster)
     * ingest LEDGER: how many vectors each micro-batch landed in each
     * cluster, with the exact id_sum checksum pinning every individual
-    * assignment (the [[ivfAssign]] convention, one grain finer).
-    * `StreamingSpec` proves the real micro-batch path — exactly-once
-    * `VersionedTable` commits across a forced crash-restart — converges
-    * to exactly this content. One scan, C codegen'd dots, one rollup.
+    * assignment (the [[ivfAssign]] convention, one grain finer). One scan, C codegen'd dots, one rollup.
     * Output: (batch_id, cid, n_vectors, id_sum).
     */
   def ivfIngest(spark: SparkSession, dir: String): DataFrame =
@@ -1716,26 +1514,6 @@ object Similarity {
               THEN CAST(cos AS DECIMAL(28,12)) END) AS DOUBLE)
               / sum(CASE WHEN is_new THEN 1 ELSE 0 END) END AS new_mean_cos
         FROM asgn GROUP BY cid ORDER BY cid"""
-
-  /** Persist the IVF index: assigned vectors laid out hive-partitioned by
-    * `cid` — the storage form that turns a probe's `cid` filter into
-    * PARTITION PRUNING (the scan opens only nprobe/C of the files, the
-    * n·nprobe/C cost an IVF promises, enforced by the filesystem layout
-    * instead of a runtime filter). SimilaritySpec proves the pruned scan
-    * plan on a real write+read round trip.
-    */
-  def ivfIndexWrite(spark: SparkSession, dir: String, out: String): Unit =
-    ivfAssigned(spark, dir)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(out)
-
-  /** Read back ONLY the probed clusters from a persisted IVF index. The
-    * `cid IN probes` predicate is a partition filter — no data file of an
-    * unprobed cluster is opened.
-    */
-  def ivfProbeRead(spark: SparkSession, out: String, probes: Seq[Int]): DataFrame =
-    spark.read.parquet(out)
-      .where(col("cid").isin(probes.map(Integer.valueOf): _*))
 
   val ivfTopKSql: String =
     s"""WITH $duckEmbeddings, $duckIvf,
@@ -2075,23 +1853,10 @@ object Similarity {
       .select(flatten(expr("transform(fs, x -> x.cv)")).as("rcents"),
         expr("transform(fs, x -> x.cn)").as("rnorms"))
 
-  /** The same one-row packed form from a persisted `routing` artifact
-    * (rcid, cv, cnrm) — the frozen-routing probe's side, so stored and
-    * in-plan routing share one evaluation path.
-    */
-  private def semRoutingPackedFrom(routing: DataFrame): DataFrame =
-    routing
-      .agg(array_sort(collect_list(struct(col("rcid").as("o"),
-        col("cv"), col("cnrm").as("cn")))).as("fs"))
-      .select(flatten(expr("transform(fs, x -> x.cv)")).as("rcents"),
-        expr("transform(fs, x -> x.cn)").as("rnorms"))
-
   /** Route a vector frame against a ONE-ROW packed routing frame
-    * (rcents, rnorms) — shared by the in-plan form (packed from the
-    * same corpus) and the persisted-index probe (packed from the FROZEN
-    * routing artifact, so a grown corpus keeps routing new batches
-    * exactly where the stored members routed at build time). The packed
-    * side broadcasts as a one-row scalar; the routing loop is the
+    * (rcents, rnorms) — shared by the full and the incremental form, so
+    * a new batch routes exactly where the stored members routed. The
+    * packed side broadcasts as a one-row scalar; the routing loop is the
     * codegen'd [[graft.functions.CentroidRouteCol]].
     */
   private def semRouteAt(e: DataFrame, routing: DataFrame): DataFrame = {
@@ -2334,125 +2099,7 @@ object Similarity {
         LEFT JOIN prunes USING (vec_id)
         ORDER BY p.vec_id"""
 
-  // ------------------------- sharded SemDeDup lifecycle (round 14)
-
-  /** Persist the sharded SemDeDup ROUTING + cell state for the stored
-    * split (vec_id mod 10 < 8, the incremental family's convention) —
-    * round-13 verdict ask #7: the sharded form's routing centroids and
-    * S froze IMPLICITLY at evaluation time, so a grown corpus either
-    * silently re-routed everything (a full recompute — new routing
-    * centroids move every boundary) or nothing. The artifact makes the
-    * freeze EXPLICIT, mirroring [[shardedIndexBuild]]:
-    *
-    *   - `routing`:  (rcid, cv, cnrm) — the S routing centroids, S rows;
-    *   - `fine`:     (shard, cents, cnorms) — the per-shard PACKED
-    *                 fine-centroid matrices (the [[semPacked]] frame,
-    *                 one row per shard — the data-plane artifact the
-    *                 round-14 assignment join consumes directly);
-    *   - `members`:  (vec_id, shard, cid, v, nrm, is_primary) — every
-    *                 stored membership (primaries + ghosts), the cell
-    *                 state an incremental batch probes into;
-    *   - `meta`:     1-row (s, indexed_count) — S is a fact about the
-    *                 index, so the index carries it (the round-12
-    *                 ADVICE contract all persisted indexes follow).
-    *
-    * Returns the frozen S.
-    */
-  def semShardedIndexWrite(spark: SparkSession, dir: String,
-      out: String): Int = {
-    val stored = embeddings(spark, dir)
-      .where(pmod(col("vec_id"), lit(10)) < 8)
-    val n = stored.count()
-    val s = semShardsFor(n)
-    import spark.implicits._
-    // the routing artifact is derived and written IN-PLAN (round-14 ask
-    // #8): TakeOrdered of S rows, rcid from a window over just those S
-    val rw = org.apache.spark.sql.expressions.Window
-      .orderBy(col("vec_id").desc)
-    val routingDf = stored.select(col("vec_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-      .orderBy(col("vec_id").desc).limit(s)
-      .withColumn("rcid", row_number().over(rw) - 1)
-      .select("rcid", "cv", "cnrm")
-    routingDf.coalesce(1).write.mode("overwrite").parquet(s"$out/routing")
-    val routed = semRouteAt(stored,
-      semRoutingPackedFrom(spark.read.parquet(s"$out/routing")))
-    val packed = semPacked(routed)
-    packed.write.mode("overwrite").parquet(s"$out/fine")
-    semAssignAt(semMembers(routed, s), packed, s)
-      .select("vec_id", "shard", "cid", "v", "nrm", "is_primary")
-      .write.mode("overwrite").parquet(s"$out/members")
-    Seq((s, n)).toDF("s", "indexed_count")
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/meta")
-    s
-  }
-
-  /** (frozen S, count at build time) read back from a persisted sharded
-    * SemDeDup index's `meta` artifact. */
-  def semShardedIndexMeta(spark: SparkSession, indexPath: String)
-      : (Int, Long) = {
-    val r = spark.read.parquet(s"$indexPath/meta").head()
-    (r.getInt(0), r.getLong(1))
-  }
-
-  /** The drift LAW row, pure (spec-pinned at boundary counts without
-    * materializing a boundary-sized corpus): fresh_s = the shard count
-    * a rebuild TODAY would pick; drifted only on OUTGROWTH — a shrunken
-    * corpus under a wider routing only lowers per-shard occupancy, so
-    * cost and quality both stay inside the design envelope (the
-    * [[shardedIndexDrift]] convention).
-    */
-  private[graft] def semShardedDriftRow(frozenS: Int, n0: Long,
-      cur: Long): (Int, Long, Long, Int, Boolean) =
-    (frozenS, n0, cur, semShardsFor(cur), semShardsFor(cur) > frozenS)
-
-  /** S-DRIFT check for a persisted sharded SemDeDup index: sustained
-    * ingest grows the member table past the frozen routing's design
-    * point (expected shard population n/S crosses the ~8.4M cap and the
-    * within-shard adaptive-C law meets its ceiling again — exactly the
-    * quadratic cliff the sharding exists to remove). One row:
-    * (frozen_s, indexed_count, current_count, fresh_s, drifted), with
-    * current_count = the member table's primary count (ghosts are
-    * duplicate hostings, not corpus size).
-    */
-  def semShardedIndexDrift(spark: SparkSession, indexPath: String)
-      : DataFrame = {
-    val (s, n0) = semShardedIndexMeta(spark, indexPath)
-    val cur = spark.read.parquet(s"$indexPath/members")
-      .where(col("is_primary")).count()
-    import spark.implicits._
-    Seq(semShardedDriftRow(s, n0, cur))
-      .toDF("frozen_s", "indexed_count", "current_count", "fresh_s",
-        "drifted")
-  }
-
-  /** Probe a NEW vector batch against a persisted sharded SemDeDup
-    * index AT THE FROZEN ROUTING: the batch routes through the stored
-    * routing centroids (read back — a re-derived routing would move
-    * every shard boundary and silently re-route the corpus), assigns
-    * against the stored PACKED fine matrices (the same broadcast-join +
-    * [[graft.functions.NearestCentroidCol]] plan as the in-plan form —
-    * stored members never re-code, never reshuffle), meets the stored
-    * members of its (shard, cid) cells, and reports the min-id stored
-    * near-dup per batch vector. Output (vec_id, shard, cid, pruned_by,
-    * kept) for every batch PRIMARY — [[semanticDedupShardedIncr]] is
-    * the in-plan twin ([[SimilaritySpec]] pins write→read→probe equal
-    * to it on the same split).
-    */
-  def semShardedIncrFromIndex(spark: SparkSession, indexPath: String,
-      newVecs: DataFrame): DataFrame = {
-    val (s, _) = semShardedIndexMeta(spark, indexPath)
-    val routing = spark.read.parquet(s"$indexPath/routing")
-    val packed = spark.read.parquet(s"$indexPath/fine")
-    val asgNew = semAssignAt(
-      semMembers(semRouteAt(newVecs, semRoutingPackedFrom(routing)), s),
-      packed, s)
-    val stored = spark.read.parquet(s"$indexPath/members")
-    semShardedIncrPrunes(asgNew, stored)
-  }
-
-  /** Shared probe tail of [[semShardedIncrFromIndex]] and the in-plan
-    * twin: batch memberships × stored cell members → cosine ≥ threshold
+  /** Probe tail of [[semanticDedupShardedIncr]]: batch memberships × stored cell members → cosine ≥ threshold
     * → min stored id per batch vector, reported over batch primaries.
     */
   private def semShardedIncrPrunes(asgNew: DataFrame,
@@ -2473,8 +2120,8 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** IN-PLAN twin of the persisted probe (the declared, oracle-gated
-    * form — what [[shardedIncrementalNear]] is to the LSH index): split
+  /** Incremental sharded SemDeDup (the declared, oracle-gated form —
+    * what [[shardedIncrementalNear]] is to the LSH index): split
     * vec_id mod 10 (8:2), freeze routing + fine cells on the stored
     * split, probe the new split at that frozen state. The oracle
     * rebuilds the whole frozen-routing construction from the stored

@@ -37,12 +37,9 @@ import org.apache.spark.sql.functions._
   *     not O(all history); older time travel falls back to the retained
   *     JSON entries.
   *
-  * Production notes, stated honestly: the log is line-JSON behind a
-  * pluggable [[LogStore]] — [[AtomicLogStore]] (POSIX/HDFS CREATE_NEW)
-  * by default, with [[ObjectLogStore]] simulating an object store via a
-  * temp-write + list-before-claim protocol finished by a CONDITIONAL
-  * PUT (If-None-Match), which closes the lost-update window the blind
-  * legacy mode (kept, spec-pinned) provably cannot; schema
+  * Production notes, stated honestly: the log is line-JSON on a
+  * filesystem whose CREATE_NEW is atomic (POSIX/HDFS); an object store
+  * without a conditional PUT would need an external lock table; schema
   * is append-time-checked by `unionByName` only. The operator surface —
   * snapshot isolation for readers during a merge, pruned rewrite scope,
   * version pinning for reproducible training runs — is the part that
@@ -53,8 +50,7 @@ object VersionedTable {
 
   final case class Entry(version: Int, op: String, tsMs: Long,
       adds: Seq[String], removes: Seq[String],
-      mins: Seq[Long] = Nil, maxs: Seq[Long] = Nil,
-      ops: Seq[String] = Nil) {
+      mins: Seq[Long] = Nil, maxs: Seq[Long] = Nil) {
     /** Per-added-file [min, max] of the table's stats column, parallel to
       * `adds` — the Delta/Iceberg data-skipping idea. Empty = no stats
       * collected for this commit (readers must scan its files).
@@ -69,111 +65,6 @@ object VersionedTable {
   final class ConflictException(v: Int)
     extends RuntimeException(s"version $v was committed concurrently")
 
-  // ------------------------------------------------------------ log stores
-
-  /** The commit-slot write protocol, factored out of [[commit]] so the
-    * same table format runs on two storage contracts:
-    *
-    *   - [[AtomicLogStore]] (default): POSIX/HDFS semantics — CREATE_NEW
-    *     is one atomic syscall, the filesystem itself decides the race.
-    *   - [[ObjectLogStore]]: a rename-less object store (the
-    *     pre-conditional-PUT S3 shape): PUT blindly overwrites and the
-    *     only primitives are PUT/GET/LIST, so mutual exclusion must be
-    *     simulated — see its doc for the protocol and the conflict
-    *     window it provably cannot close.
-    *
-    * Implementations either install the entry at `path` or throw
-    * [[ConflictException]] when this writer detectably lost the slot.
-    */
-  sealed trait LogStore {
-    def name: String
-    def writeCommit(path: Path, content: String, version: Int): Unit
-  }
-
-  case object AtomicLogStore extends LogStore {
-    val name = "atomic"
-    def writeCommit(path: Path, content: String, version: Int): Unit =
-      try Files.write(path, content.getBytes("UTF-8"),
-        StandardOpenOption.CREATE_NEW)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        throw new ConflictException(version)
-      }
-  }
-
-  /** Object-store shim: TEMP-WRITE + LIST-BEFORE-CLAIM, with the final
-    * slot install selected by `conditionalPut`. The writer stages its
-    * entry as a uniquely named claim object next to the slot, LISTs the
-    * log: if the final object already exists, or another staged claim
-    * sorts first (min-claim-id is the deterministic tiebreak), it loses
-    * and raises [[ConflictException]]. Then:
-    *
-    *   - `conditionalPut = true` (default, the S3 If-None-Match / GCS
-    *     precondition shape, available since S3 added it in 2024): the
-    *     final install is PUT-if-absent — the STORE arbitrates the slot,
-    *     so any racer whose commit lands first turns this writer's PUT
-    *     into a precondition failure and a clean [[ConflictException]].
-    *     Under this mode NO interleaving loses a commit: either the
-    *     existence checks, the claim tiebreak, or the conditional PUT
-    *     itself rejects the second writer (the round-9 residual window
-    *     {A checks, B puts, A puts-over-B} is exactly what the
-    *     precondition closes — proven by the race spec).
-    *   - `conditionalPut = false` (the legacy pre-conditional-PUT
-    *     contract: PUT blindly overwrites; only PUT/GET/LIST exist):
-    *     blind PUT + READ-BACK. A racer's PUT that landed first is
-    *     usually detected as content mismatch, but the window
-    *     {A checks-exists, B puts, B verifies, A puts, A verifies}
-    *     remains: both believe they won and B's entry is silently
-    *     replaced. That window is NOT closable with PUT/GET/LIST alone
-    *     — production on such stores needs an external lock table
-    *     (DynamoDB in Delta's S3 multi-writer LogStore). The mode is
-    *     kept, with the spec still PINNING its lost update, as the
-    *     machine-checked statement of WHY the conditional PUT matters.
-    *
-    * `beforeClaim`/`beforePut` are test seams: the property spec
-    * injects racing commits into the exact protocol windows.
-    */
-  final class ObjectLogStore(beforeClaim: () => Unit = () => (),
-      beforePut: () => Unit = () => (),
-      conditionalPut: Boolean = true)
-      extends LogStore {
-    val name = if (conditionalPut) "object-condput" else "object"
-    def writeCommit(path: Path, content: String, version: Int): Unit = {
-      val dir = path.getParent
-      val claimPrefix = "." + path.getFileName.toString + ".claim-"
-      val claim = claimPrefix + java.util.UUID.randomUUID.toString
-      val tmp = dir.resolve(claim)
-      Files.write(tmp, content.getBytes("UTF-8")) // blind PUT of the claim
-      try {
-        if (Files.exists(path)) throw new ConflictException(version)
-        val claims = listDir(dir)
-          .map(_.getFileName.toString).filter(_.startsWith(claimPrefix))
-          .sorted
-        if (claims.headOption != Some(claim))
-          throw new ConflictException(version)
-        beforeClaim()
-        // second existence check: a racer that completed its whole
-        // commit inside our claim window loses us the slot HERE, before
-        // we would clobber (or collide with) its final object
-        if (Files.exists(path)) throw new ConflictException(version)
-        beforePut()
-        if (conditionalPut) {
-          // PUT If-None-Match: CREATE_NEW is the local-FS simulation of
-          // the store-side precondition — the one primitive that closes
-          // the blind protocol's residual lost-update window
-          try Files.write(path, content.getBytes("UTF-8"),
-            StandardOpenOption.CREATE_NEW)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            throw new ConflictException(version)
-          }
-        } else {
-          Files.write(path, content.getBytes("UTF-8")) // blind PUT
-          if (Files.readString(path) != content)
-            throw new ConflictException(version)
-        }
-      } finally Files.deleteIfExists(tmp)
-    }
-  }
-
   /** Files.list with the stream closed — every directory listing in this
     * file goes through here (an unclosed DirectoryStream leaks an fd per
     * call; commit logging is a per-commit hot path).
@@ -181,18 +72,6 @@ object VersionedTable {
   private def listDir(dir: Path): Seq[Path] = {
     val st = Files.list(dir)
     try st.iterator.asScala.toSeq finally st.close()
-  }
-
-  /** Active store — default POSIX-atomic; swapped per-test to drive the
-    * same random-op model over both contracts (production would make
-    * this a per-table config).
-    */
-  @volatile private[graft] var logStore: LogStore = AtomicLogStore
-
-  private[graft] def withLogStore[T](s: LogStore)(f: => T): T = {
-    val prev = logStore
-    logStore = s
-    try f finally logStore = prev
   }
 
   private def logDir(dir: String): Path = Paths.get(dir, "_log")
@@ -207,8 +86,7 @@ object VersionedTable {
     def num(xs: Seq[Long]) = xs.mkString("[", ",", "]")
     s"""{"version":${e.version},"op":"${e.op}","ts_ms":${e.tsMs},""" +
       s""""adds":${arr(e.adds)},"removes":${arr(e.removes)},""" +
-      s""""mins":${num(e.mins)},"maxs":${num(e.maxs)},""" +
-      s""""ops":${arr(e.ops)}}"""
+      s""""mins":${num(e.mins)},"maxs":${num(e.maxs)}}"""
   }
 
   private def field(s: String, name: String): String = {
@@ -251,7 +129,7 @@ object VersionedTable {
     Entry(field(s, "version").toInt,
       field(s, "op").stripPrefix("\"").stripSuffix("\""),
       field(s, "ts_ms").toLong, strArr(s, "adds"), strArr(s, "removes"),
-      numArr(s, "mins"), numArr(s, "maxs"), strArr(s, "ops"))
+      numArr(s, "mins"), numArr(s, "maxs"))
 
   private def checkpointPath(dir: String, v: Int): Path =
     logDir(dir).resolve(f"$v%08d.checkpoint")
@@ -326,42 +204,14 @@ object VersionedTable {
     for (e <- es; (f, i) <- e.adds.zipWithIndex if i < e.mins.length)
       if (!statsIdx.contains(f)) statsIdx(f) = (e.mins(i), e.maxs(i))
     val stats = live.map(statsIdx.get)
-    // CARRY SUBSUMED OP LABELS FORWARD (round-14 ADVICE): op labels are
-    // the external-transaction replay keys (the gate's `gate-<batchId>`,
-    // the MV maintainer's `mv-<batchId>`, `gate-seed`) — folding them
-    // away would re-open the exactly-once window at every checkpoint
-    // boundary (a crash-replay of the 10th batch would find no stamp and
-    // append duplicates). Labels are distinct per batch, so the carried
-    // list grows one short string per commit; the production form keeps
-    // a per-appId txn WATERMARK instead of a list (Delta's
-    // setTransaction), which this linear list degenerates to trivially —
-    // at this format's design scale (periodic compaction, bounded
-    // retained history) the list stays KBs.
-    val foldedOps = es.flatMap(e => e.ops :+ e.op)
-      .filterNot(o => o == "checkpoint").distinct
     val folded = Entry(v, "checkpoint", System.currentTimeMillis(),
       live, Nil,
       if (stats.forall(_.isDefined)) stats.map(_.get._1) else Nil,
-      if (stats.forall(_.isDefined)) stats.map(_.get._2) else Nil,
-      foldedOps)
+      if (stats.forall(_.isDefined)) stats.map(_.get._2) else Nil)
     Files.write(checkpointPath(dir, v),
       (render(folded) + "\n").getBytes("UTF-8"))
     v
   }
-
-  /** CHECKPOINT-PROOF replay-stamp lookup: true when any committed entry
-    * carries `op` as its label — either directly or folded into a log
-    * checkpoint's carried `ops` list. External-transaction callers
-    * (streaming gate/MV batches) MUST use this instead of scanning
-    * [[entries]] for `.op` equality: [[commit]] auto-checkpoints every
-    * [[CheckpointInterval]]-th version and the fold REPLACES subsumed
-    * entries (including the just-committed one) with one synthetic
-    * entry, so a raw `.op` scan goes blind at every checkpoint boundary
-    * while this lookup survives the fold. Cost: O(entries since the
-    * last checkpoint) — the same as any snapshot read.
-    */
-  def hasOp(dir: String, op: String): Boolean =
-    entries(dir).exists(e => e.op == op || e.ops.contains(op))
 
   // the raw per-version JSON history, ignoring checkpoints (audit path)
   private def allJsonEntries(dir: String): Seq[Entry] = {
@@ -434,8 +284,11 @@ object VersionedTable {
   // a writer's version pick and its commit (the real conflict window)
   private[graft] def commit(dir: String, e: Entry): Unit = {
     Files.createDirectories(logDir(dir))
-    logStore.writeCommit(entryPath(dir, e.version), render(e) + "\n",
-      e.version)
+    try Files.write(entryPath(dir, e.version),
+      (render(e) + "\n").getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      throw new ConflictException(e.version)
+    }
     // fires only after the slot is WON (a losing racer threw above), so
     // concurrent writers produce at most one checkpoint per interval
     // boundary; a checkpoint failure must not fail the already-durable
@@ -449,16 +302,12 @@ object VersionedTable {
       }
   }
 
-  /** Append `df` as a new version. `op` labels the commit in the log —
-    * callers implementing external transaction semantics (the streaming
-    * MV maintainer) stamp their txn id here and skip replays by looking
-    * it up.
-    */
-  def append(df: DataFrame, dir: String, op: String = "append"): Int = {
+  /** Append `df` as a new version. */
+  def append(df: DataFrame, dir: String): Int = {
     Files.createDirectories(Paths.get(dir))
     val v = currentVersion(dir) + 1
     val adds = stageIn(df, dir, v)
-    commit(dir, Entry(v, op, System.currentTimeMillis(), adds, Nil))
+    commit(dir, Entry(v, "append", System.currentTimeMillis(), adds, Nil))
     v
   }
 
@@ -500,144 +349,6 @@ object VersionedTable {
     v
   }
 
-  // -------------------------------------------------- tagged file groups
-
-  /** One logical sub-table of a multi-part commit ([[appendTagged]]):
-    * `tag` names the group (letters/digits only — it becomes a filename
-    * segment), `statsCol` opts the group's files into per-file [min,max]
-    * stats on that BIGINT column, and `nChunks > 1` additionally
-    * range-partitions the rows so each file covers a DISJOINT key range
-    * (`repartitionByRange`) — the layout that makes [[readTaggedPruned]]
-    * a point-lookup file prune instead of a full scan.
-    */
-  final case class TaggedPart(tag: String, df: DataFrame,
-      statsCol: Option[String] = None, nChunks: Int = 1)
-
-  /** Commit SEVERAL logical tables as ONE atomic version — the move that
-    * lets an index keep narrow lookup rows and wide payload rows in
-    * separate file groups WITHOUT giving up single-commit atomicity
-    * (round-14 verdict: "atomicity lives in the commit log, not in
-    * single-table-ness"). Each part's files carry a tag segment in their
-    * name (`v<version>-<tag>-<i>-<uuid>.parquet`); [[readTagged]] /
-    * [[readTaggedPruned]] address one group, the commit either lands all
-    * groups' files or none. Stats-bearing files are recorded FIRST in
-    * `adds` so the entry's parallel-prefix mins/maxs stay aligned.
-    *
-    * Stats come from one narrow re-scan of each staged group (the
-    * sandbox-honest stand-in for the parquet footer stats a production
-    * writer gets free); `nChunks > 1` costs one range shuffle at write
-    * time — an ingest/compaction-side cost, never a read-side one.
-    */
-  def appendTagged(parts: Seq[TaggedPart], dir: String,
-      op: String = "append"): Int = {
-    require(parts.nonEmpty, "appendTagged needs at least one part")
-    require(parts.map(_.tag).distinct.size == parts.size, "duplicate tags")
-    parts.foreach(p => require(
-      p.tag.nonEmpty && p.tag.forall(_.isLetterOrDigit),
-      s"tag '${p.tag}' must be non-empty letters/digits"))
-    Files.createDirectories(Paths.get(dir))
-    val v = currentVersion(dir) + 1
-    val staged: Seq[(String, Option[(Long, Long)])] =
-      parts.flatMap(p => stageTagged(p, dir, v))
-    val (withStats, without) = staged.partition(_._2.isDefined)
-    val adds = withStats.map(_._1) ++ without.map(_._1)
-    commit(dir, Entry(v, op, System.currentTimeMillis(), adds, Nil,
-      withStats.map(_._2.get._1), withStats.map(_._2.get._2)))
-    v
-  }
-
-  // stage one tagged part; returns (finalName, stats) per data file
-  private def stageTagged(p: TaggedPart, dir: String, v: Int)
-      : Seq[(String, Option[(Long, Long)])] = {
-    val tmp = Files.createTempDirectory("vtab_stage").toString
-    val out = p.statsCol match {
-      case Some(sc) if p.nChunks > 1 =>
-        p.df.repartitionByRange(p.nChunks, col(sc))
-          .sortWithinPartitions(col(sc))
-      case _ => p.df
-    }
-    out.write.mode("overwrite").parquet(tmp)
-    val partsOnDisk = listDir(Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
-    val stats: Map[String, (Long, Long)] = p.statsCol match {
-      case Some(sc) if partsOnDisk.nonEmpty =>
-        p.df.sparkSession.read.parquet(tmp)
-          .groupBy(input_file_name().as("f"))
-          .agg(min(col(sc)).as("mn"), max(col(sc)).as("mx"))
-          .collect().map { r =>
-            (Paths.get(new java.net.URI(r.getString(0)).getPath)
-              .getFileName.toString, (r.getLong(1), r.getLong(2)))
-          }.toMap
-      case _ => Map.empty
-    }
-    partsOnDisk.map { f =>
-      val base = f.getFileName.toString
-      val name = f"v$v%08d-${p.tag}-${partsOnDisk.indexOf(f)}%05d-" +
-        java.util.UUID.randomUUID.toString.replace("-", "") + ".parquet"
-      Files.move(f, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      (name, stats.get(base))
-    }
-  }
-
-  // tag segment of a data-file name, None for untagged (3-segment) files
-  private def tagOf(name: String): Option[String] = {
-    val seg = name.stripSuffix(".parquet").split('-')
-    if (seg.length == 4) Some(seg(1)) else None
-  }
-
-  /** Live files of one tagged group at `asOf` (default: latest). */
-  def liveTagged(dir: String, tag: String,
-      asOf: Option[Int] = None): Seq[String] =
-    liveFiles(dir, asOf).filter(f => tagOf(f).contains(tag))
-
-  /** Snapshot read of ONE tagged file group — the per-group twin of
-    * [[read]] over a table committed via [[appendTagged]].
-    */
-  def readTagged(spark: SparkSession, dir: String, tag: String,
-      asOf: Option[Int] = None): DataFrame = {
-    val files = liveTagged(dir, tag, asOf)
-    require(files.nonEmpty,
-      s"no '$tag' data at version ${asOf.getOrElse("latest")}")
-    spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-  }
-
-  /** Stats-pruned read of one tagged group: opens ONLY files whose
-    * recorded [min, max] range satisfies `keep` (files without stats are
-    * conservatively scanned). Unlike [[readPruned]]'s single [lo, hi],
-    * `keep` is an arbitrary range predicate — a point-set probe passes
-    * "does any candidate key fall in [mn, mx]", which over
-    * range-disjoint chunked files ([[TaggedPart.nChunks]]) reads only
-    * the candidate keys' own files.
-    */
-  def readTaggedPruned(spark: SparkSession, dir: String, tag: String,
-      keep: (Long, Long) => Boolean): Pruned = {
-    val live = liveTagged(dir, tag)
-    require(live.nonEmpty, s"no '$tag' data")
-    val es = entries(dir)
-    val kept = live.filter { f =>
-      es.flatMap(_.statsFor(f)).headOption match {
-        case Some((mn, mx)) => keep(mn, mx)
-        case None           => true
-      }
-    }
-    require(kept.nonEmpty, "predicate prunes every file — empty scan")
-    Pruned(spark.read.parquet(kept.map(f => s"$dir/$f"): _*),
-      live.size, kept.size)
-  }
-
-  /** Commit a version that removes EVERY live file (all tags) — the
-    * table is empty after it; appends resume normally. Used by bounded
-    * staging tables (the gate's pending buffer) whose contents are
-    * consumed at a coalescing boundary; `op` stamps the clear for
-    * replay idempotence ([[hasOp]]).
-    */
-  def truncate(dir: String, op: String = "truncate"): Int = {
-    val v = currentVersion(dir) + 1
-    commit(dir, Entry(v, op, System.currentTimeMillis(), Nil,
-      liveFiles(dir)))
-    v
-  }
-
   /** Result of a stats-pruned read: the DataFrame over the surviving
     * files plus the live/scanned file counts (the skip ratio a 100 TB
     * reader banks on).
@@ -667,39 +378,13 @@ object VersionedTable {
       live.size, keep.size)
   }
 
-  /** Idempotent append keyed to an external transaction id — the
-    * exactly-once STREAMING SINK contract (Delta's txn appId/version
-    * idea): the commit's version slot IS `txnId`, so a replayed
-    * micro-batch (restart after a crash between sink write and
-    * checkpoint advance) loses the CREATE_NEW race against its own
-    * earlier commit and becomes a no-op instead of a duplicate. Returns
-    * true when this call committed, false when the txn was already in.
-    * Requires callers to feed a gapless txn sequence (a streaming
-    * query's batchId is exactly that).
-    */
-  def idempotentAppend(df: DataFrame, dir: String, txnId: Long): Boolean = {
-    Files.createDirectories(Paths.get(dir))
-    val v = txnId.toInt
-    if (Files.exists(entryPath(dir, v))) return false
-    val adds = stageIn(df, dir, v)
-    try {
-      commit(dir, Entry(v, "append", System.currentTimeMillis(), adds, Nil))
-      true
-    } catch { case _: ConflictException =>
-      // the replayed batch's staged files are orphans: never referenced
-      // by any log entry, invisible to readers, reclaimed by [[vacuum]]
-      adds.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
-      false
-    }
-  }
-
   /** MERGE (upsert): rows of `updates` replace same-key rows, unmatched
     * updates insert. Only data files CONTAINING a matched key are
     * rewritten — the rest of the table is untouched metadata. One
     * left-semi file-discovery pass, one rewrite of the touched subset.
     */
   def merge(spark: SparkSession, dir: String, updates: DataFrame,
-      keys: Seq[String], op: String = "merge"): Int = {
+      keys: Seq[String]): Int = {
     val v = currentVersion(dir) + 1
     val cur = read(spark, dir).withColumn("_file", input_file_name())
     val touched = cur.join(broadcast(updates.select(keys.map(col): _*)
@@ -715,7 +400,7 @@ object VersionedTable {
       .join(updates, keys, "left_anti")
       .unionByName(updates)
     val adds = stageIn(rewritten, dir, v)
-    commit(dir, Entry(v, op, System.currentTimeMillis(), adds, touched))
+    commit(dir, Entry(v, "merge", System.currentTimeMillis(), adds, touched))
     v
   }
 

@@ -183,9 +183,7 @@ object CorpusOps {
     */
   /** The CDC chunking pipeline itself over a frame carrying a token-array
     * column "t" (plus any passthrough columns named in `keep`) — the
-    * single source of the boundary/digest convention, shared by the
-    * batch pass and the streaming twin
-    * ([[graft.streaming.StreamingOps.cdcDedupStream]]). One exploded row
+    * single source of the boundary/digest convention. One exploded row
     * per chunk: keep ++ (chunk_idx, start_tok, n_tok, chunk_hash).
     */
   private[graft] def cdcChunked(d: DataFrame, keep: Seq[String]): DataFrame = {

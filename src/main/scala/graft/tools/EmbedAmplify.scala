@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    outside the written table and biasing recall upward;
   *  - the truth table is written alongside: (vec_a = b, vec_b = b +
   *    r_b·off). Exact pair cosines are recomputed from the STORED
-  *    floats by the consumer ([[graft.tools.ShardedRecall]]) — the
+  *    floats by the consumer (the recall sweep in SURVEY §9) — the
   *    plant is only the generator; the measurement trusts the data.
   *
   * Usage: runMain graft.tools.EmbedAmplify [src] [out] [k]

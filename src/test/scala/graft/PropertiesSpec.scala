@@ -242,101 +242,12 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("versioned table: random op sequences match an in-memory model") {
-    versionedTableModel(graft.sources.VersionedTable.AtomicLogStore)
-  }
-
-  test("versioned table: the same random-op model holds on the object store") {
-    // the object store must be behaviorally indistinguishable for a
-    // single writer: identical versions, identical reads — in BOTH its
-    // conditional-PUT (default) and legacy blind-PUT modes
-    versionedTableModel(new graft.sources.VersionedTable.ObjectLogStore())
-    versionedTableModel(new graft.sources.VersionedTable.ObjectLogStore(
-      conditionalPut = false))
-  }
-
-  test("object store: racing writers resolve to exactly one winner") {
-    import graft.sources.VersionedTable
-    import graft.sources.VersionedTable.{Entry, ObjectLogStore}
-    // case 1: the slot is finalized before this writer claims -> loser
-    val d1 = java.nio.file.Files.createTempDirectory("olsrace1").toString
-    VersionedTable.withLogStore(new ObjectLogStore()) {
-      VersionedTable.commit(d1, Entry(0, "w1", 1L, Seq("a.parquet"), Nil))
-      intercept[VersionedTable.ConflictException] {
-        VersionedTable.commit(d1, Entry(0, "w2", 2L, Seq("b.parquet"), Nil))
-      }
-    }
-    assert(VersionedTable.entries(d1).map(_.op) == Seq("w1"))
-
-    // case 2: a racer's FULL commit lands inside the claim window
-    // (between this writer's claim arbitration and its final PUT) — the
-    // second existence check must turn this writer into the loser
-    // instead of letting it blindly clobber the racer's final object
-    val d2 = java.nio.file.Files.createTempDirectory("olsrace2").toString
-    val victim = new ObjectLogStore(beforeClaim = () =>
-      // the racer lands deterministically via the atomic store — the
-      // victim's detection must not depend on HOW the final appeared
-      VersionedTable.withLogStore(VersionedTable.AtomicLogStore) {
-        VersionedTable.commit(d2, Entry(0, "racer", 1L, Seq("r.parquet"), Nil))
-      })
-    intercept[VersionedTable.ConflictException] {
-      VersionedTable.withLogStore(victim) {
-        VersionedTable.commit(d2, Entry(0, "victim", 2L, Seq("v.parquet"), Nil))
-      }
-    }
-    // exactly one commit stands, and it is the racer's
-    assert(VersionedTable.entries(d2).map(_.op) == Seq("racer"))
-
-    // case 3: the round-9 residual window — the racer lands between the
-    // second existence check and the final PUT. Two sub-cases:
-    //
-    // 3a (LEGACY blind-PUT mode): the victim overwrites the racer, reads
-    // back its own bytes, and wrongly believes it won — the lost update
-    // stays PINNED as the machine-checked statement of why blind PUT +
-    // read-back cannot be a commit protocol.
-    val d3 = java.nio.file.Files.createTempDirectory("olsrace3").toString
-    val blind = new ObjectLogStore(beforePut = () =>
-      VersionedTable.withLogStore(VersionedTable.AtomicLogStore) {
-        VersionedTable.commit(d3, Entry(0, "racer", 1L, Seq("r.parquet"), Nil))
-      }, conditionalPut = false)
-    VersionedTable.withLogStore(blind) {
-      VersionedTable.commit(d3, Entry(0, "victim", 2L, Seq("v.parquet"), Nil))
-    } // no exception: the victim cannot see its overwrite
-    assert(VersionedTable.entries(d3).map(_.op) == Seq("victim"),
-      "the racer's entry is silently replaced — the documented lost update")
-
-    // 3b (DEFAULT conditional-PUT mode): the SAME interleaving now
-    // resolves to exactly one winner — the racer's committed entry
-    // survives and the victim's If-None-Match PUT fails into a clean
-    // ConflictException. This is the round-10 closure: no interleaving
-    // loses a commit.
-    val d4 = java.nio.file.Files.createTempDirectory("olsrace4").toString
-    val condput = new ObjectLogStore(beforePut = () =>
-      VersionedTable.withLogStore(VersionedTable.AtomicLogStore) {
-        VersionedTable.commit(d4, Entry(0, "racer", 1L, Seq("r.parquet"), Nil))
-      })
-    intercept[VersionedTable.ConflictException] {
-      VersionedTable.withLogStore(condput) {
-        VersionedTable.commit(d4, Entry(0, "victim", 2L, Seq("v.parquet"), Nil))
-      }
-    }
-    assert(VersionedTable.entries(d4).map(_.op) == Seq("racer"),
-      "conditional PUT must preserve the racer's committed entry")
-
-    // no stray claim objects survive any outcome
-    for (d <- Seq(d1, d2, d3, d4)) {
-      val log = new java.io.File(s"$d/_log").listFiles().map(_.getName)
-      assert(log.forall(!_.contains(".claim-")), log.mkString(","))
-    }
-  }
-
-  private def versionedTableModel(
-      store: graft.sources.VersionedTable.LogStore): Unit = {
     import graft.sources.VersionedTable
     val opsGen = Gen.listOfN(8, Gen.frequency(
       4 -> Gen.listOfN(3, Gen.chooseNum(0L, 30L)).map(ids => ("append", ids)),
       3 -> Gen.listOfN(3, Gen.chooseNum(0L, 30L)).map(ids => ("merge", ids)),
       1 -> Gen.const(("compact", Nil))))
-    for (ops <- Seq(opsGen.sample.get)) VersionedTable.withLogStore(store) {
+    for (ops <- Seq(opsGen.sample.get)) {
       val dir = java.nio.file.Files.createTempDirectory("vtabp").toString
       var model = Map.empty[Long, String]
       var version = -1

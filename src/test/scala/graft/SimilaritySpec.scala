@@ -146,51 +146,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall > 0.0, "IVF with nprobe=2 found none of the true top-k")
   }
 
-  test("persisted IVF index: probe filter becomes partition pruning") {
-    val out = java.nio.file.Files.createTempDirectory("ivf_idx").toString + "/idx"
-    Similarity.ivfIndexWrite(spark, sf, out)
-    // the layout is hive-partitioned by cid
-    val dirs = new java.io.File(out).listFiles().map(_.getName)
-      .filter(_.startsWith("cid=")).sorted
-    assert(dirs.nonEmpty && dirs.forall(_.matches("cid=\\d+")))
-    val probes = Seq(0, 3)
-    val probed = Similarity.ivfProbeRead(spark, out, probes)
-    // plan: the cid predicate must be INSIDE the PartitionFilters list —
-    // bare contains("PartitionFilters") is vacuous (the scan node always
-    // prints the field, even empty) and a post-scan Filter would still
-    // mention cid elsewhere in the plan
-    val scan = probed.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(scan).isDefined, scan)
-    // the pruned scan reads exactly the probed partitions' rows
-    val full = spark.read.parquet(out)
-    val expect = full.where(col("cid").isin(0, 3)).count()
-    assert(probed.count() == expect && probed.count() > 0)
-    // metric-level proof: the pruned scan OPENS fewer files than the full
-    // scan (input_file_name on surviving rows can't see unopened files;
-    // the scan's numFiles metric can)
-    def numFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      // execute THIS dataframe's own physical plan — df.count() builds a
-      // separate QueryExecution, leaving these metrics untouched
-      df.queryExecution.toRdd.count()
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      // AQE hides the executed scan inside AdaptiveSparkPlanExec — collect
-      // on the outer plan sees a pre-execution copy with empty metrics
-      def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scans)
-      }
-      val ss = scans(df.queryExecution.executedPlan)
-      assert(ss.nonEmpty, df.queryExecution.executedPlan.toString)
-      ss.map(_.metrics("numFiles").value).sum
-    }
-    val prunedFiles = numFiles(Similarity.ivfProbeRead(spark, out, probes))
-    val allFiles = numFiles(spark.read.parquet(out))
-    assert(prunedFiles > 0 && prunedFiles < allFiles,
-      s"pruned scan opened $prunedFiles of $allFiles files")
-  }
-
   test("label centroids: tight cluster scores 1.0, orthogonal pair scores 1/sqrt(2)") {
     val dir = java.nio.file.Files.createTempDirectory("centfix").toString
     // label 0: three IDENTICAL unit vectors → centroid = the vector,
@@ -388,6 +343,25 @@ class SimilaritySpec extends SparkSpec {
     assert(got == expected)
     // truncation must lose SOMETHING somewhere or the eval has no signal
     assert(got.map(_._3).sum < got.map(_._2).sum)
+  }
+
+  test("ivf ingest ledger: batches carve the corpus and roll up to the one-shot assignment") {
+    def num(r: org.apache.spark.sql.Row, i: Int) = r.getAs[Number](i).longValue
+    val ledger = Similarity.ivfIngest(spark, sf).collect()
+      .map(r => (num(r, 0), num(r, 1), num(r, 2), num(r, 3)))
+    assert(ledger.nonEmpty)
+    // every micro-batch holds exactly the vectors with its id residue
+    val ids = Similarity.embeddings(spark, sf).select("vec_id").as[Long].collect()
+    val perBatch = ledger.groupBy(_._1).map { case (b, rs) => b -> rs.map(_._3).sum }
+    assert(perBatch == ids.groupBy(_ % Similarity.IngestBatches)
+      .map { case (b, xs) => b -> xs.length.toLong })
+    // summed over batches, each cluster's count and id checksum equal the
+    // one-shot assignment's
+    val rolled = ledger.groupBy(_._2)
+      .map { case (c, rs) => c -> ((rs.map(_._3).sum, rs.map(_._4).sum)) }
+    val oneShot = Similarity.ivfAssign(spark, sf).collect()
+      .map(r => num(r, 0) -> ((num(r, 1), num(r, 2)))).toMap
+    assert(rolled == oneShot)
   }
 
   test("ivf update: old-snapshot centroids, batch carve and counts replay") {
@@ -802,7 +776,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("sharded incremental: persisted index probe equals in-plan, stored side never recoded") {
+  test("sharded incremental: in-plan probe emits only true cross-split near-dups") {
     // in-plan declared twin
     val inPlan = Similarity.shardedIncrementalNear(spark, sf)
       .as[(Long, Long, Double)].collect().toSet
@@ -824,76 +798,6 @@ class SimilaritySpec extends SparkSpec {
         else None
       }.toSet
     assert(inPlan.subsetOf(truth), s"invented pairs: ${inPlan -- truth}")
-    // persisted path: write the index, probe the new batch against it
-    val idx = java.nio.file.Files.createTempDirectory("sharded_idx").toString
-    Similarity.shardedIndexWrite(spark, sf, idx)
-    val e = Similarity.embeddings(spark, sf)
-    val stored = e.where(pmod(col("vec_id"), lit(10)) < 8)
-    val fresh = e.where(pmod(col("vec_id"), lit(10)) >= 8)
-    // the probe reads the frozen width from the index's own meta
-    // artifact (round-12 ADVICE: a caller-supplied w could silently
-    // mis-code the batch); check it matches the build-time derivation
-    val (metaW, metaN) = Similarity.shardedIndexMeta(spark, idx)
-    assert(metaW == Similarity.lshPlanesFor(stored.count()))
-    assert(metaN == stored.count())
-    val probed = Similarity.shardedIncrementalFromIndex(spark, idx, fresh)
-    assert(probed.as[(Long, Long, Double)].collect().toSet == inPlan)
-    // plan proof: stored side scans the index parquet (no embeddings
-    // table feeds it) and the probe joins by broadcast
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("sharded_idx"), s"no index scan in plan:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-      s"no broadcast probe in plan:\n$plan")
-  }
-
-  test("sharded index: width drift detected and migration rebuilds at the fresh width") {
-    // a corpus sized just under a width boundary: lshPlanesFor picks w
-    // from ceil(log2(n/128)), so 128·2^4 = 2048 vectors is the last
-    // count at w=4+... use synthetic vectors (deterministic hash fill)
-    def vecs(n: Long): org.apache.spark.sql.DataFrame =
-      spark.range(n).select(col("id").as("vec_id"),
-        expr("transform(sequence(0, 63), i -> " +
-          "CAST(pmod(hash(id * 64 + i), 1000) AS DOUBLE) / 500.0 - 1.0)")
-          .as("v"))
-        .withColumn("nrm", sqrt(Dedup.dot(col("v"), col("v"))))
-    val small = vecs(600)
-    val big = vecs(9000) // 9000 div 128 = 70: a rebuild today picks w=6 > 4
-    val idx = java.nio.file.Files.createTempDirectory("drift_idx").toString
-    val w0 = Similarity.shardedIndexBuild(spark, small, idx)
-    assert(w0 == Similarity.lshPlanesFor(600))
-    // no drift while the stored corpus matches the build
-    val d0 = Similarity.shardedIndexDrift(spark, idx).head()
-    assert(!d0.getBoolean(4) && d0.getInt(0) == w0)
-    // simulate sustained ingest: the vector artifact grows past the
-    // frozen width's design point (append-only, as the gate does)
-    big.where(col("vec_id") >= 600).select("vec_id", "v", "nrm")
-      .write.mode("append").parquet(s"$idx/vectors")
-    val d1 = Similarity.shardedIndexDrift(spark, idx).head()
-    assert(d1.getBoolean(4), s"drift not detected: $d1")
-    assert(d1.getInt(0) == w0 && d1.getLong(2) == 9000L)
-    assert(d1.getInt(3) == Similarity.lshPlanesFor(9000))
-    // migrate: rebuild at the fresh width into a new location
-    val idx2 = java.nio.file.Files.createTempDirectory("drift_idx2").toString
-    val (oldW, newW) = Similarity.shardedIndexMigrate(spark, idx, idx2)
-    assert(oldW == w0 && newW == Similarity.lshPlanesFor(9000) && newW > oldW)
-    val (mw, mn) = Similarity.shardedIndexMeta(spark, idx2)
-    assert(mw == newW && mn == 9000L)
-    // the migrated index is drift-free and carries every vector
-    val d2 = Similarity.shardedIndexDrift(spark, idx2).head()
-    assert(!d2.getBoolean(4))
-    assert(spark.read.parquet(s"$idx2/vectors").count() == 9000L)
-    // bucket rows were re-coded at the NEW params (row count = n·R·T of
-    // the new width, not the old)
-    val psNew = Similarity.shardedParamsFor(newW)
-    assert(spark.read.parquet(s"$idx2/buckets").count() ==
-      9000L * psNew.replicas * psNew.fineTables)
-    // probes against the migrated index need no caller-supplied width
-    // and return only true near-dups
-    val probe = Similarity.shardedIncrementalFromIndex(spark, idx2,
-      vecs(9010).where(col("vec_id") >= 9000))
-    probe.collect().foreach { r =>
-      assert(r.getDouble(2) >= Dedup.CosineThreshold)
-    }
   }
 
   test("CentroidRouteCol equals the row_number routing semantics, degenerate input pinned") {
@@ -953,40 +857,26 @@ class SimilaritySpec extends SparkSpec {
     assert(degen.toSeq == Seq(0.0, 1.0, Double.PositiveInfinity))
   }
 
-  test("sharded SemDeDup lifecycle: routing freezes, drift law pins, persisted probe equals the in-plan twin") {
-    import org.apache.spark.sql.functions.pmod
-    val idx = java.nio.file.Files.createTempDirectory("semidx").toString
-    val s = Similarity.semShardedIndexWrite(spark, sf, idx)
-    val e = Similarity.embeddings(spark, sf)
-    val storedN = e.where(pmod(col("vec_id"), lit(10)) < 8).count()
-    // meta is self-describing: S and the build count are facts about
-    // the index, read back rather than re-derived or caller-supplied
-    val (ms, mn) = Similarity.semShardedIndexMeta(spark, idx)
-    assert(ms == s && mn == storedN)
-    // routing artifact carries exactly S centroids in rank order
-    val routing = spark.read.parquet(s"$idx/routing")
-      .orderBy("rcid").collect()
-    assert(routing.length == s)
-    assert(routing.map(_.getInt(0)).toSeq == (0 until s))
-    // drift at build size: fresh_s == frozen_s, not drifted
-    val d = Similarity.semShardedIndexDrift(spark, idx).head()
-    assert(d.getInt(0) == s && d.getLong(1) == storedN
-      && d.getLong(2) == storedN && d.getInt(3) == s && !d.getBoolean(4))
-    // the drift LAW at the boundary the fixture cannot reach (the
-    // semShardsFor pins are hand-computed in the CentroidRouteCol test):
-    // one vector past 2·8.4M flips S to 3 → drift; shrink is NOT drift
-    assert(Similarity.semShardedDriftRow(2, 100L, 16777217L) ==
-      ((2, 100L, 16777217L, 3, true)))
-    assert(Similarity.semShardedDriftRow(3, 16777217L, 50L) ==
-      ((3, 16777217L, 50L, 2, false)))
-    // persisted write → read → probe ≡ the in-plan twin on the same
-    // 8:2 split (the shardedIncrementalNear contract, semantic family)
-    val fresh = e.where(pmod(col("vec_id"), lit(10)) >= 8)
-    val got = Similarity.semShardedIncrFromIndex(spark, idx, fresh)
-      .as[(Long, Int, Int, Option[Long], Boolean)].collect().toSeq
+  test("sharded SemDeDup incremental: new-split primaries, pruned only by stored near-dups") {
     val want = Similarity.semanticDedupShardedIncr(spark, sf)
       .as[(Long, Int, Int, Option[Long], Boolean)].collect().toSeq
-    assert(got.nonEmpty && got == want)
+    assert(want.nonEmpty)
+    // one row per new-split vector, in vec_id order; a vector is kept
+    // iff no stored vector pruned it, and a pruner is a stored vector
+    // at cosine >= threshold
+    val vecs = Similarity.embeddings(spark, sf).select("vec_id", "v", "nrm")
+      .as[(Long, Array[Double], Double)].collect()
+      .map(r => r._1 -> r).toMap
+    assert(want.map(_._1) == vecs.keys.filter(_ % 10 >= 8).toSeq.sorted)
+    want.foreach { case (id, _, _, prunedBy, kept) =>
+      assert(kept == prunedBy.isEmpty, s"vec $id")
+      prunedBy.foreach { p =>
+        assert(p % 10 < 8, s"vec $id pruned by new-split $p")
+        val (_, a, na) = vecs(id); val (_, b, nb) = vecs(p)
+        val cos = a.zip(b).map { case (x, y) => x * y }.sum / (na * nb)
+        assert(cos >= Dedup.CosineThreshold - 1e-9, s"vec $id by $p: $cos")
+      }
+    }
   }
 
   test("semShardedAssign parity with the round-13 driver-side construction at S = 2 and S = 5") {

@@ -42,25 +42,6 @@ class SourcesSpec extends SparkSpec {
     assert(rows(Sources.readParquet(spark, out)) == rows(sample))
   }
 
-  test("parquet file-source stream drains directory drops as micro-batches") {
-    val dir = Files.createTempDirectory("graft_stream").toString
-    val schema = sample.schema
-    sample.limit(100).write.mode("append").parquet(dir)
-    val q = graft.streaming.StreamingOps.parquetStream(spark, schema, dir)
-      .groupBy("o_orderstatus").count()
-      .writeStream.format("memory").queryName("filestream")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val first = spark.table("filestream").as[(String, Long)].collect().toMap
-      assert(first.values.sum == 100)
-      sample.limit(150).write.mode("append").parquet(dir) // second drop
-      q.processAllAvailable()
-      val second = spark.table("filestream").as[(String, Long)].collect().toMap
-      assert(second.values.sum == 250)
-    } finally q.stop()
-  }
-
   test("partitioned parquet prunes partitions on the filter") {
     val dir = Files.createTempDirectory("graft_part").toString
     Sources.writePartitioned(sample, "o_orderstatus", dir)

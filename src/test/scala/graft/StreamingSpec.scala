@@ -1,13 +1,21 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.{UserEvent, UserRunning}
 
+/** The batch event queries of [[StreamingOps]], each checked against an
+  * independent form of the same graph. The streaming oracles below are
+  * spec-local: watermarked Structured Streaming graphs over a
+  * MemoryStream, whose output must equal what the batch query computes
+  * over the same rows.
+  */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
 
   private def ts(min: Long): Timestamp = new Timestamp(min * 60000L)
 
@@ -18,30 +26,71 @@ class StreamingSpec extends SparkSpec {
     (ts(55), 1L, "click", 3.0), // 45-min gap → new session
     (ts(5), 2L, "view", 4.0), (ts(25), 2L, "view", 5.0), (ts(45), 2L, "buy", 6.0))
 
-  test("streaming hourly counts over MemoryStream match batch result") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = StreamingOps.hourlyCounts(events).writeStream
-      .format("memory").queryName("hourly").outputMode("complete").start()
-    try {
-      mem.addData(fixture: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("hourly")
-        .select("hour_start", "event_type", "n", "sum_value")
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      val batch = StreamingOps.hourlyCounts(
-          fixture.toDF("ts", "user_id", "event_type", "value"))
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      assert(streamed == batch && streamed.nonEmpty)
-    } finally q.stop()
+  /** The events table as driver rows (ts, user_id, event_id, event_type,
+    * value), `ts` cast to TIMESTAMP (a watermark needs it) — what a
+    * MemoryStream replays so a streaming graph sees the batch input.
+    */
+  private def eventRows(dir: String): Seq[(Timestamp, Long, Long, String, Double)] =
+    graft.model.Tables.load(spark, dir, "events")
+      .select(col("ts").cast("timestamp"), col("user_id"), col("event_id"),
+        col("event_type"), col("value"))
+      .as[(Timestamp, Long, Long, String, Double)].collect().toSeq
+
+  /** Gap sessionization as a streaming graph: `session_window` merges
+    * overlapping per-event windows in the state store. */
+  private def sessionWindows(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("session_window.start").as("start"),
+        col("session_window.end").as("end"), col("n_events"))
+
+  /** Stream-static enrichment: each micro-batch broadcast-joins the static
+    * customer dimension, then rolls up watermarked hourly windows per
+    * market segment — the streaming form of
+    * [[StreamingOps.enrichedHourlyBatch]].
+    */
+  private def enrichedHourly(events: DataFrame, customers: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "2 hours")
+      .join(broadcast(customers.select(col("c_custkey"), col("c_mktsegment"))),
+        col("user_id") === col("c_custkey"))
+      .groupBy(window(col("ts"), "1 hour"), col("c_mktsegment"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .select(col("window.start").as("hour_start"), col("c_mktsegment"),
+        col("n"), col("sum_value"))
+
+  /** Stream-stream view→click attribution: two watermarked streams joined
+    * on user plus the (0, 1 h] event-time range that lets the state store
+    * evict — the streaming form of [[StreamingOps.attributionBatch]].
+    */
+  private def attributionStream(v: DataFrame, c: DataFrame,
+      joinType: String = "inner"): DataFrame =
+    v.withWatermark("vts", "2 hours")
+      .join(c.withWatermark("cts", "2 hours"),
+        expr("""v_user = c_user AND
+                cts > vts AND cts <= vts + INTERVAL 1 HOUR"""), joinType)
+      .select(col("v_user").as("user_id"), col("view_id"), col("click_id"),
+        (unix_micros(col("cts")) - unix_micros(col("vts"))).as("dt_us"))
+
+  /** The events table's views and clicks in [[attributionStream]]'s input
+    * shape (user, id, event time). */
+  private def viewsClicks(dir: String)
+      : (Seq[(Long, Long, Timestamp)], Seq[(Long, Long, Timestamp)]) = {
+    val rows = eventRows(dir)
+    def of(kind: String) = rows.collect {
+      case (t, u, id, `kind`, _) => (u, id, t)
+    }
+    (of("view"), of("click"))
   }
 
   test("streaming session_window sessions match the gap definition") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long, String, Double)]
     val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = StreamingOps.sessionWindows(events).writeStream
+    val q = sessionWindows(events).writeStream
       .format("memory").queryName("sessions").outputMode("complete").start()
     try {
       mem.addData(fixture: _*)
@@ -52,6 +101,23 @@ class StreamingSpec extends SparkSpec {
       // u1: sessions of 2 and 1 events; u2: one session of 3
       assert(got == Seq((1L, 1L), (1L, 2L), (2L, 3L)))
     } finally q.stop()
+    // over the events table the streamed sessions are the batch query's:
+    // same session count and same total events per user
+    val memSf = MemoryStream[(Timestamp, Long, Long, String, Double)]
+    memSf.addData(eventRows(sf): _*)
+    val qSf = sessionWindows(memSf.toDF()
+        .toDF("ts", "user_id", "event_id", "event_type", "value"))
+      .writeStream.format("memory").queryName("sessions_sf")
+      .outputMode("complete").start()
+    try {
+      qSf.processAllAvailable()
+      def perUser(df: DataFrame) = df.groupBy("user_id")
+        .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
+        .as[(Long, Long, Long)].collect().toSet
+      val streamed = perUser(spark.table("sessions_sf"))
+      assert(streamed == perUser(StreamingOps.sessionsBatch(spark, sf)) &&
+        streamed.nonEmpty)
+    } finally qSf.stop()
   }
 
   test("batch sessionization agrees with session_window on the events table") {
@@ -91,656 +157,49 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static enrichment join matches the batch form of the same graph") {
     implicit val sqlCtx = spark.sqlContext
-    val customers = Seq((1L, "BUILDING"), (2L, "MACHINERY"))
-      .toDF("c_custkey", "c_mktsegment")
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    val q = StreamingOps.enrichedHourly(events, customers).writeStream
+    val customers = graft.model.Tables.load(spark, sf, "customer")
+    val mem = MemoryStream[(Timestamp, Long, Long, String, Double)]
+    mem.addData(eventRows(sf): _*)
+    val events = mem.toDF().toDF("ts", "user_id", "event_id", "event_type", "value")
+    val q = enrichedHourly(events, customers).writeStream
       .format("memory").queryName("enriched").outputMode("complete").start()
     try {
-      mem.addData(fixture: _*)
       q.processAllAvailable()
       val streamed = spark.table("enriched")
-        .as[(Timestamp, String, Long, Double)].collect().toSet
-      val batch = StreamingOps.enrichedHourly(
-          fixture.toDF("ts", "user_id", "event_type", "value"), customers)
-        .as[(Timestamp, String, Long, Double)].collect().toSet
+        .select(unix_seconds(col("hour_start")), col("c_mktsegment"),
+          col("n"), col("sum_value"))
+        .as[(Long, String, Long, Double)].collect().toSet
+      val batch = StreamingOps.enrichedHourlyBatch(spark, sf)
+        .as[(Long, String, Long, Double)].collect().toSet
       assert(streamed == batch && streamed.nonEmpty)
-      // the join really enriched: both users' segments appear
-      assert(streamed.map(_._2) == Set("BUILDING", "MACHINERY"))
+      // the join really enriched: more than one segment appears
+      assert(streamed.map(_._2).size > 1)
     } finally q.stop()
   }
 
-  test("streaming dedup drops within-watermark duplicate event ids") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "event_id", "event_type", "value")
-    val q = StreamingOps.dedupStream(events).writeStream
-      .format("memory").queryName("deduped").outputMode("append").start()
-    try {
-      mem.addData((ts(0), 1L, "click", 1.0), (ts(1), 2L, "view", 2.0),
-        (ts(2), 1L, "click", 1.0)) // dup of event 1
-      q.processAllAvailable()
-      mem.addData((ts(3), 2L, "view", 2.0), (ts(4), 3L, "buy", 3.0)) // dup of 2
-      q.processAllAvailable()
-      val ids = spark.table("deduped").select("event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("late data beyond the watermark is dropped from hourly counts") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "user_id", "event_type", "value")
-    // update mode: watermark-late rows are filtered before the agg, so a
-    // dropped event produces NO output row (complete mode would hide this)
-    val q = StreamingOps.hourlyCounts(events).writeStream
-      .format("memory").queryName("late_hourly").outputMode("update").start()
-    try {
-      // batch 1: events at 0h and 10h → watermark after batch = 10h − 2h = 8h
-      mem.addData((ts(0), 1L, "click", 1.0), (ts(600), 1L, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: out-of-order event at 3h — 5 hours beyond the watermark
-      mem.addData((ts(180), 2L, "view", 9.0))
-      q.processAllAvailable()
-      // batch 3: out-of-order event at 9h — still ≥ watermark, must survive
-      mem.addData((ts(540), 3L, "view", 7.0))
-      q.processAllAvailable()
-      val hours = spark.table("late_hourly")
-        .select(col("hour_start").cast("long") / 3600).as[Double]
-        .collect().toSet
-      assert(!hours.contains(3.0),
-        "watermark-late event leaked into the aggregation")
-      assert(hours == Set(0.0, 10.0, 9.0))
-    } finally q.stop()
-  }
-
-  test("dedup at-least-once boundary: redelivery after state eviction passes") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String, Double)]
-    val events = mem.toDF().toDF("ts", "event_id", "event_type", "value")
-    val q = StreamingOps.dedupStream(events).writeStream
-      .format("memory").queryName("late_dedup").outputMode("append").start()
-    try {
-      // (fixture starts at 1h, not epoch 0: the initial watermark is 0 and
-      // the late-row filter drops rows at-or-before it)
-      // batch 1: event 1 at 1h; traffic at 11h pushes the watermark to 9h
-      mem.addData((ts(60), 1L, "click", 1.0), (ts(660), 2L, "view", 2.0))
-      q.processAllAvailable()
-      // batch 2: unrelated traffic — state eviction runs against the 9h
-      // watermark (eviction lags one batch behind the data that advanced
-      // it), expiring event 1's entry (1h + 2h delay < 9h)
-      mem.addData((ts(670), 3L, "view", 3.0))
-      q.processAllAvailable()
-      // batch 3: event 1 redelivered with a fresh timestamp (typical
-      // at-least-once re-send) — its state is gone, so it passes through:
-      // the documented at-least-once boundary of watermark-bounded dedup
-      mem.addData((ts(690), 1L, "click", 1.0))
-      q.processAllAvailable()
-      val ids = spark.table("late_dedup").select("event_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 1L, 2L, 3L),
-        "evicted-state duplicate must re-emit (at-least-once), not vanish")
-    } finally q.stop()
-  }
-
-  test("streaming paragraph dedup: boilerplate suppressed across and within docs") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val docs = mem.toDF().toDF("ts", "doc_id", "text")
-    // three distinct 32-token paragraph blocks (ParaSize tokens each)
-    def block(p: String): String =
-      (0 until graft.dedup.Dedup.ParaSize).map(i => s"$p$i").mkString(" ")
-    val (a, b, c, d) = (block("a"), block("b"), block("c"), block("d"))
-    val q = StreamingOps.paragraphDedupStream(docs).writeStream
-      .format("memory").queryName("para_dedup").outputMode("append").start()
-    try {
-      // batch 1: doc1 = A|B, doc2 = B|C|C — B recurs across docs, C
-      // within one; only first occurrences may emit (within-batch order
-      // is (doc_id, para_idx) by the fixture's add order)
-      mem.addData((ts(60), 1L, s"$a $b"), (ts(61), 2L, s"$b $c $c"))
-      q.processAllAvailable()
-      // batch 2: doc3 = A|D — A is boilerplate already seen inside the
-      // watermark horizon, D is fresh prose
-      mem.addData((ts(70), 3L, s"$a $d"))
-      q.processAllAvailable()
-      val got = spark.table("para_dedup")
-        .select("doc_id", "para_idx").as[(Long, Int)].collect().toSet
-      assert(got == Set((1L, 0), (1L, 1), (2L, 1), (3L, 1)),
-        s"A/B from doc1, C from doc2, D from doc3 — got $got")
-    } finally q.stop()
-  }
-
-  test("streaming CDC dedup: shifted near-copy dedups chunk-for-chunk") {
-    implicit val sqlCtx = spark.sqlContext
-    def chunksOf(id: Long, text: String): Seq[(Long, Long)] =
-      graft.textanalysis.CorpusOps.cdcChunked(
-        Seq((id, text)).toDF("doc_id", "text")
-          .select(col("doc_id"),
-            graft.dedup.Dedup.tokensCol(col("text")).as("t")),
-        Seq("doc_id")).select("chunk_idx", "chunk_hash")
-        .as[(Long, Long)].collect().toSeq
-    val base = (0 until 120).map(i => s"w${i % 37}x$i").mkString(" ")
-    val shifted = s"inserted words here $base"
-    val c1 = chunksOf(1L, base)
-    val c2 = chunksOf(2L, shifted)
-    val h1 = c1.map(_._2).toSet
-    val fresh2 = c2.filterNot(c => h1(c._2))
-    // the fixture really exercises realignment: multiple chunks, and the
-    // head-shifted copy re-syncs so only a prefix of its chunks is fresh
-    assert(c1.size >= 3 && fresh2.nonEmpty && fresh2.size < c2.size)
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val docs = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = StreamingOps.cdcDedupStream(docs).writeStream
-      .format("memory").queryName("cdc_dedup").outputMode("append").start()
-    try {
-      mem.addData((ts(60), 1L, base))
-      q.processAllAvailable()
-      // batch 2: the shifted near-copy + an exact duplicate
-      mem.addData((ts(61), 2L, shifted), (ts(62), 3L, base))
-      q.processAllAvailable()
-      val got = spark.table("cdc_dedup")
-        .select("doc_id", "chunk_idx", "chunk_hash")
-        .as[(Long, Long, Long)].collect().toSeq
-      // doc1 emits every chunk; the shifted copy emits ONLY its fresh
-      // (insertion-bearing) chunks — content-defined boundaries realign
-      // the tail onto doc1's hashes; the exact duplicate emits nothing
-      assert(got.filter(_._1 == 1L).map(r => (r._2, r._3)).sortBy(_._1) == c1)
-      assert(got.filter(_._1 == 2L).map(r => (r._2, r._3)).sortBy(_._1) ==
-        fresh2.sortBy(_._1))
-      assert(!got.exists(_._1 == 3L))
-    } finally q.stop()
-  }
-
-  test("versioned ingest: a replayed micro-batch commits zero rows") {
-    import graft.sources.VersionedTable
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val docs = mem.toDF().toDF("ts", "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("vingest").toString
-    val q = StreamingOps.versionedIngest(docs, dir)
-    try {
-      mem.addData((ts(60), 1L, "a"), (ts(61), 2L, "b"))
-      q.processAllAvailable()
-      assert(VersionedTable.currentVersion(dir) == 0)
-      assert(VersionedTable.read(spark, dir).count() == 2)
-      // the crash-replay of batch 0: same txn id, same payload — the
-      // idempotent commit loses to its own earlier version, no dupes
-      assert(!VersionedTable.idempotentAppend(
-        Seq((ts(60), 1L, "a"), (ts(61), 2L, "b")).toDF("ts", "doc_id", "text"),
-        dir, 0L))
-      assert(VersionedTable.read(spark, dir).count() == 2)
-      // the stream moves on normally afterwards
-      mem.addData((ts(62), 3L, "c"))
-      q.processAllAvailable()
-      assert(VersionedTable.currentVersion(dir) == 1)
-      assert(VersionedTable.read(spark, dir).count() == 3)
-    } finally q.stop()
-  }
-
-  test("streaming MV maintenance: additive merge, exactly-once, serve = recompute") {
-    import graft.sources.VersionedTable
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv").toString
-    val day0 = 1704067200000000L
-    val mem = MemoryStream[(String, Long, Long, Long)]
-    val events = mem.toDF().toDF("event_type", "ts_us", "user_id", "cents")
-    val q = StreamingOps.mvMaintainStream(events, dir)
-    val b0 = Seq(("click", day0 + 1L, 1L, 100L), ("click", day0 + 2L, 1L, 50L),
-      ("view", day0 + 3L, 2L, 10L))
-    val b1 = Seq(("click", day0 + 4L, 1L, 25L),
-      ("click", day0 + 86400000000L + 5L, 3L, 30L))
-    try {
-      mem.addData(b0: _*); q.processAllAvailable()
-      mem.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-    // replayed micro-batch: its stamp is already in the log → no-op
-    assert(!StreamingOps.mvApplyBatch(
-      b1.toDF("event_type", "ts_us", "user_id", "cents"), dir, 1L))
-    // served view equals a from-scratch recompute over all events
-    val got = StreamingOps.mvServe(spark, dir)
-      .as[(String, Long, Long, Long, Long)].collect().toSeq
-    val all = b0 ++ b1
-    val expected = all.groupBy { case (t, ts, _, _) => (t, ts / 86400000000L) }
-      .map { case ((t, d), rows) =>
-        (t, d, rows.length.toLong, rows.map(_._3).distinct.length.toLong,
-          rows.map(_._4).sum)
-      }.toSeq.sortBy(r => (r._1, r._2))
-    assert(got == expected)
-    // batch 1 touched an existing key (additive, not replace): the
-    // (click, day0, user 1) row carries all three contributions
-    assert(VersionedTable.read(spark, dir)
-      .where(col("event_type") === "click" && col("user_id") === 1L &&
-        col("day") === day0 / 86400000000L)
-      .as[(String, Long, Long, Long, Long)].collect().toSeq
-      .map(r => (r._4, r._5)) == Seq((3L, 175L)))
-  }
-
-  test("MV maintenance survives a crash-restart across the commit window") {
-    // The real recovery contract: run 1 commits its micro-batch to the
-    // versioned table, then CRASHES in the window between the sink
-    // commit and the checkpoint's offset commit (forced here by deleting
-    // the newest commits/ marker). Run 2 resumes from the checkpoint,
-    // re-runs the same batchId against the already-committed table —
-    // the mv-<batchId> stamp must no-op it — then processes the input
-    // queued while the query was down. No loss, no double-count.
-    import graft.sources.VersionedTable
-    val base = java.nio.file.Files.createTempDirectory("graft_mvcr").toString
-    val srcDir = s"$base/src"; val cpDir = s"$base/cp"
-    val mvDir = s"$base/mv"
-    val day0 = 1704067200000000L
-    val sch = "event_type STRING, ts_us LONG, user_id LONG, cents LONG"
-    def stream() = spark.readStream.schema(sch).parquet(srcDir)
-    def start() = StreamingOps.mvMaintainStream(stream(), mvDir, Some(cpDir))
-    val b0 = Seq(("click", day0 + 1L, 1L, 100L), ("view", day0 + 2L, 2L, 10L))
-    val b1 = Seq(("click", day0 + 3L, 1L, 25L), ("buy", day0 + 4L, 3L, 77L))
-    b0.toDF("event_type", "ts_us", "user_id", "cents")
-      .write.mode("append").parquet(srcDir)
-    val q1 = start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    assert(StreamingOps.mvServe(spark, mvDir).count() == 2)
-    // forced crash window: the sink committed, the offset commit did not
-    val commits = new java.io.File(s"$cpDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(commits.nonEmpty)
-    // the local ChecksumFs keeps a .N.crc sidecar; remove both or the
-    // re-committed marker trips over the stale checksum
-    val crc = new java.io.File(commits.last.getParent,
-      "." + commits.last.getName + ".crc")
-    assert(commits.last.delete()); crc.delete()
-    // input arrives while the maintainer is down
-    b1.toDF("event_type", "ts_us", "user_id", "cents")
-      .write.mode("append").parquet(srcDir)
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    // served view = from-scratch recompute: batch 0 counted ONCE despite
-    // its forced redelivery, batch 1 not lost
-    val got = StreamingOps.mvServe(spark, mvDir)
-      .as[(String, Long, Long, Long, Long)].collect().toSeq
-    val expected = (b0 ++ b1)
-      .groupBy { case (t, ts, _, _) => (t, ts / 86400000000L) }
-      .map { case ((t, d), rows) =>
-        (t, d, rows.length.toLong, rows.map(_._3).distinct.length.toLong,
-          rows.map(_._4).sum)
-      }.toSeq.sortBy(r => (r._1, r._2))
-    assert(got == expected, s"got $got")
-    // and the log really carries both batch stamps exactly once
-    val stamps = VersionedTable.entries(mvDir).map(_.op)
-      .filter(_.startsWith("mv-"))
-    assert(stamps.sorted == Seq("mv-0", "mv-1"))
-  }
-
-  test("versioned ingest survives a crash-restart across the commit window") {
-    // same recovery drill for the ingest path: the idempotentAppend txn
-    // id (batchId) must defend against the replayed micro-batch after a
-    // checkpoint-resumed restart, and the queued input must land.
-    import graft.sources.VersionedTable
-    val base = java.nio.file.Files.createTempDirectory("graft_vicr").toString
-    val srcDir = s"$base/src"; val cpDir = s"$base/cp"
-    val tbl = s"$base/tbl"
-    val sch = "ts TIMESTAMP, doc_id LONG, text STRING"
-    def stream() = spark.readStream.schema(sch).parquet(srcDir)
-    def start() = StreamingOps.versionedIngest(stream(), tbl, Some(cpDir))
-    Seq((ts(60), 1L, "a"), (ts(61), 2L, "b"))
-      .toDF("ts", "doc_id", "text").write.mode("append").parquet(srcDir)
-    val q1 = start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    assert(VersionedTable.read(spark, tbl).count() == 2)
-    val commits = new java.io.File(s"$cpDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(commits.last.delete())
-    new java.io.File(commits.last.getParent,
-      "." + commits.last.getName + ".crc").delete()
-    Seq((ts(62), 3L, "c"))
-      .toDF("ts", "doc_id", "text").write.mode("append").parquet(srcDir)
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    val ids = VersionedTable.read(spark, tbl)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L),
-      s"expected exactly-once ingest across restart, got $ids")
-  }
-
-  test("streaming ANN ingest: crash-replay safe, converges to the batch assignment") {
-    // the round-10 composition: arriving vectors are assigned against
-    // the frozen persisted quantizer and appended to the index table
-    // exactly-once; the final index content must equal the batch-twin
-    // one-shot assignment (q_ivf_ingest's underlying rows), ACROSS a
-    // forced crash-restart of the ingest query.
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
+  test("batch attribution matches the streaming join's range semantics") {
+    // the bucketized batch plan and a direct range join must agree —
+    // pins that bucket-edge pairs (view and click in adjacent cells) and
+    // exact-boundary deltas (dt == window) are neither lost nor doubled
     val sf = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory("graft_annicr").toString
-    val srcDir = s"$base/src"; val cpDir = s"$base/cp"
-    val idx = s"$base/idx"
-    // the frozen quantizer a deployment reads from its persisted index
-    val quant = Similarity.quantizer(spark, sf)
-    val all = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val sch = all.schema
-    def stream() = spark.readStream.schema(sch).parquet(srcDir)
-    def start() = StreamingOps.ivfIngestStream(stream(), quant, idx, Some(cpDir))
-    val cut = all.select(org.apache.spark.sql.functions.expr(
-      "percentile(vec_id, 0.5)")).head().getDouble(0).toLong
-    // batch 0: the lower half of the corpus arrives
-    all.where(col("vec_id") <= cut).write.mode("append").parquet(srcDir)
-    val q1 = start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    assert(VersionedTable.currentVersion(idx) == 0)
-    // forced crash window: index committed, offset commit deleted
-    val commits = new java.io.File(s"$cpDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(commits.last.delete())
-    new java.io.File(commits.last.getParent,
-      "." + commits.last.getName + ".crc").delete()
-    // batch 1 arrives while the ingester is down
-    all.where(col("vec_id") > cut).write.mode("append").parquet(srcDir)
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    // exactly-once: batch 0 replayed into a no-op, batch 1 landed
-    assert(VersionedTable.entries(idx).map(_.version) == Seq(0, 1))
-    val got = VersionedTable.read(spark, idx)
-      .select("vec_id", "cid").as[(Long, Int)].collect().toSeq.sorted
-    val expected = Similarity.assignTo(Similarity.withNorm(all), quant)
-      .select("vec_id", "cid").as[(Long, Int)].collect().toSeq.sorted
-    assert(got == expected,
-      "streamed index diverged from the one-shot batch assignment")
-    // the ledger twin agrees: per-(batch, cid) counts from the streamed
-    // table reproduce q_ivf_ingest's declared output
-    val ledger = VersionedTable.read(spark, idx)
-      .groupBy((col("vec_id") % Similarity.IngestBatches).as("batch_id"),
-        col("cid"))
-      .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_vectors"),
-        org.apache.spark.sql.functions.sum("vec_id").as("id_sum"))
-      .as[(Long, Int, Long, Long)].collect().toSeq.sorted
-    val twin = Similarity.ivfIngest(spark, sf)
-      .as[(Long, Int, Long, Long)].collect().toSeq.sorted
-    assert(ledger == twin)
-  }
-
-  test("gate greedy admission: transitive chains admit the survivors, not just the minimum") {
-    import graft.streaming.StreamingOps.greedyAdmission
-    def pairs(ps: (Long, Long)*) = ps.toDF("a", "b")
-    def xd(ids: Long*) = ids.toDF("vec_id")
-    def dropped(p: org.apache.spark.sql.DataFrame,
-        x: org.apache.spark.sql.DataFrame): Set[Long] =
-      greedyAdmission(p, x).as[Long].collect().toSet
-    // the round-12 ADVICE chain: 1~2, 2~3, 1!~3 — greedy admits {1, 3}
-    // (2's drop frees 3; the old form rejected 3 although nothing near
-    // it survives)
-    assert(dropped(pairs(1L -> 2L, 2L -> 3L), xd()) == Set(2L))
-    // 4-chain: alternating drop
-    assert(dropped(pairs(1L -> 2L, 2L -> 3L, 3L -> 4L), xd()) == Set(2L, 4L))
-    // diamond 1~2, 1~3, 2~4, 3~4: 1 admits, 2 and 3 drop, 4 survives
-    assert(dropped(pairs(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L), xd())
-      == Set(2L, 3L))
-    // cross-index drop interacts with the chain: stored kills 1, so 2
-    // survives and drops 3
-    assert(dropped(pairs(1L -> 2L, 2L -> 3L), xd(1L)) == Set(1L, 3L))
-    // a cross-dropped TARGET stays dropped and constrains nobody
-    assert(dropped(pairs(1L -> 2L, 2L -> 3L), xd(2L)) == Set(2L))
-    // empty graph: only cross-index drops
-    assert(dropped(pairs(), xd(7L)) == Set(7L))
-    // the driver fast path (round 13) and the distributed fixed point
-    // must agree — force the distributed branch with a zero edge cap on
-    // every fixture above plus a 60-vertex chain (past the 48-round
-    // guard, which drops the undecided tail conservatively — assert the
-    // guard's contract: a superset of the exact drops, never admitting
-    // a true near-dup's neighbor)
-    def droppedDist(p: org.apache.spark.sql.DataFrame,
-        x: org.apache.spark.sql.DataFrame): Set[Long] =
-      greedyAdmission(p, x, driverEdgeCap = 0).as[Long].collect().toSet
-    for ((p, x) <- Seq(
-        (pairs(1L -> 2L, 2L -> 3L), xd()),
-        (pairs(1L -> 2L, 2L -> 3L, 3L -> 4L), xd()),
-        (pairs(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L), xd()),
-        (pairs(1L -> 2L, 2L -> 3L), xd(1L)),
-        (pairs(1L -> 2L, 2L -> 3L), xd(2L))))
-      assert(droppedDist(p, x) == dropped(p, x))
-    val chain = pairs((1L until 60L).map(i => i -> (i + 1)): _*)
-    val exact = dropped(chain, xd())          // driver path: exact greedy
-    assert(exact == (2L to 60L by 2).toSet)
-    val dist = droppedDist(chain, xd())       // 48-round guard kicks in
-    assert(exact.subsetOf(dist), "guard must over-reject, never under")
-  }
-
-  test("streaming near-dup gate: within-batch and cross-index dups rejected exactly-once") {
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
-    import graft.streaming.StreamingOps
-    val base = java.nio.file.Files.createTempDirectory("graft_gate").toString
-    val srcDir = s"$base/src"; val cpDir = s"$base/cp"; val idx = s"$base/idx"
-    def vec(seed: Long): Array[Double] =
-      Array.tabulate(Similarity.Dim)(i =>
-        (graft.functions.Hashing.h48String(s"gatevec-$seed-$i") % 1000)
-          .toDouble / 500.0 - 1.0)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
+    val direct = {
+      val e = graft.model.Tables.load(spark, sf, "events")
+      val v = e.where(col("event_type") === "view")
+        .select(col("user_id"), col("event_id").as("view_id"),
+          expr("ts_ns div 1000").as("vts"))
+      val c = e.where(col("event_type") === "click")
+        .select(col("user_id").as("cu"), col("event_id").as("click_id"),
+          expr("ts_ns div 1000").as("cts"))
+      v.join(c, col("user_id") === col("cu") &&
+          col("cts") > col("vts") &&
+          col("cts") - col("vts") <= StreamingOps.AttribWindowUs)
+        .select(col("user_id"), col("view_id"), col("click_id"),
+          (col("cts") - col("vts")).as("dt_us"))
+        .as[(Long, Long, Long, Long)].collect().toSet
     }
-    // fixture guard: distinct seeds are genuinely unrelated, duplicates
-    // (same seed, different id) are cosine-1.0 — the gate must drop them
-    val th = graft.dedup.Dedup.CosineThreshold
-    for (a <- Seq(1L, 2L, 4L); b <- Seq(1L, 2L, 4L) if a < b)
-      assert(cos(vec(a), vec(b)) < th, s"fixture seeds $a,$b too close")
-    val w = Similarity.lshPlanesFor(5)
-    val sch = spark.createDataFrame(Seq((1L, vec(1))).map(t => (t._1, t._2)))
-      .toDF("vec_id", "embedding").schema
-    def write(rows: Seq[(Long, Array[Double])]): Unit =
-      rows.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
-    def start() = StreamingOps.shardedGateStream(
-      spark.readStream.schema(sch).parquet(srcDir), idx, w, Some(cpDir))
-    // batch 0: two unrelated vectors — both admitted
-    write(Seq(1L -> vec(1), 2L -> vec(2)))
-    val q1 = start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    assert(VersionedTable.currentVersion(idx) == 0)
-    assert(VersionedTable.readTagged(spark, idx, "gv").select("vec_id")
-      .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    // forced crash window: index committed, offset commit deleted
-    val commits = new java.io.File(s"$cpDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(commits.last.delete())
-    new java.io.File(commits.last.getParent,
-      "." + commits.last.getName + ".crc").delete()
-    // batch 1 arrives while the gate is down: an exact copy of stored
-    // vector 1 (cross-index dup), a fresh vector, and a within-batch
-    // copy of that fresh vector
-    write(Seq(3L -> vec(1), 4L -> vec(4), 5L -> vec(4)))
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    // exactly-once across the replay: batch 0 no-ops (its own rows are
-    // in the index and would self-dup, but the txn stamp wins first),
-    // batch 1 admits ONLY the fresh vector
-    assert(VersionedTable.entries(idx).map(_.version) == Seq(0, 1))
-    val ids = VersionedTable.readTagged(spark, idx, "gv")
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    assert(ids == Seq(1L, 2L, 4L),
-      s"gate admitted the wrong set: $ids")
-    // manual replay of batch 1 is refused by the txn stamp
-    val batch1 = Seq(3L -> vec(1), 4L -> vec(4), 5L -> vec(4))
-      .toDF("vec_id", "embedding")
-    assert(!StreamingOps.shardedGateBatch(batch1, idx, w, 1L))
-    // the persisted two-group layout: narrow cell rows (vec_id, ck) and
-    // payload rows (vec_id, v, nrm) — the next batch's probe joins cells
-    // without any vector riding, and fetches payloads only for candidate
-    // pairs; neither group is ever re-coded
-    assert(VersionedTable.readTagged(spark, idx, "gv").columns.toSet ==
-      Set("vec_id", "v", "nrm"))
-    assert(VersionedTable.readTagged(spark, idx, "gc").columns.toSet ==
-      Set("vec_id", "ck"))
-    // cell rows per admitted vector = R·T (the coded explode, persisted)
-    val psG = graft.similarity.Similarity.shardedParamsFor(w)
-    assert(VersionedTable.readTagged(spark, idx, "gc").count() ==
-      3L * psG.replicas * psG.fineTables)
-  }
-
-  test("gate over a SEEDED index: no version collision, seed visible to the probe, seed and batch replays no-op") {
-    // round-14 regression pin: the old gate keyed idempotency on the
-    // VERSION number (= batchId), so any pre-populated index collided
-    // with batch 0 and silently swallowed it; and a version −1 seed
-    // sat below the checkpoint floor and vanished from the log fold.
-    // Stamps decouple replay identity from version numbering.
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
-    import graft.streaming.StreamingOps
-    val idx = java.nio.file.Files.createTempDirectory("graft_gseed").toString
-    def vec(seed: Long): Array[Double] =
-      Array.tabulate(Similarity.Dim)(i =>
-        (graft.functions.Hashing.h48String(s"gseed-$seed-$i") % 1000)
-          .toDouble / 500.0 - 1.0)
-    val w = Similarity.lshPlanesFor(20)
-    val seedDf = (0L until 20L).map(i => i -> vec(i))
-      .toDF("vec_id", "embedding")
-    assert(StreamingOps.shardedGateSeed(seedDf, idx, w))
-    assert(!StreamingOps.shardedGateSeed(seedDf, idx, w)) // seed replay
-    assert(VersionedTable.readTagged(spark, idx, "gv").count() == 20L)
-    // batch 0 on the seeded index: an exact copy of stored vector 3
-    // (cross-index dup — provable only if the probe SEES the seed) and
-    // one fresh vector
-    val b0 = Seq(100L -> vec(3), 101L -> vec(777L))
-      .toDF("vec_id", "embedding")
-    assert(StreamingOps.shardedGateBatch(b0, idx, w, 0L))
-    val ids = VersionedTable.readTagged(spark, idx, "gv")
-      .where(col("vec_id") >= 100L).select("vec_id")
-      .as[Long].collect().toSeq
-    assert(ids == Seq(101L), s"seeded gate admitted: $ids")
-    assert(VersionedTable.readTagged(spark, idx, "gv").count() == 21L)
-    // batch replay refused by its stamp; versions stay dense 0..1
-    assert(!StreamingOps.shardedGateBatch(b0, idx, w, 0L))
-    assert(VersionedTable.entries(idx).map(_.version) == Seq(0, 1))
-  }
-
-  test("gate replay stamp survives the auto-checkpoint fold (round-14 ADVICE)") {
-    // commit() auto-checkpoints every 10th version, and the fold used to
-    // erase the gate-<batchId> stamp — a crash-replay of a
-    // checkpoint-boundary batch appended duplicates. hasOp carries the
-    // folded stamps, so EVERY past batch replays into a no-op.
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
-    import graft.streaming.StreamingOps
-    val idx = java.nio.file.Files.createTempDirectory("graft_gcp").toString
-    def vec(seed: Long): Array[Double] =
-      Array.tabulate(Similarity.Dim)(i =>
-        (graft.functions.Hashing.h48String(s"gcp-$seed-$i") % 1000)
-          .toDouble / 500.0 - 1.0)
-    val w = Similarity.lshPlanesFor(12)
-    def batchDf(i: Long) = Seq(i -> vec(i)).toDF("vec_id", "embedding")
-    for (i <- 0L to 11L)
-      assert(StreamingOps.shardedGateBatch(batchDf(i), idx, w, i))
-    // the fold really happened: a raw .op scan is blind to gate-3
-    val es = VersionedTable.entries(idx)
-    assert(es.exists(_.op == "checkpoint") && !es.exists(_.op == "gate-3"),
-      "fixture failed to reproduce the checkpoint fold")
-    val n = VersionedTable.readTagged(spark, idx, "gv").count()
-    // replaying any batch — folded (3) or live (11) — is refused
-    assert(!StreamingOps.shardedGateBatch(batchDf(3), idx, w, 3L))
-    assert(!StreamingOps.shardedGateBatch(batchDf(11), idx, w, 11L))
-    assert(VersionedTable.readTagged(spark, idx, "gv").count() == n)
-  }
-
-  test("gate probe file-prunes the chunked cell group (reads only candidate cells)") {
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
-    import graft.streaming.StreamingOps
-    val idx = java.nio.file.Files.createTempDirectory("graft_gpr").toString
-    def vec(seed: Long): Array[Double] =
-      Array.tabulate(Similarity.Dim)(i =>
-        (graft.functions.Hashing.h48String(s"gpr-$seed-$i") % 1000)
-          .toDouble / 500.0 - 1.0)
-    val w = Similarity.lshPlanesFor(256)
-    // tiny files on purpose (the deployment knob): many range-disjoint
-    // cell chunks, so a 1-vector probe's R·T candidate keys hit only a
-    // small fraction of them
-    val seed = (0L until 256L).map(i => i -> vec(i)).toDF("vec_id", "embedding")
-    assert(StreamingOps.shardedGateSeed(seed, idx, w, cellRowsPerFile = 64L))
-    val nCellFiles = VersionedTable.liveTagged(idx, "gc").size
-    assert(nCellFiles >= 32, s"fixture too coarse: $nCellFiles cell files")
-    val b = Seq(1000L -> vec(777L)).toDF("vec_id", "embedding")
-    assert(StreamingOps.shardedGateBatch(b, idx, w, 0L))
-    val (scanned, live) = StreamingOps.lastGatePrune
-    assert(live == nCellFiles)
-    assert(scanned < live,
-      s"probe scanned all $live cell files — pruning never engaged")
-  }
-
-  test("coalesced gate (every=2): pooled admission, stamped pend/gate/clear steps") {
-    import graft.sources.VersionedTable
-    import graft.similarity.Similarity
-    import graft.streaming.StreamingOps
-    val base = java.nio.file.Files.createTempDirectory("graft_gco").toString
-    val srcDir = s"$base/src"; val cpDir = s"$base/cp"; val idx = s"$base/idx"
-    val pend = s"${idx}_pending"
-    def vec(seed: Long): Array[Double] =
-      Array.tabulate(Similarity.Dim)(i =>
-        (graft.functions.Hashing.h48String(s"gco-$seed-$i") % 1000)
-          .toDouble / 500.0 - 1.0)
-    def cosv(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { d += a(i)*b(i); na += a(i)*a(i); nb += b(i)*b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    // fixture guard (deterministic): greedily pick 4 seeds that are
-    // genuinely pairwise unrelated under the gate's CosineThreshold —
-    // hash vectors occasionally land near-dup by chance (seed pair 2/4
-    // here sits at 0.42 > 0.4, which is a REAL near-dup to the gate)
-    val th = graft.dedup.Dedup.CosineThreshold
-    val seeds = Iterator.iterate(1L)(_ + 1)
-      .scanLeft(Vector.empty[Long]) { (acc, c) =>
-        if (acc.size >= 4) acc
-        else if (acc.forall(a => math.abs(cosv(vec(a), vec(c))) < th - 0.05))
-          acc :+ c
-        else acc
-      }.dropWhile(_.size < 4).next()
-    val Seq(sA, sB, sC, sD) = seeds.toSeq
-    val w = Similarity.lshPlanesFor(8)
-    val sch = spark.createDataFrame(Seq((1L, vec(sA))))
-      .toDF("vec_id", "embedding").schema
-    def write(rows: Seq[(Long, Array[Double])]): Unit =
-      rows.toDF("vec_id", "embedding").write.mode("append").parquet(srcDir)
-    def gv(): Seq[Long] =
-      if (VersionedTable.liveTagged(idx, "gv").isEmpty) Nil
-      else VersionedTable.readTagged(spark, idx, "gv")
-        .select("vec_id").as[Long].collect().sorted.toSeq
-    write(Seq(1L -> vec(sA), 2L -> vec(sB)))
-    val q = StreamingOps.shardedGateStream(
-      spark.readStream.schema(sch).parquet(srcDir), idx, w,
-      Some(cpDir), every = 2)
-    try {
-      q.processAllAvailable()
-      // batch 0 pools — nothing gated yet, rows wait in the buffer
-      assert(gv() == Nil)
-      assert(VersionedTable.read(spark, pend).count() == 2L)
-      // batch 1 (vec 3 = copy of pooled vec 1) hits the boundary: the
-      // gate runs over the POOLED window {1,2,3}, min-id admission
-      // drops 3, and the consumed buffer truncates
-      write(Seq(3L -> vec(sA)))
-      q.processAllAvailable()
-      assert(gv() == Seq(1L, 2L))
-      assert(VersionedTable.liveFiles(pend).isEmpty)
-      // batch 2 pools again
-      write(Seq(4L -> vec(sC)))
-      q.processAllAvailable()
-      assert(gv() == Seq(1L, 2L))
-      assert(VersionedTable.read(spark, pend).count() == 1L)
-      // batch 3: pooled window {4, 5=copy of 4, 6} minus cross-index
-      // (nothing near stored) → admit {4, 6}
-      write(Seq(5L -> vec(sC), 6L -> vec(sD)))
-      q.processAllAvailable()
-      assert(gv() == Seq(1L, 2L, 4L, 6L))
-    } finally q.stop()
-    // every step left its replay stamp
-    for (i <- 0 to 3) assert(VersionedTable.hasOp(pend, s"pend-$i"))
-    for (i <- Seq(1, 3)) {
-      assert(VersionedTable.hasOp(idx, s"gate-$i"))
-      assert(VersionedTable.hasOp(pend, s"clear-$i"))
-    }
-    // replaying the boundary batch through the gate is a no-op
-    assert(!StreamingOps.shardedGateBatch(
-      Seq(9L -> vec(99L)).toDF("vec_id", "embedding"), idx, w, 3L))
+    val bucketized = StreamingOps.attributionBatch(spark, sf)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(bucketized == direct && bucketized.nonEmpty)
   }
 
   test("file sink + checkpoint: restart resumes exactly-once, no replays") {
@@ -773,7 +232,7 @@ class StreamingSpec extends SparkSpec {
     val cMem = MemoryStream[(Long, Long, Timestamp)]
     val views = vMem.toDF().toDF("v_user", "view_id", "vts")
     val clicks = cMem.toDF().toDF("c_user", "click_id", "cts")
-    val q = StreamingOps.attributionStream(views, clicks).writeStream
+    val q = attributionStream(views, clicks).writeStream
       .format("memory").queryName("attrib").outputMode("append").start()
     try {
       // user 1: view at 2h, clicks at 2h30 (in window) and 3h30 (outside
@@ -786,6 +245,25 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(got == Set((1L, 10L, 20L, 30L * 60000000L)))
     } finally q.stop()
+    // over the events table the streamed pairs are the bucketized batch
+    // join's; both sides are queued before start, so the first micro-batch
+    // holds every row and no watermark can drop one
+    val (v, c) = viewsClicks(sf)
+    val vSf = MemoryStream[(Long, Long, Timestamp)]
+    val cSf = MemoryStream[(Long, Long, Timestamp)]
+    vSf.addData(v: _*); cSf.addData(c: _*)
+    val qSf = attributionStream(vSf.toDF().toDF("v_user", "view_id", "vts"),
+        cSf.toDF().toDF("c_user", "click_id", "cts"))
+      .writeStream.format("memory").queryName("attrib_sf")
+      .outputMode("append").start()
+    try {
+      qSf.processAllAvailable()
+      val streamed = spark.table("attrib_sf")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val batch = StreamingOps.attributionBatch(spark, sf)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(streamed == batch && streamed.nonEmpty)
+    } finally qSf.stop()
   }
 
   test("left-outer stream-stream attribution emits unmatched views after watermark") {
@@ -794,7 +272,7 @@ class StreamingSpec extends SparkSpec {
     val cMem = MemoryStream[(Long, Long, Timestamp)]
     val views = vMem.toDF().toDF("v_user", "view_id", "vts")
     val clicks = cMem.toDF().toDF("c_user", "click_id", "cts")
-    val q = StreamingOps.attributionStreamOuter(views, clicks).writeStream
+    val q = attributionStream(views, clicks, "left_outer").writeStream
       .format("memory").queryName("attrib_outer").outputMode("append").start()
     try {
       // user 1 converts (click in window); user 3's view has NO click
@@ -813,91 +291,36 @@ class StreamingSpec extends SparkSpec {
       assert(got.contains((3L, 11L, None, None)),
         s"unmatched view did not flush: $got")
     } finally q.stop()
-  }
-
-  test("batch attribution matches the streaming join's range semantics") {
-    // the bucketized batch plan and a direct range join must agree —
-    // pins that bucket-edge pairs (view and click in adjacent cells) and
-    // exact-boundary deltas (dt == window) are neither lost nor doubled
-    val sf = "/root/testdata/sf0.001"
-    val direct = {
-      val e = graft.model.Tables.load(spark, sf, "events")
-      val v = e.where(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          expr("ts_ns div 1000").as("vts"))
-      val c = e.where(col("event_type") === "click")
-        .select(col("user_id").as("cu"), col("event_id").as("click_id"),
-          expr("ts_ns div 1000").as("cts"))
-      v.join(c, col("user_id") === col("cu") &&
-          col("cts") > col("vts") &&
-          col("cts") - col("vts") <= StreamingOps.AttribWindowUs)
-        .select(col("user_id"), col("view_id"), col("click_id"),
-          (col("cts") - col("vts")).as("dt_us"))
-        .as[(Long, Long, Long, Long)].collect().toSet
-    }
-    val bucketized = StreamingOps.attributionBatch(spark, sf)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(bucketized == direct && bucketized.nonEmpty)
-  }
-
-  test("foreachBatch incremental ingest dedups against the whole ingested corpus") {
-    implicit val sqlCtx = spark.sqlContext
-    val sink = java.nio.file.Files.createTempDirectory("ingest").toString + "/corpus"
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = StreamingOps.incrementalIngest(docs, sink)
+    // over the events table: the flushed null-click rows are exactly the
+    // views first-touch attribution marks unconverted, the matched rows
+    // exactly the all-pairs batch join. A sentinel user (-1) a day past
+    // the data advances both watermarks; its own rows are left out.
+    val (v, c) = viewsClicks(sf)
+    val far = new Timestamp((v ++ c).map(_._3.getTime).max + 86400000L)
+    val vSf = MemoryStream[(Long, Long, Timestamp)]
+    val cSf = MemoryStream[(Long, Long, Timestamp)]
+    vSf.addData(v: _*); cSf.addData(c: _*)
+    val qSf = attributionStream(vSf.toDF().toDF("v_user", "view_id", "vts"),
+        cSf.toDF().toDF("c_user", "click_id", "cts"), "left_outer")
+      .writeStream.format("memory").queryName("attrib_outer_sf")
+      .outputMode("append").start()
     try {
-      // batch 1: two docs, one internal duplicate pair (min id wins)
-      mem.addData((1L, "alpha text"), (2L, "beta text"), (5L, "alpha text"))
-      q.processAllAvailable()
-      // batch 2: one dup of an already-ingested doc + one genuinely new —
-      // the dedup horizon is the whole corpus, NOT a watermark window
-      mem.addData((7L, "beta text"), (8L, "gamma text"))
-      q.processAllAvailable()
-      val got = spark.read.parquet(sink)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(got == Seq(1L, 2L, 8L), s"ingested $got")
-    } finally q.stop()
-  }
-
-  test("gap-aware hourly stream emits explicit zeros via event-time timers") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String)]
-    val events = mem.toDF().toDF("ts", "event_type")
-    val q = StreamingOps.gapAwareHourly(events).writeStream
-      .format("memory").queryName("gapfill").outputMode("append").start()
-    try {
-      // type a: activity in hour 0 (×2) and hour 2 — hour 1 is silent.
-      // type b's far-future event drags the watermark past hour 2's close
-      mem.addData((ts(1), "a"), (ts(5), "a"), (ts(125), "a"), (ts(260), "b"))
-      q.processAllAvailable()
-      // batch 2 (any data) lets a's re-armed timer fire against the
-      // advanced watermark — a received no new rows, the timer flushes it
-      mem.addData((ts(600), "b"))
-      q.processAllAvailable()
-      val a = spark.table("gapfill")
-        .as[StreamingOps.HourBucket].collect()
-        .filter(_.event_type == "a").sortBy(_.hour_sec)
-        .map(b => (b.hour_sec, b.n)).toList
-      assert(a == List((0L, 2L), (3600L, 0L), (7200L, 1L)),
-        s"expected hours 0,1(zero),2 for type a, got $a")
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState running totals accumulate per user") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[UserEvent]
-    val q = StreamingOps.runningTotals(mem.toDS()).writeStream
-      .format("memory").queryName("running").outputMode("update").start()
-    try {
-      mem.addData(UserEvent(1L, 100L, 2.0), UserEvent(1L, 200L, 3.0))
-      q.processAllAvailable()
-      mem.addData(UserEvent(1L, 300L, 5.0))
-      q.processAllAvailable()
-      val last = spark.table("running").as[UserRunning].collect()
-        .filter(_.user_id == 1L).maxBy(_.n_events)
-      assert(last == UserRunning(1L, 3L, 10.0))
-    } finally q.stop()
+      qSf.processAllAvailable()
+      vSf.addData((-1L, -1L, far)); cSf.addData((-1L, -2L, far))
+      qSf.processAllAvailable()
+      val got = spark.table("attrib_outer_sf").where(col("user_id") =!= -1L)
+        .as[(Long, Long, Option[Long], Option[Long])].collect()
+      val unmatched = got.collect { case (u, vid, None, None) => (u, vid) }.toSet
+      val matched = got.collect {
+        case (u, vid, Some(cid), Some(dt)) => (u, vid, cid, dt)
+      }.toSet
+      val unconverted = StreamingOps.attributionFirstTouch(spark, sf)
+        .where(!col("converted")).select("user_id", "view_id")
+        .as[(Long, Long)].collect().toSet
+      assert(unmatched == unconverted && unmatched.nonEmpty)
+      assert(matched == StreamingOps.attributionBatch(spark, sf)
+        .as[(Long, Long, Long, Long)].collect().toSet)
+    } finally qSf.stop()
   }
 
   test("event paths: trigrams respect session boundaries and time order") {

@@ -93,84 +93,4 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.currentVersion(dir) == 1)
     assert(rows(dir) == Set(1L -> "a"))
   }
-
-  test("hasOp survives log checkpoints folding the stamped entry away") {
-    // round-14 ADVICE regression: commit() auto-checkpoints every 10th
-    // version and the fold REPLACES subsumed entries with one synthetic
-    // entry, so a raw `.op` scan over entries() goes blind to every
-    // stamp at/before the boundary. hasOp must keep answering true
-    // because the checkpoint carries subsumed labels forward.
-    val dir = freshDir()
-    for (i <- 0 to 12)
-      VersionedTable.append(Seq((i.toLong, s"r$i")).toDF("id", "v"), dir,
-        op = s"txn-$i")
-    // the auto-checkpoint at v10 really fired and really folded: the
-    // raw `.op` scan (the pre-fix lookup) no longer sees txn-3
-    val es = VersionedTable.entries(dir)
-    assert(es.exists(_.op == "checkpoint"))
-    assert(!es.exists(_.op == "txn-3"),
-      "fixture failed to reproduce the fold — checkpoint did not fire")
-    // the checkpoint-proof lookup sees every stamp, folded or live
-    for (i <- 0 to 12) assert(VersionedTable.hasOp(dir, s"txn-$i"), s"txn-$i")
-    assert(!VersionedTable.hasOp(dir, "txn-13"))
-    // a SECOND checkpoint must carry the first one's labels forward too
-    for (i <- 13 to 22)
-      VersionedTable.append(Seq((i.toLong, s"r$i")).toDF("id", "v"), dir,
-        op = s"txn-$i")
-    assert(VersionedTable.entries(dir).count(_.op == "checkpoint") == 1)
-    for (i <- 0 to 22) assert(VersionedTable.hasOp(dir, s"txn-$i"), s"txn-$i")
-  }
-
-  test("appendTagged: one atomic commit, per-group reads, range-chunked point pruning") {
-    val dir = freshDir()
-    // two logical tables in ONE version: narrow keyed rows chunked by k,
-    // and a payload group chunked by id
-    val keyed = (0L until 1000L).map(k => (k, k % 7)).toDF("k", "owner")
-    val payload = (0L until 100L).map(i => (i, s"p$i")).toDF("id", "p")
-    VersionedTable.appendTagged(Seq(
-      VersionedTable.TaggedPart("idx", keyed, Some("k"), 8),
-      VersionedTable.TaggedPart("dat", payload, Some("id"), 2)),
-      dir, op = "genesis")
-    assert(VersionedTable.currentVersion(dir) == 0)
-    assert(VersionedTable.readTagged(spark, dir, "idx").count() == 1000L)
-    assert(VersionedTable.readTagged(spark, dir, "dat").count() == 100L)
-    assert(VersionedTable.liveTagged(dir, "idx").size == 8)
-    assert(VersionedTable.liveTagged(dir, "dat").size == 2)
-    // point-set prune: candidates {3, 901} live in exactly 2 of the 8
-    // range-disjoint chunk files
-    val cands = Array(3L, 901L)
-    val pr = VersionedTable.readTaggedPruned(spark, dir, "idx",
-      (mn, mx) => cands.exists(c => c >= mn && c <= mx))
-    assert(pr.nLive == 8 && pr.nScanned == 2,
-      s"expected 2/8 files scanned, got ${pr.nScanned}/${pr.nLive}")
-    // the pruned frame still holds the candidates (prune is file-level;
-    // the caller applies the residual predicate)
-    val got = pr.df.where(col("k").isin(cands: _*))
-      .select("k").as[Long].collect().sorted.toSeq
-    assert(got == Seq(3L, 901L))
-    // a second tagged commit appends to both groups atomically
-    VersionedTable.appendTagged(Seq(
-      VersionedTable.TaggedPart("idx",
-        Seq((5000L, 1L)).toDF("k", "owner"), Some("k"), 1),
-      VersionedTable.TaggedPart("dat",
-        Seq((200L, "p200")).toDF("id", "p"), Some("id"), 1)),
-      dir, op = "delta")
-    assert(VersionedTable.readTagged(spark, dir, "idx").count() == 1001L)
-    assert(VersionedTable.readTagged(spark, dir, "dat").count() == 101L)
-    // time travel per group
-    assert(VersionedTable.readTagged(spark, dir, "idx", Some(0))
-      .count() == 1000L)
-  }
-
-  test("truncate empties the table; appends resume; stamp is replayable") {
-    val dir = freshDir()
-    VersionedTable.append(Seq((1L, "a")).toDF("id", "v"), dir, op = "b-0")
-    VersionedTable.truncate(dir, op = "clear-0")
-    assert(VersionedTable.liveFiles(dir).isEmpty)
-    assert(VersionedTable.hasOp(dir, "clear-0"))
-    VersionedTable.append(Seq((2L, "b")).toDF("id", "v"), dir, op = "b-1")
-    assert(rows(dir) == Set(2L -> "b"))
-    // history intact: the pre-truncate version still time-travels
-    assert(rows(dir, Some(0)) == Set(1L -> "a"))
-  }
 }
